@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Host-throughput probe (VERDICT r15 #6): seconds to sha256-chain a
     * fixed 512 MiB of deterministic bytes, min of two passes. Fixed work
@@ -122,29 +121,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", Scratch.path("warehouse"))
-      // Round-20 (guide §1.2 step 3, applied AFTER the algorithmic work):
-      // Spark's generated-class cache holds 100 entries by default, and a
-      // single loop query here compiles ~120 distinct whole-stage units
-      // (10 BPE merge rounds x ~12 classes), so every loop query evicted
-      // its own entries and re-Janino-compiled ~90 classes on the SECOND
-      // rep of the SAME plan (measured via CodegenMetrics; task threads
-      // sat in UnitCompiler under the compile lock). Sized to the
-      // registry's plan diversity — not a scale- or core-count-dependent
-      // value: any deployment running this many distinct plans per JVM
-      // pays the same recompilation tax per executor. Env-overridable for
-      // experiments; ~4096 generated classes is tens of MB of bytecode.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec's "No Partition Defined" warning fires per-task on the
     // four documented-bounded global windows (q68/q103/q120/q128) and

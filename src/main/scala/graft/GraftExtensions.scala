@@ -9,7 +9,7 @@ import graft.expressions._
   * functions, so `spark.sql` users get the same surface as the DataFrame
   * API (`SELECT minhash_signature(word_shingles(text, 3), 128) ...`).
   *
-  * Wire-up:
+  * Wire-up ([[Session.build]] does the first):
   *   SparkSession.builder()
   *     .withExtensions(new GraftExtensions)            // in-process
   *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * resolve, replicated rows join only within their own block), laid out
   * exactly like a driver sf dir — `Bench` runs against it unchanged via
   * `SPARK_GRAFT_SF_DIR`. This is the registry-wide growth measurement
-  * VERDICT r11 (next #6) asks for: VecStress/TextStress already stress
-  * two pillars at 10×; this covers all of them at once.
+  * VERDICT r11 (next #6) asks for: the 10× text and embedding stress runs
+  * (SCALING.md "Measured stress") covered two pillars; this covers all of
+  * them at once.
   *
   * Key shifts use one constant stride (block i adds `i · Shift` = i·10⁹
   * to every BIGINT key column — see [[ScaleUp.Shift]]'s sizing note), so
@@ -160,14 +161,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("WARN")
     val out = args.lift(1) match {
       case Some("jitter") => buildJittered(spark, src)

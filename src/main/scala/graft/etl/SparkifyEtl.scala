@@ -186,11 +186,18 @@ object SparkifyEtl {
     writeArtists(artistsTable(songData), outputDir)
   }
 
+  /** Releases both cached relations once written: a relation left cached
+    * in a long-lived session would swallow every later plan over the same
+    * files. The song relation is released through the equal plan it
+    * re-reads for the join (the cache manager matches by plan). */
   def processLogData(spark: SparkSession, inputDir: String, outputDir: String): Unit = {
     val events = songplayEvents(readLogData(spark, inputDir)).cache()
+    val songData = readSongData(spark, inputDir)
     writeUsers(usersTable(events), outputDir)
     writeTime(timeTable(events), outputDir)
-    writeSongplays(songplaysTable(events, readSongData(spark, inputDir)), outputDir)
+    writeSongplays(songplaysTable(events, songData), outputDir)
+    events.unpersist()
+    songData.unpersist()
   }
 
   def runAll(spark: SparkSession, inputDir: String, outputDir: String): Unit = {

@@ -455,7 +455,7 @@ object AdvancedQueries {
     * a broadcast 1-row relation. Round 16 replaced the previous
     * one-scan multi-distinct formulation (Spark's Expand plan: every row
     * quadrupled between scan and partial aggregate): measured 4× faster
-    * here (graft.ProfileStress: 1.20 s → 0.30 s at sf0.1 min-of-6) — the
+    * here (1.20 s → 0.30 s at sf0.1 min-of-6, SCALING.md round 16) — the
     * registry's last unexplained mover, which was never the host after
     * all. The 100 TB reading: columnar pruning makes each re-scan read
     * ONE column (~total bytes ≈ 2× the single-scan plan), both plans

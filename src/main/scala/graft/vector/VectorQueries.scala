@@ -707,8 +707,8 @@ object VectorQueries {
     * (2·D)² ≥ n that widening already saturates the corpus (every node
     * can reach every other through the NoN join — measured recall@5
     * 1.00 at sf0.01) and a second round buys nothing; below saturation
-    * the second round lifts recall@5 0.70 → 0.85 at sf0.1 (GraphStress
-    * r16) for one more bounded two-shuffle stage. Capped at 2: the
+    * the second round lifts recall@5 0.70 → 0.85 at sf0.1 (SCALING.md,
+    * "NN-Descent widening") for one more bounded two-shuffle stage. Capped at 2: the
     * measured envelope stops there, and each round's cost is a full
     * (2·D)²-candidate re-score — rounds must stay O(1), not chase
     * convergence (Dong '11 runs to convergence; the relational
@@ -782,8 +782,9 @@ object VectorQueries {
     * neighbors' neighborhoods). Measured recall@5 at D=16 vs the
     * LSH-only build: 0.48 → 1.00 at sf0.01 (saturated, 1 round) and
     * 0.38 → 0.85 at sf0.1 (n=2000, unsaturated — the second round the
-    * count now buys; 0.70 at 1 round — GraphStress carries the full
-    * envelope, VectorLawsSpec pins the floor at BOTH scales). The
+    * count now buys; 0.70 at 1 round — SCALING.md's "NN-Descent
+    * widening" table carries the full envelope, VectorLawsSpec pins the
+    * floor at BOTH scales). The
     * derived round figure rides the output as a hash-checked
     * `refine_rounds` column (the q230 pattern), and the oracle's
     * generated round blocks are gated on ITS count-derived figure — an
@@ -936,8 +937,8 @@ object VectorQueries {
   /** FAISS-standard 8-bit PQ tier (round 19, VERDICT r18 next #1): 256
     * codes per subspace, SIXTEEN 4-dim subspaces over the NORMALIZED
     * corpus — 16 code bytes per vector, 16× compression vs float32.
-    * Every piece of that geometry is measurement-forced (PqGeomStress on
-    * the 20k organic replica, SCALING.md round 19):
+    * Every piece of that geometry is measurement-forced (20k organic
+    * replica, SCALING.md "Round 19: the PQ hole diagnosed"):
     *
     *  - The verdict's hypothesis — 256 codes on the existing 4×16-dim
     *    layout — measured recall@5 ≈ 0.02, barely above the 3-bit tier:

@@ -4,17 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-    .config("spark.sql.codegen.cache.maxEntries", "4096") // see Bench.scala (round 20)
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  /** Pinned to 4 cores whatever `SPARK_GRAFT_CPUS` says: plan digests and
+    * partition-count assertions depend on the shuffle width. */
+  lazy val spark: SparkSession = Session.build(cpus = 4)
 }
 
 class CoreQueriesSpec extends AnyFunSuite {

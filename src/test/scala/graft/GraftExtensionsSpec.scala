@@ -1,18 +1,47 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives every SQL function GraftExtensions registers through spark.sql
-  * on an isolated session (newSession shares the SparkContext but the
-  * extension must be applied at builder time, so a dedicated session is
-  * built against the running context).
+  * on the shared test session, and pins how that session is built: with
+  * Session's fixed settings, by the one builder call under src/.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  // The shared test session is built .withExtensions(new GraftExtensions)
-  // — same wiring as the Verify/Bench/Explain mains.
+  // The shared test session comes from Session.build — the same builder,
+  // and so the same extension wiring, as the Verify/Bench/PlanDump mains.
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  test("the shared test session carries Session's fixed settings") {
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    // GraftExtensions is wired in: its functions resolve through spark.sql
+    assert(spark.sql("SELECT char_ngrams('abcd', 3) AS g").head().getSeq[String](0) == Seq("abc", "bcd"))
+  }
+
+  test("Session.scala holds the only session-builder call under src/") {
+    // comments are dropped first, so scaladoc may still show the idiom
+    def builderCalls(source: String): Boolean =
+      """SparkSession\s*\.\s*builder\b""".r.findFirstIn(
+        source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")).isDefined
+    val call = "SparkSession" + ".builder()"
+    assert(builderCalls(s"val s = $call.getOrCreate()"))
+    assert(!builderCalls(s"/** use $call */ val x = 1 // or $call"))
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from ${sys.props("user.dir")}"))
+    val offenders = roots.flatMap { r =>
+      val files = Files.walk(r)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally files.close()
+    }.filter(f => builderCalls(Files.readString(f))).map(_.toString)
+    assert(offenders == Seq("src/main/scala/graft/Session.scala"))
+  }
 
   test("kernels are callable from SQL") {
     val spark2 = spark

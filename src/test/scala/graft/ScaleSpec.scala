@@ -23,12 +23,8 @@ class ScaleSpec extends AnyFunSuite {
       // a fresh JVM's in-memory catalog forgets the tables but the
       // warehouse files survive — clear them or saveAsTable refuses
       Seq("b_orders", "b_lineitem").foreach { t =>
-        val dir = new java.io.File(s"target/spark-warehouse/$t")
-        if (dir.exists()) {
-          java.nio.file.Files.walk(dir.toPath)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => p.toFile.delete())
-        }
+        val p = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), t)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
       Tables.orders(spark, sf)
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable("b_orders")

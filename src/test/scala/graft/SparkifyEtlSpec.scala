@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{SparkifyEtl, SparkifyQueries}
 
@@ -73,6 +74,15 @@ class SparkifyEtlSpec extends AnyFunSuite {
       assert(r.getAs[Long]("d") == r.getAs[Long]("n"))
       assert(r.getAs[Int]("mx").toLong == r.getAs[Long]("n"))
     }
+  }
+
+  test("runAll releases the song and event relations it cached") {
+    assert(new java.io.File(s"$outDir/songplays").isDirectory)
+    // storageLevel is the cache manager's lookupCachedData for this plan
+    val songData = SparkifyEtl.readSongData(spark, fixture)
+    val events = SparkifyEtl.songplayEvents(SparkifyEtl.readLogData(spark, fixture))
+    assert(songData.storageLevel == StorageLevel.NONE)
+    assert(events.storageLevel == StorageLevel.NONE)
   }
 
   test("F3: the string-route to_timestamp path equals the direct timestamp_seconds path") {

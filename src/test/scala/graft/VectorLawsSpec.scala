@@ -185,8 +185,8 @@ class VectorLawsSpec extends AnyFunSuite {
   test("round-19 serve-tier recall at 20k organic: PQ8 rerank >= 0.3 where the 3-bit tier measured chance; tuned nprobe >= 0.6; refined graph floor") {
     import vector.VectorQueries._
     // VERDICT r18 next #1/#2/#5 on one instrument (ScaleUp's organic
-    // replica; full sweep in PqGeomStress + ServeRecallStress, measured
-    // figures in SCALING.md round 19):
+    // replica; the full sweep and its measured figures are in SCALING.md's
+    // round-19 PQ and graph-tier sections):
     //  - q229 with the NORMALIZED 16x4-dim PQ8 recall stage measured
     //    0.42 (vs 0.04 for the r18 3-bit stage) — ~95% of the IVF-stage
     //    ceiling (0.44), i.e. the codec now loses almost nothing the
@@ -446,7 +446,7 @@ class VectorLawsSpec extends AnyFunSuite {
     }
     // The recall-floor half of the co-tuning law (VERDICT r15 #1): deeper
     // bands alone collapse recall (measured: b=9/L=4 halves it, b=12/L=4
-    // zeroes it — SCALING.md's LshStress table); the L = b−2 pairing must
+    // zeroes it — SCALING.md's round-15 LSH lever table); the L = b−2 pairing must
     // HOLD a floor where the depth changes, i.e. at sf0.1's (8, 6), not
     // only at sf0.01's q134-equivalent (6, 4). Measured: 0.194 at (6, 4)
     // — q134's 0.216 ballpark, the independent-planes sanity anchor —
@@ -776,7 +776,8 @@ class VectorLawsSpec extends AnyFunSuite {
     val recall = served.keysIterator
       .map(k => (served(k) & exact(k)).size / 5.0).sum / served.size
     info(f"recall@5 at D=$d, n=$n, rounds=$rounds: $recall%.3f")
-    // measured 0.85 at 2 rounds (0.70 at 1 — GraphStress r16); the floor
+    // measured 0.85 at 2 rounds (0.70 at 1 — SCALING.md "NN-Descent
+    // widening"); the floor
     // the judge asked to pin (VERDICT r16 #2), with regen headroom
     assert(recall >= 0.80, f"unsaturated refined recall floor: $recall%.3f")
     val maxDeg = edges.groupBy($"src").count().agg(max($"count")).head.getLong(0)
@@ -812,7 +813,7 @@ class VectorLawsSpec extends AnyFunSuite {
     // symmetrized relation, and recall@5 rises with D (measured 0.480 /
     // 0.720 / 0.720 here; 0.360/0.480/0.640 at sf0.01 — floors pinned
     // under the measurements to absorb a data regen). Cost envelope
-    // with wall times lives in SCALING.md (graft.GraphStress).
+    // with wall times lives in SCALING.md ("Production-degree envelope").
     // Per-round serve work is probes · B · maxOutDeg ≤ probes · B · 2D —
     // the measured cap is the load-bearing fact of the frontier bound.
     import org.apache.spark.sql.functions._
@@ -995,7 +996,7 @@ class VectorLawsSpec extends AnyFunSuite {
 
   test("beam seed subplan: probe bands broadcast, per-probe cut is a group-limit, no cartesian product") {
     // the seed plan executes EAGERLY inside beamServe's first
-    // localCheckpoint, so neither PlanDigestSpec's golden nor Explain's
+    // localCheckpoint, so neither PlanDigestSpec's golden nor PlanDump's
     // final-plan dump ever sees it — this is its only plan-shape gate.
     import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
