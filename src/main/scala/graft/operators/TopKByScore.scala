@@ -24,30 +24,43 @@ case class TopKByScore(k: Int)
     extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
   require(k > 0)
 
-  // largest score first; ties broken by smaller id — a total order, so the
-  // k-subset (and its order) is unique. java.lang.Double.compare treats NaN
-  // as larger than +Inf, matching Spark's and DuckDB's `ORDER BY score DESC`
-  // (NaN sorts first) — sortBy(-score) would have sorted NaN LAST, silently
-  // diverging from the oracle if a zero-norm vector produced 0/0 (ADVICE r2).
-  private val ord: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
+  override def zero: Seq[(Double, Long)] = Vector.empty
+  override def reduce(b: Seq[(Double, Long)], a: (Double, Long)): Seq[(Double, Long)] =
+    TopKByScore.insert(b, a, k)(identity)
+  override def merge(b1: Seq[(Double, Long)], b2: Seq[(Double, Long)]): Seq[(Double, Long)] =
+    TopKByScore.trim(b1 ++ b2, k)(identity)
+  override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
+
+  override def bufferEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
+  override def outputEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
+}
+
+/** The bounded-buffer steps, shared with [[MmrSelect]]'s candidate pool so
+  * the tie and NaN order is defined once.
+  */
+object TopKByScore {
+
+  /** Largest score first; ties broken by smaller id — a total order, so the
+    * k-subset (and its order) is unique. java.lang.Double.compare treats NaN
+    * as larger than +Inf, matching Spark's and DuckDB's `ORDER BY score DESC`
+    * (NaN sorts first) — sortBy(-score) would have sorted NaN LAST, silently
+    * diverging from the oracle on a NaN score (ADVICE r2).
+    */
+  val order: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
     def compare(a: (Double, Long), b: (Double, Long)): Int = {
       val c = java.lang.Double.compare(b._1, a._1)
       if (c != 0) c else java.lang.Long.compare(a._2, b._2)
     }
   }
 
-  private def trim(xs: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    xs.sorted(ord).take(k)
+  /** The k first of `xs` under [[order]] of `key`. */
+  private[operators] def trim[T](xs: Seq[T], k: Int)(key: T => (Double, Long)): Seq[T] =
+    xs.sortBy(key)(order).take(k)
 
-  override def zero: Seq[(Double, Long)] = Vector.empty
-  override def reduce(b: Seq[(Double, Long)], a: (Double, Long)): Seq[(Double, Long)] =
-    // primitive `>` is false when either side is NaN, so NaN candidates
-    // always fall through to trim, where ord places them correctly.
-    if (b.size == k && b.last._1 > a._1) b else trim(b :+ a)
-  override def merge(b1: Seq[(Double, Long)], b2: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    trim(b1 ++ b2)
-  override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = r
-
-  override def bufferEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
+  /** `buf` (already trimmed) with `x` added, trimmed back to k. Primitive
+    * `>` is false when either side is NaN, so a NaN score always falls
+    * through to trim, where [[order]] places it.
+    */
+  private[operators] def insert[T](buf: Seq[T], x: T, k: Int)(key: T => (Double, Long)): Seq[T] =
+    if (buf.size == k && key(buf.last)._1 > key(x)._1) buf else trim(buf :+ x, k)(key)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
 import graft.Tables
 import graft.expressions.NativeKernels.dotF
 import graft.functions.VectorFunctions.cosinePrenormed
-import graft.operators.TopKByScore
+import graft.operators.{MmrSelect, TopKByScore}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
   * the BASELINE north-star pillar. Three tiers, smallest to largest honest
@@ -213,65 +213,30 @@ object VectorQueries {
     * `λ·rel − (1−λ)·max_sim_to_already_picked` — the serving-side
     * diversification that stops a near-dup cluster from monopolizing a
     * result page (retrieval's answer to the q50/q189 dedup families).
-    * Shape: pool generation is q18's bounded-probe broadcast sweep; the
-    * greedy loop is a FIXED [[MmrPicks]]−1 driver iterations over the
-    * pooled candidates only (≤ MaxProbes·MmrPoolSize rows — corpus size
-    * never enters the loop), each one an equi-join on probe_id + a
-    * windowed argmax, with `localCheckpoint` truncating lineage per step
-    * (q69's iteration discipline). Every score is dotF-derived double
-    * arithmetic in a pinned order, so the DuckDB oracle unrolls the same
-    * greedy steps and must land on the identical picks — tie-broken by
-    * vec_id, deterministic by construction.
+    * Shape: one sweep — q18's bounded-probe broadcast join — feeding one
+    * per-probe [[MmrSelect]] aggregation. Each map task keeps a partial
+    * top-[[MmrPoolSize]] per probe with the candidates' embeddings and
+    * norms, so the shuffle carries ≤ MmrPoolSize rows per probe per task
+    * whatever the corpus size, and no pool row is joined back to the
+    * corpus; the greedy picks run in the aggregator's `finish`, with no
+    * driver round. Every score is dotF-derived double arithmetic in a
+    * pinned order, so the DuckDB oracle unrolls the same greedy steps and
+    * must land on the identical picks — tie-broken by vec_id,
+    * deterministic by construction.
     */
   def q199MmrDiversified(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = withNorm(Tables.embeddings(s, dir))
     val probes = e.filter(probePredicate($"vec_id"))
       .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"nrm".as("p_nrm"))
-    val topk = udaf(TopKByScore(MmrPoolSize))
-    val pool = e.join(broadcast(probes), $"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id",
+    val mmr = udaf(MmrSelect(MmrPoolSize, MmrPicks, MmrLambda))
+    e.join(broadcast(probes), $"vec_id" =!= $"probe_id")
+      .select($"probe_id", $"vec_id", $"embedding", $"nrm",
         cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("rel"))
-      .groupBy($"probe_id").agg(topk($"rel", $"vec_id").as("nn"))
-      .select($"probe_id", explode($"nn").as("c"))
-      .select($"probe_id", $"c._2".as("vec_id"), $"c._1".as("rel"))
-    // cand and sel stay HASH-PARTITIONED BY probe_id across picks (round
-    // 20 — beamServe's idiom, guide §2.4): localCheckpoint preserves the
-    // physical partitioning and probe_id is a subset of every per-pick
-    // clustering key, so the anti-join, the per-probe redundancy
-    // aggregate, the argmax window, and the pick join-back all run
-    // without their own exchanges.
-    val cand = pool.join(e, "vec_id")
-      .select($"probe_id", $"vec_id", $"rel", $"embedding", $"nrm")
-      .repartition($"probe_id").localCheckpoint()
-    val w = Window.partitionBy($"probe_id").orderBy($"score".desc, $"vec_id")
-    var sel = cand.withColumn("score", $"rel")
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .select($"probe_id", $"vec_id", $"embedding", $"nrm", $"score",
-        lit(1).as("pick"))
-      .localCheckpoint()
-    for (k <- 2 to MmrPicks) {
-      val scored = cand
-        .join(sel.select($"probe_id", $"vec_id"), Seq("probe_id", "vec_id"), "left_anti")
-        .join(sel.select($"probe_id", $"embedding".as("s_emb"), $"nrm".as("s_nrm")),
-          Seq("probe_id"))
-        .select($"probe_id", $"vec_id", $"rel",
-          cosine($"embedding", $"s_emb", $"nrm", $"s_nrm").as("ps"))
-        .groupBy($"probe_id", $"vec_id", $"rel")
-        .agg(max($"ps").as("ms"))
-        .withColumn("score", lit(MmrLambda) * $"rel" - lit(1 - MmrLambda) * $"ms")
-      val pick = scored
-        .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-        .join(cand.select($"probe_id", $"vec_id", $"embedding", $"nrm"),
-          Seq("probe_id", "vec_id"))
-        .select($"probe_id", $"vec_id", $"embedding", $"nrm", $"score",
-          lit(k).as("pick"))
-      // the union breaks the carried partitioning; one repartition per
-      // pick re-establishes it for the next step's joins/window
-      sel = sel.union(pick).repartition($"probe_id").localCheckpoint()
-    }
-    sel.select($"probe_id", $"pick".cast("long").as("pick"), $"vec_id",
-        round($"score", 4).as("score"))
+      .groupBy($"probe_id").agg(mmr($"rel", $"vec_id", $"embedding", $"nrm").as("picks"))
+      .select($"probe_id", posexplode($"picks"))
+      .select($"probe_id", ($"pos" + 1).cast("long").as("pick"),
+        $"col._1".as("vec_id"), round($"col._2", 4).as("score"))
       .orderBy($"probe_id", $"pick")
   }
 

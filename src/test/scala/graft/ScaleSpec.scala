@@ -405,6 +405,9 @@ class ScaleSpec extends AnyFunSuite {
       // broadcast (≤ MaxProbes rows by construction; q221's carries the
       // probe's lang for the inequality filter)
       "q220_rrf_fusion", "q221_hard_negatives",
+      // q199's pool sweep is the same =!= join against the id-capped probe
+      // broadcast, now feeding the MmrSelect aggregation directly
+      "q199_mmr_diversified",
       // q229's recall stage is the PQ8 artifact serve (bounded persisted
       // centroid/codebook broadcast crosses, a <= MaxProbes-row
       // checkpointed probe relation); the rerank joins are plain

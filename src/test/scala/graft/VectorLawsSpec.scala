@@ -58,7 +58,13 @@ class VectorLawsSpec extends AnyFunSuite {
   test("MMR: pick 1 is the pure-relevance argmax (== q18 rank 1); 5 distinct picks per probe") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val mmr = vector.VectorQueries.q199MmrDiversified(spark, sf).collect()
+    val q = vector.VectorQueries.q199MmrDiversified(spark, sf)
+    // a checkpointed greedy round shows up as a LogicalRDD leaf of the plan
+    val rounds = q.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }
+    assert(rounds.isEmpty, s"q199 plan has ${rounds.size} checkpointed leaves")
+    val mmr = q.collect()
     assert(mmr.nonEmpty)
     // step 1 of the greedy has an empty selected set, so its argmax is raw
     // relevance — it MUST agree with the exact kNN's rank-1 neighbor
@@ -68,9 +74,10 @@ class VectorLawsSpec extends AnyFunSuite {
     val pick1 = mmr.filter(_.getLong(1) == 1L).map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(pick1 == top1, s"pick1=$pick1 top1=$top1")
     // exactly MmrPicks distinct results per probe, ranks 1..MmrPicks
+    val picks = vector.VectorQueries.MmrPicks
     mmr.groupBy(_.getLong(0)).foreach { case (p, rows) =>
-      assert(rows.map(_.getLong(1)).sorted.toSeq == (1L to 5L), s"probe $p ranks")
-      assert(rows.map(_.getLong(2)).distinct.length == 5, s"probe $p picks not distinct")
+      assert(rows.map(_.getLong(1)).sorted.toSeq == (1L to picks.toLong), s"probe $p ranks")
+      assert(rows.map(_.getLong(2)).distinct.length == picks, s"probe $p picks not distinct")
     }
   }
 
