@@ -99,10 +99,10 @@ object ScaleUp {
     Scratch.path(s"sfx${Blocks}ne_${Scratch.tag(src)}")
 
   def buildNovelEmbeddings(s: SparkSession, src: String): String =
-    Scratch.buildOnce(novelEmbDir(src)) {
+    Scratch.publishOnce(novelEmbDir(src)) { out =>
       replicateTable(s, src, "embeddings", keyCols("embeddings"), "novel")
         .repartition(32)
-        .write.mode("overwrite").parquet(s"${novelEmbDir(src)}/embeddings.parquet")
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     }
 
   private def outDir(src: String, mode: String): String = mode match {
@@ -112,8 +112,7 @@ object ScaleUp {
   }
 
   private def buildImpl(s: SparkSession, src: String, mode: String): String =
-    Scratch.buildOnce(outDir(src, mode)) {
-      val out = outDir(src, mode)
+    Scratch.publishOnce(outDir(src, mode)) { out =>
       copyOnly.foreach { t =>
         s.read.parquet(s"$src/$t.parquet")
           .write.mode("overwrite").parquet(s"$out/$t.parquet")

@@ -25,25 +25,6 @@ object Scratch {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
 
-  /** The build-once-per-process marker idiom shared by every
-    * persisted-artifact query (ANN indexes q148/q151, dedup indexes
-    * q67/q175): run `build` only if `root/marker` is absent, then create
-    * the marker. The single-writer contract lives here, once: roots are
-    * pid-scoped so concurrent JVMs never contend, and a fresh process
-    * always rebuilds. The marker is created strictly AFTER `build`
-    * completes — a crash mid-build leaves no marker, and the rerun's
-    * `mode("overwrite")` writes replace any partial files.
-    */
-  def buildOnce(root: String, marker: String = "_built")(build: => Unit): String = {
-    val m = new java.io.File(s"$root/$marker")
-    if (!m.exists()) {
-      build
-      m.getParentFile.mkdirs()
-      m.createNewFile()
-    }
-    root
-  }
-
   /** Cheap content fingerprint of an input table path (a parquet file or
     * a directory of part files): md5 over the sorted (relative path,
     * length, mtime) triples of every LEAF file — filesystem metadata
@@ -150,13 +131,94 @@ object Scratch {
       case _: java.nio.file.FileAlreadyExistsException | _: java.nio.file.FileSystemException
           if new java.io.File(s"$root/$marker").exists() =>
         // lost the publish race — the winner's artifact is the one served
-        import java.nio.file.{Files, Path}
-        import scala.jdk.CollectionConverters._
-        val stream = Files.walk(from)
-        try stream.iterator().asScala.toSeq.reverseIterator
-          .foreach((p: Path) => Files.deleteIfExists(p))
-        finally stream.close()
+        deleteRecursively(from.toFile)
     }
     root
+  }
+
+  // --- numbered versions: the one commit protocol ------------------------
+  //
+  // A versioned table (q135's lake, every graft-fwb directory) advances by
+  // one integer per commit. Two writers committing concurrently must not
+  // lose either's update — the protocol Delta/Iceberg package, built here
+  // from the same primitive they use: an atomic publish of version N that
+  // FAILS if N already exists.
+  //
+  //  1. read the current version v (the snapshot the writer bases on)
+  //  2. prepare the new snapshot's FULL content (data files are immutable
+  //     and already written — only the version file is contended)
+  //  3. CAS-publish as v+1: write the body to a temp file, then hard-link
+  //     it to the version's name — link(2) atomically fails with EEXIST if
+  //     another writer won, and readers only ever observe complete
+  //     versions (the body is fully written before publish; rename-based
+  //     moves are NOT a CAS on POSIX, rename replaces)
+  //  4. on conflict: re-read the NEW current version, re-prepare against
+  //     it (rebase — the merge logic re-runs over the winner's snapshot),
+  //     retry; bounded attempts keep livelock finite and loud
+
+  /** A directory of numbered versions, version N stored as the file
+    * `dir/<prefix>N<suffix>`.
+    */
+  final case class VersionLog(dir: String, prefix: String = "", suffix: String = "") {
+    def file(v: Int): java.io.File = new java.io.File(dir, s"$prefix$v$suffix")
+  }
+
+  /** A version CAS lost the race to a concurrent writer. */
+  final class CommitConflictException(msg: String) extends RuntimeException(msg)
+
+  /** Committed versions, ascending. Only names whose middle part is all
+    * ASCII digits count, so a commit's temp file is never taken for one.
+    */
+  def versions(log: VersionLog): Seq[Int] =
+    Option(new java.io.File(log.dir).list()).getOrElse(Array.empty[String]).toSeq
+      .flatMap { n =>
+        val (p, s) = (log.prefix.length, log.suffix.length)
+        val mid = if (n.length > p + s && n.startsWith(log.prefix) && n.endsWith(log.suffix))
+          n.substring(p, n.length - s) else ""
+        if (mid.nonEmpty && mid.length <= 9 && mid.forall(c => c >= '0' && c <= '9'))
+          Some(mid.toInt)
+        else None
+      }.sorted
+
+  /** Latest committed version (0 = no commits yet). */
+  def currentVersion(log: VersionLog): Int = versions(log).lastOption.getOrElse(0)
+
+  /** One CAS attempt: publish `body` as version `expectedVersion + 1`.
+    * Throws [[CommitConflictException]] if that version already exists —
+    * i.e. the writer's base snapshot is stale.
+    */
+  def casCommit(log: VersionLog, expectedVersion: Int, body: String): Int = {
+    val v = expectedVersion + 1
+    val dir = java.nio.file.Paths.get(log.dir)
+    java.nio.file.Files.createDirectories(dir)
+    val tmp = java.nio.file.Files.createTempFile(dir, s".commit$v-", ".tmp")
+    try {
+      java.nio.file.Files.writeString(tmp, body)
+      java.nio.file.Files.createLink(log.file(v).toPath, tmp) // atomic CAS
+      v
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new CommitConflictException(s"version $v of ${log.dir} already committed by another writer")
+    } finally java.nio.file.Files.deleteIfExists(tmp)
+  }
+
+  /** The retry loop around [[casCommit]]: `prepare` receives the base
+    * version the attempt is rebased on and returns the new snapshot's
+    * full body; a lost race re-reads and re-prepares. No update is ever
+    * lost: the loser's rebase starts from the winner's version. Every
+    * lost attempt means another writer committed, so `maxAttempts`
+    * bounds how many concurrent writers one commit outlasts.
+    */
+  def commitWithRetry(log: VersionLog, maxAttempts: Int = 64)(prepare: Int => String): Int = {
+    var attempt = 0
+    while (true) {
+      attempt += 1
+      val base = currentVersion(log)
+      try return casCommit(log, base, prepare(base))
+      catch {
+        case e: CommitConflictException => if (attempt >= maxAttempts) throw e
+      }
+    }
+    -1 // unreachable
   }
 }

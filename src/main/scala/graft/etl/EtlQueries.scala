@@ -207,21 +207,16 @@ object EtlQueries {
     import s.implicits._
     val out = graft.Scratch.path(
       s"fwb_tt_${graft.Scratch.tag(dir)}_pid${ProcessHandle.current.pid}")
-    graft.Scratch.buildOnce(out) {
-      // Wipe any partial previous attempt FIRST: a crashed build leaves no
-      // marker but may have committed manifests, and version numbers only
-      // line up with the hard-coded `versionAsOf 1` below when the history
-      // starts empty — without this, a transient failure would make every
-      // rerun fail on a no-longer-reconstructable v1 (review r12).
-      Option(new java.io.File(out).listFiles()).getOrElse(Array.empty)
-        .foreach(_.delete())
+    // the staging dir starts empty, so `versionAsOf 1` below always names
+    // the first commit
+    graft.Scratch.publishOnce(out) { staging =>
       val src = Tables.orders(s, dir)
         .select($"o_orderkey", $"o_custkey",
           round($"o_totalprice" * 100).cast("long").as("o_cents"), $"o_orderpriority")
       src.filter($"o_orderkey" % 3 === 0)
-        .write.format("graft-fwb").mode("overwrite").save(out) // version 1
+        .write.format("graft-fwb").mode("overwrite").save(staging) // version 1
       src.filter($"o_orderkey" % 3 === 1)
-        .write.format("graft-fwb").mode("append").save(out) // version 2
+        .write.format("graft-fwb").mode("append").save(staging) // version 2
     }
     def rollup(df: DataFrame, label: String): DataFrame =
       df.agg(count(lit(1)).as("n"), sum($"o_cents").as("sum_cents"),
@@ -570,11 +565,11 @@ object EtlQueries {
       .map(_.getAbsolutePath).sorted.toSeq
   }
 
-  private def writeManifest(path: String, files: Seq[String]): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, files.mkString("\n"))
-  }
+  /** The lake's version log: manifest N is `manifests/<N>`, one data
+    * file path per line, committed through [[graft.Scratch.casCommit]].
+    */
+  private[graft] def manifestLog(out: String): graft.Scratch.VersionLog =
+    graft.Scratch.VersionLog(s"$out/manifests")
 
   private[graft] def readManifest(path: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -588,27 +583,30 @@ object EtlQueries {
     * CDC batch merged into the touched slice as NEW files, with the
     * untouched files REUSED by reference in manifest 2. Manifest IO is
     * driver-side metadata work (the analogue of a format's log replay),
-    * metadata-sized, never data-sized.
+    * metadata-sized, never data-sized. Each call starts a fresh history,
+    * so versions 1 and 2 always name this call's commits.
     */
   private[graft] def commitVersions(s: SparkSession, dir: String, out: String): Unit = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
+    val log = manifestLog(out)
+    Option(new java.io.File(log.dir).listFiles()).getOrElse(Array.empty).foreach(_.delete())
     val touched = year($"o_orderdate") === 1997 && month($"o_orderdate") <= 2
     val base = Tables.orders(s, dir)
       .withColumn("o_year", year($"o_orderdate"))
       .withColumn("o_month", month($"o_orderdate"))
     base.filter(!touched).write.mode("overwrite").parquet(s"$out/data/v1u")
     base.filter(touched).write.mode("overwrite").parquet(s"$out/data/v1t")
-    writeManifest(s"$out/manifests/1",
-      dataFiles(s"$out/data/v1u") ++ dataFiles(s"$out/data/v1t"))
+    graft.Scratch.casCommit(log, 0,
+      (dataFiles(s"$out/data/v1u") ++ dataFiles(s"$out/data/v1t")).mkString("\n"))
     val w = Window.partitionBy($"o_orderkey").orderBy($"version".desc)
     val merged = Tables.parquetStable(s, s"$out/data", Seq(s"$out/data/v1t")).withColumn("version", lit(0L))
       .unionByName(upsertCdc(s, dir).withColumn("version", lit(1L)))
       .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
       .drop("rn", "version")
     merged.write.mode("overwrite").parquet(s"$out/data/v2t")
-    writeManifest(s"$out/manifests/2",
-      dataFiles(s"$out/data/v1u") ++ dataFiles(s"$out/data/v2t"))
+    graft.Scratch.casCommit(log, 1,
+      (dataFiles(s"$out/data/v1u") ++ dataFiles(s"$out/data/v2t")).mkString("\n"))
   }
 
   /** Snapshot read "as of" version v: scan exactly the files the manifest
@@ -651,76 +649,6 @@ object EtlQueries {
       .orderBy($"o_orderstatus")
   }
 
-  // --- optimistic concurrency: the multi-writer commit protocol ----------
-  //
-  // The q135 lake's manifests advance by one integer per commit. Two jobs
-  // committing concurrently must not lose either's update — the first
-  // thing a multi-job lake hits (VERDICT r7 missing #4; the protocol
-  // Delta/Iceberg package, built here from the same primitive they use:
-  // an atomic publish of manifest N that FAILS if N already exists).
-  //
-  //  1. read the current version v (the snapshot the writer bases on)
-  //  2. prepare the new snapshot's FULL file list (data files are
-  //     immutable and already written — only the manifest is contended)
-  //  3. CAS-publish as v+1: write the manifest body to a temp file, then
-  //     hard-link it to `manifests/<v+1>` — link(2) atomically fails with
-  //     EEXIST if another writer won, and readers only ever observe
-  //     complete manifests (the body is fully written before publish;
-  //     rename-based moves are NOT a CAS on POSIX, rename replaces)
-  //  4. on conflict: re-read the NEW current version, re-prepare against
-  //     it (rebase — the merge logic re-runs over the winner's snapshot),
-  //     retry; bounded attempts keep livelock finite and loud
-
-  /** A manifest CAS lost the race to a concurrent writer. */
-  final class CommitConflictException(msg: String) extends RuntimeException(msg)
-
-  /** Latest committed version under `out` (0 = no commits yet). */
-  private[graft] def currentVersion(out: String): Int = {
-    val d = new java.io.File(s"$out/manifests")
-    if (!d.exists()) 0
-    else d.listFiles().map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toInt).foldLeft(0)(math.max)
-  }
-
-  /** One CAS attempt: publish `files` as version `expectedVersion + 1`.
-    * Throws [[CommitConflictException]] if that version already exists —
-    * i.e. the writer's base snapshot is stale.
-    */
-  private[graft] def casCommit(out: String, expectedVersion: Int, files: Seq[String]): Int = {
-    val v = expectedVersion + 1
-    val dir = java.nio.file.Paths.get(s"$out/manifests")
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, s".commit$v-", ".tmp")
-    java.nio.file.Files.writeString(tmp, files.mkString("\n"))
-    try {
-      java.nio.file.Files.createLink(dir.resolve(v.toString), tmp) // atomic CAS
-      v
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(s"manifest $v already committed by another writer")
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** The retry loop around [[casCommit]]: `prepare` receives the base
-    * version the attempt is rebased on and returns the new snapshot's full
-    * file list; a lost race re-reads and re-prepares. No update is ever
-    * lost: the loser's rebase starts from the winner's manifest
-    * (UpsertSpec pins the interleaving).
-    */
-  private[graft] def commitWithRetry(out: String, maxAttempts: Int = 5)(
-      prepare: Int => Seq[String]): Int = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = currentVersion(out)
-      try return casCommit(out, base, prepare(base))
-      catch {
-        case e: CommitConflictException => if (attempt >= maxAttempts) throw e
-      }
-    }
-    -1 // unreachable
-  }
-
   /** Registered time-travel query: commit v1 and v2, then aggregate BOTH
     * snapshots — the oracle recomputes each version's state from the
     * source, so a manifest naming a wrong file set breaks the hash.
@@ -746,9 +674,7 @@ object EtlQueries {
     * same work a table format's VACUUM does.
     */
   private[graft] def vacuum(out: String, keepFrom: Int): Seq[String] = {
-    val manifestDir = new java.io.File(s"$out/manifests")
-    val versions = manifestDir.listFiles().map(_.getName.toInt).sorted.toSeq
-    val keep = versions.filter(_ >= keepFrom)
+    val keep = graft.Scratch.versions(manifestLog(out)).filter(_ >= keepFrom)
       .flatMap(v => readManifest(s"$out/manifests/$v")).toSet
     val dataRoot = new java.io.File(s"$out/data")
     val all = dataRoot.listFiles().filter(_.isDirectory)
@@ -777,17 +703,15 @@ object EtlQueries {
     // one year's partitions suffice to exercise the pass (compaction runs
     // per-partition anyway — a real run scopes to the partitions whose
     // file counts crossed a threshold, not the whole table). The
-    // fragmented lake is the FIXTURE, built once behind a marker (q132's
-    // split rationale): the measured operation is the compaction itself.
-    val marker = new java.io.File(s"$frag/_frag_complete")
-    if (!marker.exists()) {
+    // fragmented lake is the FIXTURE, published once (q132's split
+    // rationale): the measured operation is the compaction itself.
+    graft.Scratch.publishOnce(frag, "_frag_complete") { staging =>
       Tables.orders(s, dir)
         .filter(year($"o_orderdate") === 1997)
         .withColumn("o_year", year($"o_orderdate"))
         .withColumn("o_month", month($"o_orderdate"))
         .repartition(16) // deliberate fragmentation: ≤16 files per partition dir
-        .write.mode("overwrite").partitionBy("o_year", "o_month").parquet(frag)
-      marker.createNewFile()
+        .write.mode("overwrite").partitionBy("o_year", "o_month").parquet(staging)
     }
     Tables.parquetStable(s, frag, Seq(frag))
       .repartition($"o_year", $"o_month")

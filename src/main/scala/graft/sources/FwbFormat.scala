@@ -76,12 +76,12 @@ object FwbFormat {
   /** Write the orders table as [[FixtureFiles]] range-partitioned GFWB
     * files (disjoint, sorted key ranges per file — the layout that makes
     * footer min/max skipping effective, q97's range-clustering discipline
-    * applied to a foreign format). Built once per (process, sf dir) behind
-    * the shared marker idiom; each executor task streams its own file.
+    * applied to a foreign format). Published once per (process, sf dir)
+    * through [[Scratch.publishOnce]]; each executor task streams its own
+    * file.
     */
-  def writeFixture(s: SparkSession, dir: String): String = {
-    val out = fixturePath(dir)
-    Scratch.buildOnce(out) {
+  def writeFixture(s: SparkSession, dir: String): String =
+    Scratch.publishOnce(fixturePath(dir)) { out =>
       new File(out).mkdirs()
       // bounded-domain dictionary (≤5 distinct priorities), shipped to the
       // writing tasks and embedded in every file footer
@@ -121,10 +121,8 @@ object FwbFormat {
         }.collect() // FixtureFiles-bounded: one stats row per written file
       // stats come straight from the writing tasks — the manifest costs
       // zero footer reads (the r11 planning-loop fix, task-sourced)
-      writeManifest(out, perFile.toMap)
+      writeManifest(out, perFile.toMap, truncate = true)
     }
-    out
-  }
 
   /** Returns None (writing nothing) for an empty partition; the stats
     * otherwise, so callers can build the directory manifest without
@@ -194,58 +192,61 @@ object FwbFormat {
 
   // ---- directory stats manifest --------------------------------------
 
-  /** Write `dir/_manifest.json` covering `stats` (file name → footer
-    * stats, bloom base64-coded), atomically via temp + rename so a
-    * concurrent planner sees the old generation or the new one, never a
-    * torn file. The writer holds every stat already (task commit
-    * messages / the fixture builder's own writes) — building the
-    * manifest reads ZERO data files.
-    *
-    * Every commit ALSO snapshots the map to an immutable
-    * `_manifest.v<N>.json` (N = 1 + the highest existing version): the
-    * snapshot's file SET defines that version's table state, and since
-    * committed data files are immutable and appends never remove them,
-    * `versionAsOf` reads reconstruct any past version exactly — Delta-
-    * style time travel from nothing but the stats the connector already
-    * maintains. A `truncate` deletes data files and therefore ends the
-    * reconstructability of older versions; a time-travel read across it
-    * fails LOUDLY on the missing files, never silently re-reads the new
-    * generation.
-    */
-  private[graft] def manifestVersions(dir: String): Seq[Int] =
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .flatMap { f =>
-        val m = "_manifest\\.v(\\d+)\\.json".r
-        f.getName match { case m(v) => Some(v.toInt); case _ => None }
-      }.sorted.toSeq
+  /** The directory's version snapshots, `_manifest.v<N>.json`. */
+  private[graft] def versionLog(dir: String): Scratch.VersionLog =
+    Scratch.VersionLog(dir, "_manifest.v", ".json")
 
-  private[graft] def writeManifest(dir: String, stats: Map[String, FwbStats]): Unit = {
-    // Version allocation is ATOMIC: snapshots are created with no
-    // REPLACE_EXISTING, so when two commits race to the same number the
-    // loser gets FileAlreadyExists and retries with the next one — no
-    // committed snapshot is ever clobbered (review r12). Snapshots carry
-    // n/min/max/dict but DROP the bloom bytes: they exist for
-    // point-in-time reconstruction, and keeping ~32 KB of bloom per file
-    // per version made cumulative manifest bytes O(files²) across
-    // appends/epochs; a versioned read with a custkey probe degrades to
-    // keep-all (empty bloom = "maybe"), never to a wrong answer.
-    val snapshot = stats.map { case (k, st) => k -> st.copy(custBloom = Array.empty) }
-    var v = manifestVersions(dir).lastOption.getOrElse(0) + 1
-    var placed = false
-    while (!placed) {
-      try {
-        writeManifestFile(new File(dir, s"_manifest.v$v.json"), snapshot,
-          replace = false)
-        placed = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => v += 1
-      }
+  /** Commit `added` (file name → footer stats, bloom base64-coded): the
+    * writer holds every stat already (task commit messages / the fixture
+    * builder's own writes), so committing reads ZERO data files.
+    *
+    * The commit is an immutable `_manifest.v<N>.json` snapshot published
+    * through [[Scratch.commitWithRetry]]: version N+1 is version N's file
+    * set plus `added` (only `added` after a truncate), rebuilt on every
+    * retry, so a concurrent append can never drop another writer's files
+    * from a version. The snapshot's file SET defines that version's table
+    * state, and since committed data files are immutable and appends
+    * never remove them, `versionAsOf` reads reconstruct any past version
+    * exactly — Delta-style time travel from nothing but the stats the
+    * connector already maintains. A `truncate` deletes data files and
+    * therefore ends the reconstructability of older versions; a
+    * time-travel read across it fails LOUDLY on the missing files, never
+    * silently re-reads the new generation. Snapshots carry n/min/max/dict
+    * but DROP the bloom bytes: they exist for point-in-time
+    * reconstruction, and keeping ~32 KB of bloom per file per version
+    * made cumulative manifest bytes O(files²) across appends/epochs; a
+    * versioned read with a custkey probe degrades to keep-all (empty
+    * bloom = "maybe"), never to a wrong answer.
+    *
+    * Then `dir/_manifest.json`, the stats cache current-state planning
+    * reads, is replaced by temp + rename so a concurrent planner sees the
+    * old generation or the new one, never a torn file. Two racing commits
+    * may each drop the other's entries from it; those files plan from
+    * footer reads, never from a wrong plan.
+    */
+  private[graft] def writeManifest(dir: String, added: Map[String, FwbStats],
+      truncate: Boolean): Unit = {
+    val stripped = added.map { case (k, st) => k -> st.copy(custBloom = Array.empty) }
+    Scratch.commitWithRetry(versionLog(dir)) { base =>
+      val prior = if (truncate || base == 0) Map.empty[String, FwbStats]
+        else readManifestVersion(dir, base)
+      manifestJson(prior ++ stripped)
     }
-    writeManifestFile(new File(dir, ManifestName), stats, replace = true)
+    val cache = if (truncate) added else readManifest(dir) ++ added
+    val fin = new File(dir, ManifestName)
+    // attempt-unique tmp (pid + thread + nanos): same-process concurrent
+    // commits must never share a staging file (review r12)
+    val tmp = new File(dir,
+      s".$ManifestName.tmp${ProcessHandle.current.pid}" +
+        s"-${Thread.currentThread().getId}-${System.nanoTime()}")
+    java.nio.file.Files.writeString(tmp.toPath, manifestJson(cache))
+    try java.nio.file.Files.move(tmp.toPath, fin.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    catch { case e: Throwable => tmp.delete(); throw e }
   }
 
-  private def writeManifestFile(fin: File, stats: Map[String, FwbStats],
-      replace: Boolean): Unit = {
+  private def manifestJson(stats: Map[String, FwbStats]): String = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
     val b64 = java.util.Base64.getEncoder
@@ -255,22 +256,7 @@ object FwbFormat {
           ("dict" -> st.dict.toSeq) ~
           ("bloom" -> b64.encodeToString(st.custBloom)): org.json4s.JValue)
       }.toList
-    val json = JsonMethods.compact(JsonMethods.render(org.json4s.JObject(entries)))
-    // attempt-unique tmp (pid + thread + nanos): same-process concurrent
-    // commits must never share a staging file (review r12)
-    val tmp = new File(fin.getParent,
-      s".${fin.getName}.tmp${ProcessHandle.current.pid}" +
-        s"-${Thread.currentThread().getId}-${System.nanoTime()}")
-    java.nio.file.Files.writeString(tmp.toPath, json)
-    try {
-      if (replace)
-        java.nio.file.Files.move(tmp.toPath, fin.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else
-        java.nio.file.Files.move(tmp.toPath, fin.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case e: Throwable => tmp.delete(); throw e }
+    JsonMethods.compact(JsonMethods.render(org.json4s.JObject(entries)))
   }
 
   /** The manifest as a name-keyed stats cache; empty when absent (the
@@ -281,9 +267,9 @@ object FwbFormat {
 
   /** A version snapshot; fails loudly on an unknown version. */
   private[graft] def readManifestVersion(dir: String, v: Int): Map[String, FwbStats] = {
-    val f = new File(dir, s"_manifest.v$v.json")
-    require(f.exists(),
-      s"graft-fwb: versionAsOf $v not found in $dir (have ${manifestVersions(dir).mkString(",")})")
+    val f = versionLog(dir).file(v)
+    require(f.exists(), s"graft-fwb: versionAsOf $v not found in $dir " +
+      s"(have ${Scratch.versions(versionLog(dir)).mkString(",")})")
     readManifestFile(f)
   }
 

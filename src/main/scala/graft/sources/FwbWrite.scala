@@ -38,7 +38,7 @@ private[sources] class FwbWriteBuilder(path: String, info: LogicalWriteInfo)
   override def build(): Write = new FwbWrite(path, info.schema(), doTruncate)
 }
 
-private[sources] class FwbWrite(path: String, schema: StructType, truncate: Boolean)
+private[graft] class FwbWrite(path: String, schema: StructType, truncate: Boolean)
     extends Write with BatchWrite {
   require(schema.fieldNames.sameElements(FwbFormat.schema.fieldNames) &&
     schema.fields.map(_.dataType).sameElements(FwbFormat.schema.fields.map(_.dataType)),
@@ -72,9 +72,7 @@ private[sources] class FwbWrite(path: String, schema: StructType, truncate: Bool
     // generation; append merges over the previous manifest, and entries
     // for since-deleted files are dropped lazily (planning keys off the
     // listing, so stale extras are dead weight, not wrong answers).
-    val prior = if (truncate) Map.empty[String, FwbFormat.FwbStats]
-      else FwbFormat.readManifest(path)
-    FwbFormat.writeManifest(path, prior ++ promoted)
+    FwbFormat.writeManifest(path, promoted.toMap, truncate)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -156,7 +154,7 @@ private[graft] class FwbStreamingWrite(path: String)
       }
     }
     if (promoted.nonEmpty)
-      FwbFormat.writeManifest(path, prior ++ promoted)
+      FwbFormat.writeManifest(path, promoted.toMap, truncate = false)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

@@ -300,8 +300,7 @@ class FwbSourceSpec extends AnyFunSuite {
     // across the restart, so the replay's stats describe bytes that were
     // just discarded) — the heal must adopt the COMMITTED file's footer
     // stats (st1), never the replay's (st3)
-    sources.FwbFormat.writeManifest(dst,
-      sources.FwbFormat.readManifest(dst) - fin)
+    new java.io.File(dst, sources.FwbFormat.ManifestName).delete()
     val (p3, st3) = stage(3, Seq(42L))
     assert(!statsEq(st3, st1))
     sw.commit(7L, Array(sources.FwbCommitMessage(p3, st3)))
@@ -353,7 +352,7 @@ class FwbSourceSpec extends AnyFunSuite {
     val gen2 = src.filter($"o_orderkey" % 3 === 1)
     gen1.write.format("graft-fwb").mode("overwrite").save(out) // v1
     gen2.write.format("graft-fwb").mode("append").save(out) // v2
-    assert(sources.FwbFormat.manifestVersions(out) == Seq(1, 2))
+    assert(Scratch.versions(sources.FwbFormat.versionLog(out)) == Seq(1, 2))
     def at(v: Int) = spark.read.format("graft-fwb")
       .option("versionAsOf", v.toString).load(out)
     // v1 is EXACTLY generation 1 — the later append is invisible
@@ -377,6 +376,40 @@ class FwbSourceSpec extends AnyFunSuite {
     gen2.write.format("graft-fwb").mode("overwrite").save(out) // v3, deletes v1/v2 files
     intercept[Exception] { at(1).count() }
     assert(spark.read.format("graft-fwb").load(out).count() == gen2.count())
+  }
+
+  test("concurrent appends: every commit lands on its own version and none drops another's files") {
+    import scala.concurrent._
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val out = Scratch.path(s"fwb_occ_${System.nanoTime()}")
+    Tables.orders(spark, sf).select(
+      $"o_orderkey", $"o_custkey",
+      round($"o_totalprice" * 100).cast("long").as("o_cents"), $"o_orderpriority")
+      .write.format("graft-fwb").mode("overwrite").save(out) // v1
+    val dict = Array("P"); val codeOf = Map("P" -> 0)
+    // 8 appenders race: each stages one file and commits it as a batch job
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val futures = (1 to 8).map { i =>
+        Future {
+          val staged = s"$out/.occ$i-0-0.gfwb.tmp"
+          val st = sources.FwbFormat.writeFile(staged,
+            Iterator(org.apache.spark.sql.Row(-i.toLong, 1L, 100L, "P")), dict, codeOf).get
+          new sources.FwbWrite(out, sources.FwbFormat.schema, truncate = false)
+            .commit(Array(sources.FwbCommitMessage(staged, st)))
+        }
+      }
+      Await.result(Future.sequence(futures), 60.seconds)
+    } finally pool.shutdown()
+    assert(Scratch.versions(sources.FwbFormat.versionLog(out)) == (1 to 9))
+    val listed = new java.io.File(out).listFiles().count(_.getName.endsWith(".gfwb"))
+    val v9 = spark.read.format("graft-fwb").option("versionAsOf", "9").load(out)
+    val desc = v9.queryExecution.executedPlan
+      .collect { case b: BatchScanExec => b.scan.description() }.head
+    assert(desc.contains(s"files=$listed/$listed"), s"v9 lost a file: $desc")
+    assert(v9.filter($"o_orderkey" < 0L).count() == 8)
   }
 
   test("empty table: MIN/MAX answers NULL via the normal scan, counts stay metadata-only; option hygiene") {

@@ -1,10 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Laws for the scratch/artifact plumbing hardened in round 16 (ADVICE
-  * r15): fingerprint totality + leaf sensitivity, and publishOnce's
-  * staging hygiene. JVM-only — no SparkSession.
+  * r15): fingerprint totality + leaf sensitivity, publishOnce's staging
+  * hygiene, and the put-if-absent version commit. JVM-only — no
+  * SparkSession.
   */
 class ScratchSpec extends AnyFunSuite {
 
@@ -111,5 +113,46 @@ class ScratchSpec extends AnyFunSuite {
     assert(!secondBuildRan, "marker present: the build must not re-run")
     assert(java.nio.file.Files.readAllBytes(
       new java.io.File(s"$root/v.bin").toPath).sameElements(Array[Byte](1)))
+  }
+
+  test("version commit: a stale base conflicts without touching the winner; the retry rebases") {
+    val log = Scratch.VersionLog(tmpDir("vlog").getPath, "_manifest.v", ".json")
+    def bytesOf(v: Int) = java.nio.file.Files.readString(log.file(v).toPath)
+    java.nio.file.Files.writeString(log.file(1).toPath, "first")
+    java.nio.file.Files.writeString(log.file(2).toPath, "winner")
+    // a killed writer's temp file and a foreign name are not versions
+    java.nio.file.Files.writeString(new java.io.File(log.dir, ".commit3-x.tmp").toPath, "")
+    java.nio.file.Files.writeString(new java.io.File(log.dir, "_manifest.v.json").toPath, "")
+    assert(Scratch.versions(log) == Seq(1, 2))
+    // the caller still believes version 1 is current
+    intercept[Scratch.CommitConflictException] { Scratch.casCommit(log, 1, "stale") }
+    assert(bytesOf(2) == "winner", "a lost commit must never replace the committed version")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val v = Scratch.commitWithRetry(log) { base => seen += base; s"on top of $base" }
+    assert(v == 3 && seen.toSeq == Seq(2))
+    assert(bytesOf(3) == "on top of 2" && bytesOf(2) == "winner")
+  }
+
+  test("Scratch.scala holds the only version-commit link and non-replacing atomic move under src/main") {
+    // comments are dropped first, so scaladoc may still name the calls;
+    // on Linux an ATOMIC_MOVE is rename(2), which silently replaces an
+    // existing target, so it is never a put-if-absent
+    def offends(source: String): Boolean = {
+      val code = source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+      val moves = """Files\s*\.\s*move\s*\((?:[^()]|\([^()]*\))*\)""".r.findAllIn(code)
+      """\bcreateLink\b""".r.findFirstIn(code).isDefined ||
+        moves.exists(m => m.contains("ATOMIC_MOVE") && !m.contains("REPLACE_EXISTING"))
+    }
+    assert(offends("java.nio.file.Files.createLink(a, b)"))
+    assert(offends("Files.move(tmp.toPath, Paths.get(v),\n  StandardCopyOption.ATOMIC_MOVE)"))
+    assert(!offends("Files.move(tmp.toPath, fin.toPath, REPLACE_EXISTING, ATOMIC_MOVE)"))
+    assert(!offends("/** Files.createLink */ val x = 1 // Files.move(a, b, ATOMIC_MOVE)"))
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
+    val files = java.nio.file.Files.walk(root)
+    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    val offenders = sources.filter(f => offends(java.nio.file.Files.readString(f))).map(_.toString).sorted
+    assert(offenders == Seq("src/main/scala/graft/Scratch.scala"))
   }
 }

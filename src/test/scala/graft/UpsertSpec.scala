@@ -245,7 +245,7 @@ class UpsertSpec extends AnyFunSuite {
     val out = EtlQueries.versionedLakePath(sf) + "_occ"
     clean(out)
     EtlQueries.commitVersions(spark, sf, out) // v1 (base) + v2 (merged) exist
-    assert(EtlQueries.currentVersion(out) == 2)
+    assert(Scratch.currentVersion(EtlQueries.manifestLog(out)) == 2)
     // two writers' APPENDS: immutable data files written up front — only
     // the manifest publish is contended
     Seq((900000001L, "A")).toDF("o_orderkey", "o_orderstatus")
@@ -258,11 +258,12 @@ class UpsertSpec extends AnyFunSuite {
 
     // a stale CAS from an old snapshot must fail, not clobber: writer A
     // already advanced 2 → 3, so B's publish of 3 conflicts
-    val v3 = EtlQueries.casCommit(out, 2,
-      EtlQueries.readManifest(s"$out/manifests/2") ++ filesA)
+    val v3 = Scratch.casCommit(EtlQueries.manifestLog(out), 2,
+      (EtlQueries.readManifest(s"$out/manifests/2") ++ filesA).mkString("\n"))
     assert(v3 == 3)
-    intercept[EtlQueries.CommitConflictException] {
-      EtlQueries.casCommit(out, 2, EtlQueries.readManifest(s"$out/manifests/2") ++ filesB)
+    intercept[Scratch.CommitConflictException] {
+      Scratch.casCommit(EtlQueries.manifestLog(out), 2,
+        (EtlQueries.readManifest(s"$out/manifests/2") ++ filesB).mkString("\n"))
     }
     // manifest 3 is exactly A's commit — B's failed CAS left no trace
     assert(EtlQueries.readManifest(s"$out/manifests/3").toSet ==
@@ -275,15 +276,15 @@ class UpsertSpec extends AnyFunSuite {
     EtlQueries.commitVersions(spark, sf, occOut)
     var interleaved = false
     val prepared = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val vB = EtlQueries.commitWithRetry(occOut) { base =>
+    val vB = Scratch.commitWithRetry(EtlQueries.manifestLog(occOut)) { base =>
       prepared += base
       val mine = EtlQueries.readManifest(s"$occOut/manifests/$base") ++ filesB
       if (!interleaved) { // writer A sneaks in between B's prepare and CAS
         interleaved = true
-        EtlQueries.casCommit(occOut, base,
-          EtlQueries.readManifest(s"$occOut/manifests/$base") ++ filesA)
+        Scratch.casCommit(EtlQueries.manifestLog(occOut), base,
+          (EtlQueries.readManifest(s"$occOut/manifests/$base") ++ filesA).mkString("\n"))
       }
-      mine
+      mine.mkString("\n")
     }
     assert(prepared.toSeq == Seq(2, 3), s"expected a rebase, prepared from $prepared")
     assert(vB == 4)
@@ -313,10 +314,10 @@ class UpsertSpec extends AnyFunSuite {
     try {
       val futures = (1 to 8).map { i =>
         Future {
-          EtlQueries.commitWithRetry(out, maxAttempts = 100) { base =>
+          Scratch.commitWithRetry(EtlQueries.manifestLog(out), maxAttempts = 100) { base =>
             val prev = if (base == 0) Seq.empty
               else EtlQueries.readManifest(s"$out/manifests/$base")
-            prev :+ s"/delta/file_$i"
+            (prev :+ s"/delta/file_$i").mkString("\n")
           }
         }
       }
@@ -332,6 +333,10 @@ class UpsertSpec extends AnyFunSuite {
   test("vacuum deletes only files below the retention horizon; kept versions stay readable") {
     val out = EtlQueries.versionedLakePath(sf) + "_vac"
     EtlQueries.commitVersions(spark, sf, out)
+    // a writer killed inside a version commit leaves its temp file behind;
+    // vacuum must not take it for a version
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$out/manifests/.commit3-killed.tmp"), "")
     val v2Before = EtlQueries.readVersion(spark, out, 2).count()
     val dead = EtlQueries.vacuum(out, keepFrom = 2)
     // exactly v1's exclusive files die: the touched slice superseded by v2
