@@ -26,6 +26,10 @@ import org.apache.spark.sql.functions._
   *    one user plays twice in the same (truncated) second.
   *  - Writes take `.mode("overwrite")`; the reference relies on fresh
   *    output dirs and dies on rerun (default ErrorIfExists).
+  *  - Song files are read at any depth under `song_data`, `*.json` only;
+  *    the reference globs exactly four levels (etl.py:61–64). The glob
+  *    expands to one path per leaf directory, and past 32 paths Spark
+  *    re-lists them in a Spark job; one listed root runs none.
   *
   * Scale posture: every transform is declarative — filters and 5-column
   * projections reach the JSON/parquet scan; dropDuplicates is a partial+
@@ -37,10 +41,14 @@ object SparkifyEtl {
 
   // ---- sources (S1, S2) -------------------------------------------------
 
-  /** 4-level glob song scan (etl.py:61–64), explicit schema. */
+  /** Song scan (etl.py:61–64), explicit schema: every `*.json` file at
+    * any depth under `song_data`, listed from that one root on the driver.
+    */
   def readSongData(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.schema(SparkifySchemas.songSchema)
-      .json(s"$inputDir/song_data/*/*/*/*.json")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.json")
+      .json(s"$inputDir/song_data")
 
   /** NDJSON log scan (etl.py:121–124), explicit schema. */
   def readLogData(spark: SparkSession, inputDir: String): DataFrame =
@@ -178,30 +186,45 @@ object SparkifyEtl {
 
   // ---- entry points (etl.py:40/93/207) ----------------------------------
 
-  def processSongData(spark: SparkSession, inputDir: String, outputDir: String): Unit = {
-    // cache: the reference re-reads the raw JSON for the songplays join
-    // (etl.py:172); caching costs one pass instead of two.
-    val songData = readSongData(spark, inputDir).cache()
+  /** Runs `body` over `df` cached and releases it after, also when `body`
+    * throws: a relation left cached in a long-lived session would swallow
+    * every later plan over the same files.
+    */
+  private def cached(df: DataFrame)(body: DataFrame => Unit): Unit = {
+    df.cache()
+    try body(df) finally df.unpersist()
+  }
+
+  private def writeSongTables(songData: DataFrame, outputDir: String): Unit = {
     writeSongs(songsTable(songData), outputDir)
     writeArtists(artistsTable(songData), outputDir)
   }
 
-  /** Releases both cached relations once written: a relation left cached
-    * in a long-lived session would swallow every later plan over the same
-    * files. The song relation is released through the equal plan it
-    * re-reads for the join (the cache manager matches by plan). */
-  def processLogData(spark: SparkSession, inputDir: String, outputDir: String): Unit = {
-    val events = songplayEvents(readLogData(spark, inputDir)).cache()
-    val songData = readSongData(spark, inputDir)
-    writeUsers(usersTable(events), outputDir)
-    writeTime(timeTable(events), outputDir)
-    writeSongplays(songplaysTable(events, songData), outputDir)
-    events.unpersist()
-    songData.unpersist()
-  }
+  /** The events feed three sinks, so they are cached while those run. */
+  private def writeLogTables(spark: SparkSession, inputDir: String, songData: DataFrame,
+      outputDir: String): Unit =
+    cached(songplayEvents(readLogData(spark, inputDir))) { events =>
+      writeUsers(usersTable(events), outputDir)
+      writeTime(timeTable(events), outputDir)
+      writeSongplays(songplaysTable(events, songData), outputDir)
+    }
 
-  def runAll(spark: SparkSession, inputDir: String, outputDir: String): Unit = {
-    processSongData(spark, inputDir, outputDir)
-    processLogData(spark, inputDir, outputDir)
-  }
+  def processSongData(spark: SparkSession, inputDir: String, outputDir: String): Unit =
+    cached(readSongData(spark, inputDir))(writeSongTables(_, outputDir))
+
+  /** Reads the songs once more for the songplays join, uncached: the join
+    * is their only use here.
+    */
+  def processLogData(spark: SparkSession, inputDir: String, outputDir: String): Unit =
+    writeLogTables(spark, inputDir, readSongData(spark, inputDir), outputDir)
+
+  /** Both stages over one cached song relation: the reference re-reads the
+    * raw JSON for the songplays join (etl.py:172); sharing it costs one
+    * pass instead of two.
+    */
+  def runAll(spark: SparkSession, inputDir: String, outputDir: String): Unit =
+    cached(readSongData(spark, inputDir)) { songData =>
+      writeSongTables(songData, outputDir)
+      writeLogTables(spark, inputDir, songData, outputDir)
+    }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,13 +79,115 @@ class SparkifyEtlSpec extends AnyFunSuite {
     }
   }
 
+  /** The two relations the pipeline caches, as it reads them; a cached
+    * plan shows in `storageLevel` (the cache manager's lookup by plan). */
+  private def pipelineCaches: Seq[DataFrame] = Seq(
+    SparkifyEtl.readSongData(spark, fixture),
+    SparkifyEtl.songplayEvents(SparkifyEtl.readLogData(spark, fixture)))
+
   test("runAll releases the song and event relations it cached") {
     assert(new java.io.File(s"$outDir/songplays").isDirectory)
-    // storageLevel is the cache manager's lookupCachedData for this plan
-    val songData = SparkifyEtl.readSongData(spark, fixture)
-    val events = SparkifyEtl.songplayEvents(SparkifyEtl.readLogData(spark, fixture))
-    assert(songData.storageLevel == StorageLevel.NONE)
-    assert(events.storageLevel == StorageLevel.NONE)
+    pipelineCaches.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
+  }
+
+  test("processSongData on its own releases the song relation it cached") {
+    val out = Files.createTempDirectory("sparkify_songs").toString
+    SparkifyEtl.processSongData(spark, fixture, out)
+    assert(new java.io.File(s"$out/artists").isDirectory)
+    assert(SparkifyEtl.readSongData(spark, fixture).storageLevel == StorageLevel.NONE)
+  }
+
+  test("a sink that throws leaves nothing cached, from runAll and from either stage") {
+    // an output dir nested under a regular file cannot be created
+    val file = Files.createTempFile("sparkify_blocker", ".txt")
+    val out = s"$file/out"
+    Seq[(org.apache.spark.sql.SparkSession, String, String) => Unit](
+      SparkifyEtl.runAll, SparkifyEtl.processSongData, SparkifyEtl.processLogData).foreach { stage =>
+      intercept[Exception](stage(spark, fixture, out))
+      pipelineCaches.foreach(df => assert(df.storageLevel == StorageLevel.NONE))
+    }
+  }
+
+  /** Copies the fixture's song files into a fresh temp `song_data`, the
+    * i-th file under `leafDirs(i % leafDirs.size)`; returns the lake root.
+    */
+  private def songLake(leafDirs: Seq[String]): Path = {
+    val root = Files.createTempDirectory("sparkify_lake")
+    val songs = Files.list(Paths.get(fixture, "song_data/A/A/A"))
+    val files = try songs.iterator().asScala.toList.sorted finally songs.close()
+    leafDirs.indices.foreach { i =>
+      val src = files(i % files.size)
+      val dir = Files.createDirectories(root.resolve("song_data").resolve(leafDirs(i)))
+      Files.copy(src, dir.resolve(s"$i-${src.getFileName}"), StandardCopyOption.COPY_ATTRIBUTES)
+    }
+    root
+  }
+
+  /** 40 leaf dirs, at most 8 per level: a 4-level glob over them expands
+    * to more than Spark's 32-path threshold for parallel listing.
+    */
+  private lazy val wideLake: Path =
+    songLake(for (b <- "ABCDE"; c <- "ABCDEFGH") yield s"A/$b/$c")
+
+  private def globbed(lake: String): DataFrame =
+    spark.read.schema(graft.etl.SparkifySchemas.songSchema).json(s"$lake/song_data/*/*/*/*.json")
+
+  /** Spark jobs started while `body` runs on this thread. Listener events
+    * arrive asynchronously but in order, so a sentinel job under its own
+    * group, run after `body`, marks the end of `body`'s jobs.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
+        .takeWhile(g => { assert(g != null, "sentinel job never seen"); g != s"$group-end" })
+        .count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("readSongData lists exactly the files of the reference's 4-level glob") {
+    Seq(fixture, wideLake.toString).foreach { lake =>
+      assert(SparkifyEtl.readSongData(spark, lake).inputFiles.sorted.toSeq ==
+        globbed(lake).inputFiles.sorted.toSeq, lake)
+    }
+    assert(SparkifyEtl.readSongData(spark, wideLake.toString).inputFiles.length == 40)
+  }
+
+  test("building the song relation starts no Spark job, where the glob's listing starts one") {
+    val lake = wideLake.toString
+    // self-check: the counter sees the glob's 40-path parallel listing job
+    assert(jobsStartedBy(globbed(lake)) == 1)
+    assert(jobsStartedBy(SparkifyEtl.readSongData(spark, lake)) == 0)
+  }
+
+  test("song files are read at any depth under song_data, *.json only") {
+    val lake = songLake(Seq("A/A/A")) // holds one song: SOYOU1
+    def plant(rel: String, songId: String): Unit = {
+      val f = lake.resolve("song_data").resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, s"""{"song_id": "$songId", "title": "t", "artist_id": "AR1", "year": 2000}""")
+    }
+    plant("A/A/A/TRNOTES.txt", "SONOTJSON")
+    plant("A/A/A/TRNOTES.json.bak", "SOBACKUP")
+    plant("TRSHALLOW.json", "SOSHALLOW")
+    plant("A/A/A/B/C/TRDEEP.json", "SODEEP")
+    val ids = SparkifyEtl.readSongData(spark, lake.toString)
+      .select("song_id").collect().map(_.getString(0)).toSet
+    assert(ids == Set("SOYOU1", "SOSHALLOW", "SODEEP"))
   }
 
   test("F3: the string-route to_timestamp path equals the direct timestamp_seconds path") {
