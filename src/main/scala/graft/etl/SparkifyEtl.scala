@@ -30,6 +30,10 @@ import org.apache.spark.sql.functions._
   *    the reference globs exactly four levels (etl.py:61–64). The glob
   *    expands to one path per leaf directory, and past 32 paths Spark
   *    re-lists them in a Spark job; one listed root runs none.
+  *  - Log files likewise: every `*.json` under `log-data`, listed from
+  *    that root. On a glob path Spark also looks for a streaming-sink
+  *    metadata dir under the literal glob string, which fails and logs a
+  *    `FileNotFoundException` stack trace on every read.
   *
   * Scale posture: every transform is declarative — filters and 5-column
   * projections reach the JSON/parquet scan; dropDuplicates is a partial+
@@ -50,10 +54,14 @@ object SparkifyEtl {
       .option("pathGlobFilter", "*.json")
       .json(s"$inputDir/song_data")
 
-  /** NDJSON log scan (etl.py:121–124), explicit schema. */
+  /** NDJSON log scan (etl.py:121–124), explicit schema: every `*.json`
+    * file at any depth under `log-data`, listed from that one root.
+    */
   def readLogData(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.schema(SparkifySchemas.logSchema)
-      .json(s"$inputDir/log-data/*.json")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.json")
+      .json(s"$inputDir/log-data")
 
   // ---- song-side transforms (etl.py:67–87) ------------------------------
 

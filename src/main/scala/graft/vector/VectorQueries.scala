@@ -74,19 +74,9 @@ object VectorQueries {
     val e = withNorm(Tables.embeddings(s, dir))
     val probes = e.filter(probePredicate($"vec_id"))
       .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"nrm".as("p_nrm"))
-    val topk = udaf(TopKByScore(5))
-    e.join(broadcast(probes), $"vec_id" =!= $"probe_id")
+    rankedTopK(e.join(broadcast(probes), $"vec_id" =!= $"probe_id")
       .select($"probe_id", $"vec_id",
-        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim"))
-      .groupBy($"probe_id")
-      .agg(topk($"sim", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select(
-        $"probe_id",
-        ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"),
-        round($"col._1", 4).as("sim"))
-      .orderBy($"probe_id", $"rank")
+        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim")), 5, "sim")
   }
 
   /** Integer RRF contribution of rank r: floor(1e12 / (K + r)) with the
@@ -146,16 +136,10 @@ object VectorQueries {
     val probes = e.filter(probePredicate($"vec_id")).join(langs, "vec_id")
       .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"),
         $"nrm".as("p_nrm"), $"lang".as("p_lang"))
-    val topk = udaf(TopKByScore(3))
-    e.join(langs, "vec_id")
+    rankedTopK(e.join(langs, "vec_id")
       .join(broadcast(probes), $"vec_id" =!= $"probe_id" && $"lang" =!= $"p_lang")
       .select($"probe_id", $"vec_id", $"lang",
-        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim"))
-      .groupBy($"probe_id").agg(topk($"sim", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round($"col._1", 4).as("sim"))
-      .orderBy($"probe_id", $"rank")
+        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim")), 3, "sim")
   }
 
   /** Comparator-plane LSH bucket planes for the FIXED-b comparator family
@@ -1069,20 +1053,13 @@ object VectorQueries {
       .select(outCols ++ Seq($"nc.cell".as("cell"), $"nc.d2".as("d2")): _*)
   }
 
-  private def withC2(c: DataFrame): DataFrame =
-    c.select(col("cell"), col("c_emb"), dotF(col("c_emb"), col("c_emb")).as("c_n2"))
-
   /** Bounded Lloyd's k-means over the corpus — the trained coarse quantizer
     * q35/q54 run against (the `vec_id < 8` seeds alone were a stand-in,
-    * VERDICT r5/r6). Fixed iteration budget; each round is one broadcast
-    * assignment pass (k·n distances, no shuffle of vectors) plus a
-    * (cell, dim) partial aggregation, with `localCheckpoint` truncating
-    * lineage between rounds (the q69 iterate pattern). Centroid updates
-    * are EXACT: per-dim means of 2⁻²⁰-quantized components summed as
-    * integers, then narrowed to float — so the DuckDB oracle replays the
-    * identical training unrolled, and VectorLawsSpec asserts the Lloyd
-    * SSE-descent law. Empty cells keep their previous centroid
-    * (deterministic left-join + coalesce). k comes from the
+    * VERDICT r5/r6): [[lloyd]] with a fixed iteration budget, each round
+    * one broadcast assignment pass (k·n distances, no shuffle of vectors)
+    * plus an exact quantized-mean update, so the DuckDB oracle replays the
+    * identical training unrolled; VectorLawsSpec asserts the Lloyd
+    * SSE-descent law. k comes from the
     * [[scaledIvfCells]] ladder on the corpus cardinality (round 17 —
     * previously a fixed 8 whose docstring merely PROMISED k ≈ √n), so
     * the per-round cost stays one linear pass over the corpus and the
@@ -1092,42 +1069,25 @@ object VectorQueries {
       iters: Int = IvfIters): DataFrame = {
     val n = Tables.rowCount(s, dir, "embeddings")
     val k = scaledIvfCells(n)
-    lloyd(trainSlice(withN2(Tables.embeddings(s, dir)), n, k), iters, k)
+    lloyd(trainSlice(Tables.embeddings(s, dir), n, k), iters, k)
   }
 
-  /** The Lloyd loop itself, over any (vec_id, embedding, n2) relation —
-    * the IVF quantizer trains it on the [[trainSlice]] of full vectors
-    * with the ladder-derived k, the PQ codebooks (q138) on 16-dim
-    * subvector slices with the [[PqCodes]] format constant. Seeds = the
-    * k SMALLEST vec_ids PRESENT in the training relation (cell id = the
-    * seed's vec_id): on a dense 0..n-1 corpus this is exactly the old
-    * `vec_id < k` seed set, but it stays k-strong when the train relation
-    * has id gaps — a hash sample, or q151's base slice once the ladder k
-    * grows past an increment id (ADVICE r17 #1: `vec_id < 16` on the
-    * base slice seeded only 15 cells).
+  /** Width of the corpus vectors (`embeddings.embedding`). */
+  private[graft] val EmbeddingDim = 64
+
+  /** The IVF quantizer's training over any (vec_id, embedding) relation:
+    * [[lloydMulti]] with the whole vector as ONE keyed subspace
+    * ([[subspacesAll]] with one space; m = 0 is dropped on return) →
+    * (cell, c_emb, c_n2). The IVF tier trains it on the [[trainSlice]] of
+    * full vectors with the ladder-derived k. The key comes from
+    * subspacesAll, not `lit(0)`: a constant key is folded out of the
+    * loop's (m, cell) grouping and join, the planner then loses the key's
+    * uniqueness, and the checkpointed centroid table's size estimate
+    * compounds per round (2·10²³ bytes at sf0.01 after two rounds) — an
+    * estimate q149's runtime-filter choice reads.
     */
-  private[graft] def lloyd(e: DataFrame, iters: Int, k: Int): DataFrame = {
-    import e.sparkSession.implicits._
-    var cents = withC2(
-      e.orderBy($"vec_id").limit(k)
-        .select($"vec_id".cast("long").as("cell"), $"embedding".as("c_emb")))
-    for (_ <- 1 to iters) {
-      val means = assignCells(e, cents)
-        .select($"cell", posexplode($"embedding"))
-        .groupBy($"cell", $"pos")
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"col".cast("double") * Q).cast("long")).as("qsum"))
-        .withColumn("m", ($"qsum".cast("double") / ($"n" * Q)).cast("float"))
-        .groupBy($"cell")
-        .agg(array_sort(collect_list(struct($"pos", $"m"))).as("pm"))
-        .select($"cell", transform($"pm", x => x.getField("m")).as("new_emb"))
-      cents = withC2(
-        cents.join(means, Seq("cell"), "left")
-          .select($"cell", coalesce($"new_emb", $"c_emb").as("c_emb"))
-          .localCheckpoint())
-    }
-    cents
-  }
+  private[graft] def lloyd(e: DataFrame, iters: Int, k: Int): DataFrame =
+    lloydMulti(subspacesAll(e, 1, EmbeddingDim), iters, k).drop("m")
 
   /** ALL subspaces of a (vec_id, embedding) relation in ONE corpus scan:
     * (m, vec_id, embedding[subDim], n2). Round-19 optimization (guide
@@ -1145,15 +1105,23 @@ object VectorQueries {
       .withColumn("n2", dotF($"embedding", $"embedding"))
   }
 
-  /** Lloyd over ALL subspaces at once, keyed by m — bit-identical per m
-    * to `lloyd(subspace m, iters, k)` (VectorLawsSpec pins the law):
-    * same k-smallest-present seeds (the per-m row_number cut selects the
-    * identical id set the per-space orderBy().limit(k) did — the slice
-    * predicate is on vec_id, so every m holds the same ids), same
-    * [[graft.expressions.NativeKernels.nearestCell]] assignment, same
-    * 2⁻²⁰-quantized integer mean arithmetic per (m, cell, dim). One
-    * eager checkpoint per ITERATION instead of one per (subspace ×
-    * iteration).
+  /** The one Lloyd loop, over a keyed (m, vec_id, embedding, n2) relation:
+    * every subspace m trains its own k-code table at once — the PQ
+    * codebooks over [[subspacesAll]], the IVF quantizer as the single
+    * subspace m = 0 ([[lloyd]]). Seeds = the k SMALLEST vec_ids PRESENT
+    * per m (cell id = the seed's vec_id): on a dense 0..n-1 corpus this
+    * is exactly the old `vec_id < k` seed set, but it stays k-strong when
+    * the train relation has id gaps — a hash sample, or q151's base slice
+    * once the ladder k grows past an increment id (ADVICE r17 #1:
+    * `vec_id < 16` on the base slice seeded only 15 cells). Each round is
+    * one [[graft.expressions.NativeKernels.nearestCell]] assignment pass
+    * against the per-m centroid arrays (broadcast, ≤ spaces rows) plus a
+    * (m, cell, dim) partial aggregation of 2⁻²⁰-quantized integer sums, so
+    * the DuckDB oracle replays the identical training; empty cells keep
+    * their previous centroid (left join + coalesce). One eager checkpoint
+    * per ITERATION truncates lineage (the q69 iterate pattern), and no row
+    * of one m ever meets another m's centroids (VectorLawsSpec pins
+    * per-subspace training ≡ the keyed run).
     */
   private[graft] def lloydMulti(eM: DataFrame, iters: Int, k: Int): DataFrame = {
     import eM.sparkSession.implicits._
@@ -1185,10 +1153,13 @@ object VectorQueries {
     cents
   }
 
-  /** Nearest cell per (m, vector) against per-m centroid tables — the
-    * keyed sibling of [[assignCells]]: one corpus pass codes EVERY
-    * subspace (round-19 optimization; the same nearestCell kernel, the
-    * per-m centroid arrays broadcast as ≤ spaces rows).
+  /** Nearest cell per (m, vector) against per-m centroid tables — the PQ
+    * coding pass over [[subspacesAll]] rows: one corpus pass codes EVERY
+    * subspace with the same nearestCell kernel, the per-m centroid arrays
+    * broadcast as ≤ spaces rows, and only (vec_id, m, cell) survives.
+    * [[assignCells]] stays separate: it keeps every input column plus d2
+    * (the IVF index, q35's output) over the broadcast cross join
+    * ScaleSpec audits.
     */
   private def assignMulti(eM: DataFrame, cents: DataFrame): DataFrame = {
     import eM.sparkSession.implicits._
@@ -1347,6 +1318,66 @@ object VectorQueries {
       .orderBy($"vec_id")
   }
 
+  // ---- the IVF/PQ search stages, written once each (IVFADC, Jégou et al.
+  // ---- '11: coarse cells → PQ codes → ADC lookup table → top-k) ---------
+
+  /** (probe_id, p_emb, p_n2) from (vec_id, embedding, n2) rows. */
+  private def asProbes(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"), col("n2").as("p_n2"))
+
+  /** Every probe × every centroid, ranked per probe by the pinned L2
+    * order (pd2 ASC, cell ASC) → `rn`. Centroids broadcast (≤ 1024 rows),
+    * probes ≤ MaxProbes rows, so the window holds ≤ MaxProbes·k rows;
+    * callers cut `rn` to their nprobe (or keep every rank: q236's audit).
+    */
+  private def rankCells(probes: DataFrame, cents: DataFrame): DataFrame = {
+    import probes.sparkSession.implicits._
+    probes.crossJoin(broadcast(cents))
+      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
+      .withColumn("rn", row_number().over(Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")))
+  }
+
+  /** The ADC lookup table: probe subspace rows (m, vec_id, embedding, n2)
+    * ⋈ keyed codebooks (m, cell, c_emb, c_n2) → (probe_id, m, code, pd2),
+    * ≤ MaxProbes·spaces·codes rows (broadcast by every consumer).
+    */
+  private def adcLut(probeSub: DataFrame, codebooks: DataFrame): DataFrame = {
+    import probeSub.sparkSession.implicits._
+    probeSub.select($"m", $"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
+      .join(broadcast(codebooks), Seq("m"))
+      .select($"probe_id", $"m", $"cell".as("code"),
+        dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb").as("pd2"))
+  }
+
+  /** Pinned-order ADC: per (probe, vector), the per-subspace LUT distances
+    * pivoted to d0..d<spaces−1> and added left to right, ((d0 + d1) + d2)
+    * + … — a plain `sum()` over the m-rows would re-associate the doubles
+    * and break the cross-engine hash.
+    */
+  private def adcScore(pairs: DataFrame, spaces: Int): DataFrame = {
+    val sums = (0 until spaces).map(m => sum(when(col("m") === m, col("pd2"))).as(s"d$m"))
+    pairs.groupBy(col("probe_id"), col("vec_id"))
+      .agg(sums.head, sums.tail: _*)
+      .select(col("probe_id"), col("vec_id"),
+        (0 until spaces).map(m => col(s"d$m")).reduce(_ + _).as("adc"))
+  }
+
+  /** The ranked top-k tail: per probe the k best (probe_id, vec_id,
+    * `score`) rows by a map-side-partial TopKByScore (ties → vec_id), out
+    * as (probe_id, rank, vec_id, round(score, 4)) ordered by (probe_id,
+    * rank). `ascending` ranks smallest-first (the ADC distance).
+    */
+  private def rankedTopK(scored: DataFrame, k: Int, score: String,
+      ascending: Boolean = false): DataFrame = {
+    val topk = udaf(TopKByScore(k))
+    def signed(c: Column): Column = if (ascending) -c else c
+    scored.groupBy(col("probe_id")).agg(topk(signed(col(score)), col("vec_id")).as("nn"))
+      .select(col("probe_id"), posexplode(col("nn")))
+      .select(col("probe_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("col._2").as("vec_id"), round(signed(col("col._1")), 4).as(score))
+      .orderBy(col("probe_id"), col("rank"))
+  }
+
   /** The parameterized core. With nprobe = ncells the search degenerates to
     * exact kNN (every cell probed) — VectorLawsSpec asserts that identity
     * against q18, which pins the whole train/assign/probe/search machinery.
@@ -1354,33 +1385,28 @@ object VectorQueries {
     * before any distance evaluation.
     */
   private[graft] def ivfSearch(s: SparkSession, dir: String, nprobe: Int,
-      keepCandidates: Option[DataFrame] = None,
-      centroidsOverride: Option[DataFrame] = None): DataFrame = {
+      keepCandidates: Option[DataFrame] = None): DataFrame =
+    ivfServe(s, dir, _.filter(col("rn") <= nprobe), keepCandidates)
+
+  /** IVF-flat serve with the per-probe rank cut as a parameter: an integer
+    * nprobe ([[ivfSearch]]) or q236's 1-row tuned relation.
+    */
+  private def ivfServe(s: SparkSession, dir: String, cut: DataFrame => DataFrame,
+      keepCandidates: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
     val e = withN2(Tables.embeddings(s, dir))
-    val centroids = centroidsOverride.getOrElse(trainedCentroids(s, dir))
+    val centroids = trainedCentroids(s, dir)
     val index = keepCandidates.foldLeft(assignCells(e, centroids))(
         (idx, keep) => idx.join(keep, Seq("vec_id"), "left_semi"))
       .select($"vec_id", $"embedding", sqrt($"n2").as("nrm"), $"cell")
     // each probe searches its nprobe closest cells (probe set bounded by
     // probePredicate — the broadcast probe-cell pairs are ≤ MaxProbes·nprobe)
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= nprobe)
+    val probeCells = cut(rankCells(asProbes(e.filter(probePredicate($"vec_id"))), centroids))
       .select($"probe_id", $"p_emb", sqrt($"p_n2").as("p_nrm"), $"cell")
-    val topk = udaf(TopKByScore(5))
-    index.join(broadcast(probeCells), Seq("cell"))
+    rankedTopK(index.join(broadcast(probeCells), Seq("cell"))
       .filter($"vec_id" =!= $"probe_id")
       .select($"probe_id", $"vec_id",
-        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim"))
-      .groupBy($"probe_id").agg(topk($"sim", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round($"col._1", 4).as("sim"))
-      .orderBy($"probe_id", $"rank")
+        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim")), 5, "sim")
   }
 
   // ---- q236: recall-TARGETED nprobe (closing the open-loop √k rule) -----
@@ -1418,13 +1444,8 @@ object VectorQueries {
     val e = withN2(Tables.embeddings(s, dir))
     val exact = q18KnnTopk(s, dir).select($"probe_id", $"vec_id")
     val assign = assignCells(e, cents).select($"vec_id", $"cell")
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val cellRank = probes.crossJoin(broadcast(cents))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("crn", row_number().over(wProbe))
-      .select($"probe_id", $"cell", $"crn")
+    val cellRank = rankCells(asProbes(e.filter(probePredicate($"vec_id"))), cents)
+      .select($"probe_id", $"cell", $"rn".as("crn"))
     val pairs = exact.join(assign, "vec_id")
       .join(broadcast(cellRank), Seq("probe_id", "cell"))
       .select($"probe_id", $"crn")
@@ -1437,21 +1458,6 @@ object VectorQueries {
       .agg(coalesce(min($"crn"), lit(2)).cast("long").as("tuned_np"))
   }
 
-  /** IVF search at the recall-TUNED nprobe — the closed-loop serve mode
-    * next to q54's open-loop ⌊√k⌋ (VERDICT r18 next #2: the √k rule is a
-    * starting point, not a contract — FAISS's own tuning guidance sweeps
-    * nprobe against a measured recall target, which is exactly what
-    * [[tunedNprobeDf]] replays relationally). The serve body is q54's
-    * shape with the rank cut taken against the 1-row tuned relation (a
-    * broadcast — the plan stays fully declarative, no driver round-trip);
-    * (tuned_np, ncells) ride the result as hash-checked columns (the
-    * q230 pattern), so the oracle adjudicates the TUNING ARITHMETIC
-    * itself, not just the serve it produced. Cost: the audit is one
-    * bounded-probe corpus scan amortized train-once; the serve pays
-    * (tuned_np/ncells)·n per probe — the price the declared recall
-    * target actually costs, instead of a silent recall slide as the
-    * ladder deepens (the 0.44 measured at k=64).
-    */
   /** Version of the tuning recipe — bump when [[tunedNprobeDf]]'s
     * arithmetic (recall target, rank tie-breaks, probe set) changes, so
     * a recipe change can never silently serve a stale tuning.
@@ -1483,34 +1489,28 @@ object VectorQueries {
     s.read.schema(tunedSchema).parquet(s"$root/tuned")
   }
 
+  /** IVF search at the recall-TUNED nprobe — the closed-loop serve mode
+    * next to q54's open-loop ⌊√k⌋ (VERDICT r18 next #2: the √k rule is a
+    * starting point, not a contract — FAISS's own tuning guidance sweeps
+    * nprobe against a measured recall target, which is exactly what
+    * [[tunedNprobeDf]] replays relationally). The serve body is q54's
+    * shape with the rank cut taken against the 1-row tuned relation (a
+    * broadcast — the plan stays fully declarative, no driver round-trip);
+    * (tuned_np, ncells) ride the result as hash-checked columns (the
+    * q230 pattern), so the oracle adjudicates the TUNING ARITHMETIC
+    * itself, not just the serve it produced. Cost: the audit is one
+    * bounded-probe corpus scan amortized train-once; the serve pays
+    * (tuned_np/ncells)·n per probe — the price the declared recall
+    * target actually costs, instead of a silent recall slide as the
+    * ladder deepens (the 0.44 measured at k=64).
+    */
   def q236TunedIvfSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val e = withN2(Tables.embeddings(s, dir))
-    val centroids = trainedCentroids(s, dir)
     val k = scaledIvfCells(Tables.rowCount(s, dir, "embeddings"))
     // 1-row published artifact; both consumers (rank cut, output column)
     // read the parquet back — no per-execution audit pass
     val tuned = tunedNprobe(s, dir)
-    val index = assignCells(e, centroids)
-      .select($"vec_id", $"embedding", sqrt($"n2").as("nrm"), $"cell")
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("rn", row_number().over(wProbe))
-      .crossJoin(broadcast(tuned))
-      .filter($"rn" <= $"tuned_np")
-      .select($"probe_id", $"p_emb", sqrt($"p_n2").as("p_nrm"), $"cell")
-    val topk = udaf(TopKByScore(5))
-    index.join(broadcast(probeCells), Seq("cell"))
-      .filter($"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id",
-        cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim"))
-      .groupBy($"probe_id").agg(topk($"sim", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round($"col._1", 4).as("sim"))
+    ivfServe(s, dir, _.crossJoin(broadcast(tuned)).filter($"rn" <= $"tuned_np"))
       .crossJoin(broadcast(tuned))
       .withColumn("ncells", lit(k).cast("long"))
       .orderBy($"probe_id", $"rank")
@@ -1521,16 +1521,6 @@ object VectorQueries {
   private[graft] val PqSubspaces = 4
   private[graft] val PqSubDim = 16 // 64 dims / 4 subspaces
   private[graft] val PqIters = 1
-
-  /** Subspace m of a (vec_id, embedding) relation: 16-dim slices + n2. */
-  private[graft] def subspaceOf(df: DataFrame, m: Int): DataFrame = {
-    import df.sparkSession.implicits._
-    withN2(df.select($"vec_id", slice($"embedding", m * PqSubDim + 1, PqSubDim).as("embedding")))
-  }
-
-  /** Subspace m of the corpus: 16-dim slices with their own n2. */
-  private def subspace(s: SparkSession, dir: String, m: Int): DataFrame =
-    subspaceOf(Tables.embeddings(s, dir), m)
 
   /** The NORMALIZED corpus x/|x|, elements narrowed to FLOAT — the PQ8
     * tier's input (see [[Pq8Codes]]: ADC is an L2 ranker, and only on
@@ -1548,39 +1538,11 @@ object VectorQueries {
           .cast("float")).as("embedding"))
   }
 
-  /** PQ8 subspace m: 4-dim slices of the NORMALIZED corpus, with n2. */
-  private[graft] def subspace8Of(df: DataFrame, m: Int): DataFrame = {
-    import df.sparkSession.implicits._
-    withN2(normalizedEmb(df)
-      .select($"vec_id", slice($"embedding", m * Pq8SubDim + 1, Pq8SubDim).as("embedding")))
-  }
-
-  /** Product quantization + asymmetric-distance (ADC) search — the
-    * compression standard behind IVF-PQ (Jégou et al. '11): split vectors
-    * into 4 independent 16-dim subspaces, Lloyd-train an 8-code codebook
-    * per subspace (the same exact-arithmetic [[lloyd]] the IVF tier uses,
-    * so the oracle replays all four trainings), store each vector as FOUR
-    * BYTES of code ids, and answer probes by summing per-subspace
-    * code-to-probe distances from a tiny lookup table. Scale shape: the
-    * corpus-side relation that survives is (vec_id, m, code) — the 16×
-    * compression that makes a 100 TB embedding lake scannable; the probe
-    * LUT is probes × m × k rows (broadcast); the ADC scan is one cheap
-    * join + fixed-order 4-term sum per (probe, vector), normally run
-    * within IVF cells (compose with q54) rather than exhaustively. The
-    * 4-term ADC sum is pivoted to columns and added in PINNED order —
-    * a plain `sum()` over the m-rows would re-associate the doubles and
-    * break the cross-engine hash. VectorLawsSpec measures ADC recall vs
-    * exact top-5. Measured envelope (round 18, SCALING.md): at the 20k
-    * organic replica the 4×3-bit format is under-resolved (recall ≈
-    * chance, full-trained control included) — this tier is the
-    * 16×-compression EXTREME of the menu; at that density serve through
-    * SQ8 (recall law ≥ 0.8) or co-tuned IVF-flat instead.
-    */
   /** Cross-engine adjudication of the PQ code VALUES themselves (ADVICE
     * r9: q151's audit oracle sees coverage, not codes — the code values
     * rested on in-repo laws alone). This registers per-subspace checksums
-    * of the production coding path — the same lloyd + assignCells the
-    * index builds use — that pin every vector's code: n_vecs, sum(code),
+    * of the production coding path — the same [[lloydMulti]] +
+    * [[assignMulti]] the index builds use — that pin every vector's code: n_vecs, sum(code),
     * and sum(code · vec_id) (reassigning any single vector, or permuting
     * codes among vectors, shifts the weighted sum). TWO training variants
     * are emitted: `full` (codebooks trained on the whole corpus — q148's
@@ -1604,10 +1566,9 @@ object VectorQueries {
     // cardinality (the base slice is ~90% of the corpus, so its m can sit
     // one rung below full's near a ladder boundary); both counts are
     // memoized per process like every other sizing count
-    // round-19 optimization: each variant's four subspace trainings and
-    // four full-corpus codings ran as separate scans/jobs; the keyed forms
-    // do one training loop and one coding pass per VARIANT (the lloydMulti
-    // law pins per-m bit-equality)
+    // each variant trains all four subspaces in one keyed loop and codes
+    // them in one pass (per-subspace training ≡ the keyed run — a
+    // VectorLawsSpec law)
     val eMFull = subspacesAll(raw, PqSubspaces, PqSubDim)
     val variants: Seq[(String, DataFrame, Long)] = Seq(
       ("full", eMFull, Tables.rowCount(s, dir, "embeddings")),
@@ -1708,20 +1669,14 @@ object VectorQueries {
       .select($"vec_id", expr(sqReconExpr).as("recon"))
     val probes = e.filter(probePredicate($"vec_id"))
       .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"))
-    val topk = udaf(TopKByScore(5))
-    coded.join(broadcast(probes), $"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id", dotF($"p_emb", $"recon").as("score"))
-      .groupBy($"probe_id").agg(topk($"score", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round($"col._1", 4).as("score"))
-      .orderBy($"probe_id", $"rank")
+    rankedTopK(coded.join(broadcast(probes), $"vec_id" =!= $"probe_id")
+      .select($"probe_id", $"vec_id", dotF($"p_emb", $"recon").as("score")), 5, "score")
   }
 
   /** IVF-SQ search — the composition the q193 Scaladoc promises, mirroring
     * exactly how q140 composes IVF-PQ: the trained coarse quantizer
     * restricts each probe's scan to its co-tuned nprobe = √ncells best
-    * cells (q54's machinery verbatim), and candidates inside those cells score by
+    * cells ([[rankCells]], as in [[ivfSearch]]), and candidates inside those cells score by
     * q193's SQ8 ADC reconstruction instead of raw floats. Per probe the
     * cost is (nprobe/ncells)·n reconstructions-worth of 64-byte codes —
     * the memory-bound regime a 100 TB embedding lake actually serves
@@ -1744,112 +1699,101 @@ object VectorQueries {
     val idx = assignCells(e, centroids)
       .crossJoin(broadcast(sqBounds(s, dir)))
       .select($"vec_id", $"cell", expr(sqReconExpr).as("recon"))
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= nprobe)
+    val probeCells = rankCells(asProbes(e.filter(probePredicate($"vec_id"))), centroids)
+      .filter($"rn" <= nprobe)
       .select($"probe_id", $"p_emb", $"cell")
-    val topk = udaf(TopKByScore(5))
-    idx.join(broadcast(probeCells), Seq("cell"))
+    rankedTopK(idx.join(broadcast(probeCells), Seq("cell"))
       .filter($"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id", dotF($"p_emb", $"recon").as("score"))
-      .groupBy($"probe_id").agg(topk($"score", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round($"col._1", 4).as("score"))
-      .orderBy($"probe_id", $"rank")
+      .select($"probe_id", $"vec_id", dotF($"p_emb", $"recon").as("score")), 5, "score")
   }
 
+  /** Product quantization + asymmetric-distance (ADC) search — the
+    * compression standard behind IVF-PQ (Jégou et al. '11): split vectors
+    * into 4 independent 16-dim subspaces, Lloyd-train an 8-code codebook
+    * per subspace (the same exact-arithmetic [[lloydMulti]] the IVF tier
+    * trains through, so the oracle replays all four trainings), store
+    * each vector as FOUR
+    * BYTES of code ids, and answer probes by summing per-subspace
+    * code-to-probe distances from a tiny lookup table. Scale shape: the
+    * corpus-side relation that survives is (vec_id, m, code) — the 16×
+    * compression that makes a 100 TB embedding lake scannable; the probe
+    * LUT is probes × m × k rows (broadcast); the ADC scan is one cheap
+    * join + fixed-order 4-term sum per (probe, vector), normally run
+    * within IVF cells (q140) rather than exhaustively. The 4-term sum is
+    * [[adcScore]]'s pinned order. VectorLawsSpec measures ADC recall vs
+    * exact top-5. Measured envelope (round 18, SCALING.md): at the 20k
+    * organic replica the 4×3-bit format is under-resolved (recall ≈
+    * chance, full-trained control included) — this tier is the
+    * 16×-compression EXTREME of the menu; at that density serve through
+    * SQ8 (recall law ≥ 0.8) or co-tuned IVF-flat instead.
+    */
   def q138PqAdcSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nCorpus = Tables.rowCount(s, dir, "embeddings")
-    // round-19 optimization: the four per-subspace trainings/codings ran
-    // as four separate corpus scans and four eager Lloyd jobs; the keyed
-    // forms train and code all subspaces in one pass each (values
-    // bit-identical per m — the lloydMulti law)
-    val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
-    val cbs = lloydMulti(trainSlice(eM, nCorpus, PqCodes), PqIters, PqCodes)
-    val vecCodes = assignMulti(eM, cbs).select($"vec_id", $"m", $"cell")
-    val lut = eM.filter(probePredicate($"vec_id"))
-      .select($"m", $"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-      .join(broadcast(cbs), Seq("m"))
-      .select($"probe_id", $"m", $"cell",
-        dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb").as("pd2"))
-    val topk = udaf(TopKByScore(5))
-    vecCodes.join(broadcast(lut), Seq("m", "cell"))
-      .filter($"vec_id" =!= $"probe_id")
-      .groupBy($"probe_id", $"vec_id")
-      .agg(
-        sum(when($"m" === 0, $"pd2")).as("d0"),
-        sum(when($"m" === 1, $"pd2")).as("d1"),
-        sum(when($"m" === 2, $"pd2")).as("d2"),
-        sum(when($"m" === 3, $"pd2")).as("d3"))
-      .select($"probe_id", $"vec_id",
-        ((($"d0" + $"d1") + $"d2") + $"d3").as("adc"))
-      .groupBy($"probe_id").agg(topk(-$"adc", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round(-$"col._1", 4).as("adc"))
-      .orderBy($"probe_id", $"rank")
-  }
-
-  /** IVF-PQ search — the production ANN composition (FAISS's default
-    * index shape): the trained coarse quantizer (q35/q54's machinery)
-    * restricts the scan to the probes' co-tuned nprobe = √ncells cells, and PQ codes
-    * (q138's machinery) make the scan itself 16× cheaper — candidates are
-    * scored from 4 code bytes via the broadcast LUT, never from raw
-    * vectors. Scale shape: the only corpus-sized relations that move are
-    * (vec_id, cell) and (vec_id, m, code); candidate work is
-    * nprobe/ncells of the corpus × 4 LUT lookups; probe-side structures
-    * are all bounded broadcasts. The oracle replays the full-vector
-    * training AND all four subspace trainings, then the cell-restricted
-    * pinned-order ADC.
-    */
-  def q140IvfPqSearch(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = withN2(Tables.embeddings(s, dir))
-    val centroids = trainedCentroids(s, dir)
-    val index = assignCells(e, centroids).select($"vec_id", $"cell")
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val nCorpus = Tables.rowCount(s, dir, "embeddings")
-    val np = scaledNprobe(scaledIvfCells(nCorpus))
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= np)
-      .select($"probe_id", $"cell")
-    // keyed subspace training/coding — one corpus pass per stage instead
-    // of one per subspace (the q138 rewrite's shape; values identical)
     val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
     val cbs = lloydMulti(trainSlice(eM, nCorpus, PqCodes), PqIters, PqCodes)
     val vecCodes = assignMulti(eM, cbs).select($"vec_id", $"m", $"cell".as("code"))
-    val lut = eM.filter(probePredicate($"vec_id"))
-      .select($"m", $"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-      .join(broadcast(cbs), Seq("m"))
-      .select($"probe_id", $"m", $"cell".as("code"),
-        dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb").as("pd2"))
-    val cand = index.join(broadcast(probeCells), Seq("cell"))
+    val lut = adcLut(eM.filter(probePredicate($"vec_id")), cbs)
+    rankedTopK(adcScore(vecCodes.join(broadcast(lut), Seq("m", "code"))
+      .filter($"vec_id" =!= $"probe_id"), PqSubspaces), 5, "adc", ascending = true)
+  }
+
+  /** IVF-PQ search — the production ANN composition (FAISS's default
+    * index shape): the trained coarse quantizer ([[trainedCentroids]] +
+    * [[assignCells]]) restricts the scan to the probes' co-tuned nprobe =
+    * √ncells cells, and PQ codes ([[lloydMulti]] codebooks, [[assignMulti]]
+    * codes) make the scan itself 16× cheaper — candidates are scored from
+    * 4 code bytes via the broadcast LUT, never from raw vectors. Scale
+    * shape: the only corpus-sized relations that move are (vec_id, cell)
+    * and (vec_id, m, code); candidate work is nprobe/ncells of the corpus
+    * × 4 LUT lookups; probe-side structures are all bounded broadcasts.
+    * The oracle replays the full-vector training AND all four subspace
+    * trainings, then the cell-restricted pinned-order ADC.
+    */
+  def q140IvfPqSearch(s: SparkSession, dir: String): DataFrame =
+    ivfPqSearch(s, dir,
+      nprobe = scaledNprobe(scaledIvfCells(Tables.rowCount(s, dir, "embeddings"))))
+
+  /** q140 trained in-process at any nprobe — with nprobe = ncells every
+    * cell is probed and the result must equal q138's exhaustive PQ-ADC
+    * search row for row (VectorLawsSpec asserts that identity, pinning the
+    * ADC scorer across its cell-restricted and exhaustive callers).
+    */
+  private[graft] def ivfPqSearch(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
+    import s.implicits._
+    val e = withN2(Tables.embeddings(s, dir))
+    val centroids = trainedCentroids(s, dir)
+    val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
+    val cbs = lloydMulti(trainSlice(eM, Tables.rowCount(s, dir, "embeddings"), PqCodes),
+      PqIters, PqCodes)
+    ivfPqServe(
+      probes = asProbes(e.filter(probePredicate($"vec_id"))), cents = centroids, nprobe = nprobe,
+      cells = assignCells(e, centroids).select($"vec_id", $"cell"),
+      codes = assignMulti(eM, cbs).select($"vec_id", $"m", $"cell".as("code")),
+      probeSub = eM.filter(probePredicate($"vec_id")), codebooks = cbs,
+      spaces = PqSubspaces, k = 5)
+  }
+
+  /** The one IVF-PQ serve core (IVFADC): rank the coarse cells per probe
+    * and keep the `nprobe` nearest, take the candidates of those `cells`
+    * (vec_id, cell), join their `codes` (vec_id, m, code) to the ADC LUT
+    * built from the probe subspace rows `probeSub` and the keyed
+    * `codebooks`, then the pinned-order ADC top-k. Whether the inputs were
+    * trained in-process (q140) or read back from a published root
+    * (q148/q151/q229/q235) is the caller's business.
+    */
+  private def ivfPqServe(probes: DataFrame, cents: DataFrame, nprobe: Int,
+      cells: DataFrame, codes: DataFrame, probeSub: DataFrame, codebooks: DataFrame,
+      spaces: Int, k: Int): DataFrame = {
+    import probes.sparkSession.implicits._
+    val probeCells = rankCells(probes, cents).filter($"rn" <= nprobe)
+      .select($"probe_id", $"cell")
+    val cand = cells.join(broadcast(probeCells), Seq("cell"))
       .filter($"vec_id" =!= $"probe_id")
       .select($"probe_id", $"vec_id")
-    val topk = udaf(TopKByScore(5))
-    cand.join(vecCodes, Seq("vec_id"))
-      .join(broadcast(lut), Seq("probe_id", "m", "code"))
-      .groupBy($"probe_id", $"vec_id")
-      .agg(
-        sum(when($"m" === 0, $"pd2")).as("d0"),
-        sum(when($"m" === 1, $"pd2")).as("d1"),
-        sum(when($"m" === 2, $"pd2")).as("d2"),
-        sum(when($"m" === 3, $"pd2")).as("d3"))
-      .select($"probe_id", $"vec_id",
-        ((($"d0" + $"d1") + $"d2") + $"d3").as("adc"))
-      .groupBy($"probe_id").agg(topk(-$"adc", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round(-$"col._1", 4).as("adc"))
-      .orderBy($"probe_id", $"rank")
+    rankedTopK(adcScore(cand.join(codes, Seq("vec_id"))
+      .join(broadcast(adcLut(probeSub, codebooks)), Seq("probe_id", "m", "code")), spaces),
+      k, "adc", ascending = true)
   }
 
   /** ANN index as a PERSISTED artifact: train once, write the index
@@ -1937,13 +1881,11 @@ object VectorQueries {
     // lifetime of the artifact
     val n = raw.count()
     val k = scaledIvfCells(n)
-    lloyd(trainSlice(withN2(raw), n, k), IvfIters, k)
+    lloyd(trainSlice(raw, n, k), IvfIters, k)
       .write.mode("overwrite").parquet(s"$root/centroids")
-    // round-19 optimization: both PQ tiers train ALL their subspace
-    // codebooks in one keyed loop each (4 + 16 trainings were 20 separate
-    // corpus scans and eager Lloyd jobs; values bit-identical per m —
-    // the lloydMulti law). The per-m parquet layout is unchanged: the
-    // serve paths read the same (cell, c_emb, c_n2) files.
+    // both PQ tiers train ALL their subspace codebooks in one keyed
+    // [[lloydMulti]] loop each; the layout stays one (cell, c_emb, c_n2)
+    // parquet per m, read back keyed by [[readCodebooks]]
     val cb = lloydMulti(trainSlice(
       subspacesAll(raw, PqSubspaces, PqSubDim), n, PqCodes), PqIters, PqCodes)
     (0 until PqSubspaces).foreach { m =>
@@ -2083,9 +2025,8 @@ object VectorQueries {
     adcTopKFromArtifacts(s, dir, root, 5)
 
   /** The per-m persisted codebooks as ONE keyed (m, cell, c_emb, c_n2)
-    * relation — the read-back side of [[assignMulti]]/the keyed LUT
-    * joins (round-19; the parquet layout is unchanged, only the readers
-    * union it with m attached).
+    * relation — what [[assignMulti]] and [[adcLut]] join on m (the parquet
+    * layout stays one file set per m; the reader attaches m).
     */
   private def readCodebooks(s: SparkSession, root: String, prefix: String,
       spaces: Int): DataFrame =
@@ -2093,119 +2034,55 @@ object VectorQueries {
       s.read.schema(centroidSchema).parquet(s"$root/$prefix$m").withColumn("m", lit(m))
     }.reduce(_ unionByName _)
 
-  /** The artifact serve parameterized over k — q148/q151 return the ADC
-    * top-5 directly ([[adcTopK8FromArtifacts]] is the 8-bit twin; q229's
-    * RECALL STAGE takes its top-20 as candidates for the exact rerank).
+  /** The 3-bit tier's artifact serve, parameterized over k — q148/q151
+    * return the ADC top-5 ([[adcTopK8FromArtifacts]] is the 8-bit tier's).
+    * ONE probe-side corpus scan (round-19 optimization): the probe
+    * predicate is a modulo — not parquet-pushdownable — so the probe
+    * vectors are materialized once, and the coarse probes and every LUT
+    * slice are cut from those rows.
     */
   private[graft] def adcTopKFromArtifacts(s: SparkSession, dir: String, root: String,
       k: Int): DataFrame = {
-    import s.implicits._
-    // ONE probe-side corpus scan (round-19 optimization, the same move
-    // the 8-bit serve already made): the probe predicate is a modulo —
-    // not parquet-pushdownable — and the four per-subspace LUT branches
-    // each re-scanned the corpus for the same ≤ MaxProbes rows.
-    // Materialize the probe vectors once; probes and every LUT slice cut
-    // from those rows.
     val pRaw = Tables.embeddings(s, dir)
-      .filter(probePredicate($"vec_id")).localCheckpoint()
-    val cents = s.read.schema(centroidSchema).parquet(s"$root/centroids")
-    // nprobe co-tuned to the cell count the PERSISTED index actually has
-    // (an incremental root's k is sized to its base slice, not the full
-    // table) — memoized per process like every other sizing count
-    val np = scaledNprobe(
-      Tables.publishedArtifactCount(s, s"$root/centroids", s"$root/_trained").toInt)
-    val probes = withN2(pRaw)
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val probeCells = probes.crossJoin(broadcast(cents))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= np)
-      .select($"probe_id", $"cell")
-    // the 16-/4-way LUT union is one keyed join now: per-m codebooks read
-    // back with their m attached, subspaces sliced from the checkpointed
-    // probe rows (values identical — same slice, same dist2)
-    val lut = subspacesAll(pRaw, PqSubspaces, PqSubDim)
-      .select($"m", $"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-      .join(broadcast(readCodebooks(s, root, "codebook_", PqSubspaces)), Seq("m"))
-      .select($"probe_id", $"m", $"cell".as("code"),
-        dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb").as("pd2"))
-    val cand = s.read.schema(cellsSchema).parquet(s"$root/cells")
-      .join(broadcast(probeCells), Seq("cell"))
-      .filter($"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id")
-    val topk = udaf(TopKByScore(k))
-    cand.join(s.read.schema(codesSchema).parquet(s"$root/codes"), Seq("vec_id"))
-      .join(broadcast(lut), Seq("probe_id", "m", "code"))
-      .groupBy($"probe_id", $"vec_id")
-      .agg(
-        sum(when($"m" === 0, $"pd2")).as("d0"),
-        sum(when($"m" === 1, $"pd2")).as("d1"),
-        sum(when($"m" === 2, $"pd2")).as("d2"),
-        sum(when($"m" === 3, $"pd2")).as("d3"))
-      .select($"probe_id", $"vec_id",
-        ((($"d0" + $"d1") + $"d2") + $"d3").as("adc"))
-      .groupBy($"probe_id").agg(topk(-$"adc", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round(-$"col._1", 4).as("adc"))
-      .orderBy($"probe_id", $"rank")
+      .filter(probePredicate(col("vec_id"))).localCheckpoint()
+    servePublished(s, root, asProbes(withN2(pRaw)),
+      subspacesAll(pRaw, PqSubspaces, PqSubDim), "", PqSubspaces, k)
   }
 
   /** The 8-bit tier's artifact serve (see [[Pq8Codes]] for the measured
-    * geometry): probes are sliced from the NORMALIZED corpus, candidates
-    * come from the same shared coarse cells, and the ADC is the 16-term
-    * pinned-order sum of per-subspace code distances from the broadcast
-    * LUT (≤ MaxProbes·16·256 rows). Per candidate the scan touches 16
-    * code bytes — the 16×-compressed relation a 100 TB lake serves from.
+    * geometry): LUT probes are sliced from the NORMALIZED probe vectors,
+    * materialized once (building each of the 16 subspace LUTs straight off
+    * `embeddings` would re-scan the corpus per subspace for a ≤
+    * MaxProbes-row relation); candidates come from the same shared coarse
+    * cells, and the ADC is the 16-term pinned-order sum (LUT ≤
+    * MaxProbes·16·256 rows). Per candidate the scan touches 16 code bytes
+    * — the 16×-compressed relation a 100 TB lake serves from.
     */
   private[graft] def adcTopK8FromArtifacts(s: SparkSession, dir: String, root: String,
       k: Int): DataFrame = {
-    import s.implicits._
-    val e = withN2(Tables.embeddings(s, dir))
-    val cents = s.read.schema(centroidSchema).parquet(s"$root/centroids")
-    val np = scaledNprobe(
-      Tables.publishedArtifactCount(s, s"$root/centroids", s"$root/_trained").toInt)
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-    val wProbe = Window.partitionBy($"probe_id").orderBy($"pd2", $"cell")
-    val probeCells = probes.crossJoin(broadcast(cents))
-      .withColumn("pd2", dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb"))
-      .withColumn("rn", row_number().over(wProbe)).filter($"rn" <= np)
-      .select($"probe_id", $"cell")
-    // ONE probe-side corpus scan, not sixteen: the probe predicate is a
-    // modulo — not parquet-pushdownable — so building each subspace LUT
-    // straight off `embeddings` would re-scan the corpus per subspace at
-    // 100 TB for a ≤ MaxProbes-row relation. Materialize the normalized
-    // probe vectors once and slice the 16 subspaces from those rows.
     val nprobes = normalizedEmb(Tables.embeddings(s, dir))
-      .filter(probePredicate($"vec_id")).localCheckpoint()
-    // 16 LUT branches → one keyed join (round-19 optimization; values
-    // identical — same slices of the same checkpointed probe rows, same
-    // dist2 against the same persisted codebooks)
-    val lut = subspacesAll(nprobes, Pq8Subspaces, Pq8SubDim)
-      .select($"m", $"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"n2".as("p_n2"))
-      .join(broadcast(readCodebooks(s, root, "codebook8_", Pq8Subspaces)), Seq("m"))
-      .select($"probe_id", $"m", $"cell".as("code"),
-        dist2($"p_n2", $"c_n2", $"p_emb", $"c_emb").as("pd2"))
-    val cand = s.read.schema(cellsSchema).parquet(s"$root/cells")
-      .join(broadcast(probeCells), Seq("cell"))
-      .filter($"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id")
-    val topk = udaf(TopKByScore(k))
-    val sums = (0 until Pq8Subspaces).map(m =>
-      sum(when($"m" === m, $"pd2")).as(s"d$m"))
-    cand.join(s.read.schema(codesSchema).parquet(s"$root/codes8"), Seq("vec_id"))
-      .join(broadcast(lut), Seq("probe_id", "m", "code"))
-      .groupBy($"probe_id", $"vec_id")
-      .agg(sums.head, sums.tail: _*)
-      .select($"probe_id", $"vec_id",
-        (0 until Pq8Subspaces).map(m => col(s"d$m")).reduce(_ + _).as("adc"))
-      .groupBy($"probe_id").agg(topk(-$"adc", $"vec_id").as("nn"))
-      .select($"probe_id", posexplode($"nn"))
-      .select($"probe_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._2".as("vec_id"), round(-$"col._1", 4).as("adc"))
-      .orderBy($"probe_id", $"rank")
+      .filter(probePredicate(col("vec_id"))).localCheckpoint()
+    servePublished(s, root,
+      asProbes(withN2(Tables.embeddings(s, dir)).filter(probePredicate(col("vec_id")))),
+      subspacesAll(nprobes, Pq8Subspaces, Pq8SubDim), "8", Pq8Subspaces, k)
   }
+
+  /** [[ivfPqServe]] over the artifacts published under `root` for one PQ
+    * tier (`codebook<tier>_<m>`, `codes<tier>`); nprobe is co-tuned to the
+    * cell count the PERSISTED index actually has (an incremental root's k
+    * is sized to its base slice, not the full table) — memoized per
+    * process like every other sizing count.
+    */
+  private def servePublished(s: SparkSession, root: String, probes: DataFrame,
+      probeSub: DataFrame, tier: String, spaces: Int, k: Int): DataFrame =
+    ivfPqServe(probes,
+      cents = s.read.schema(centroidSchema).parquet(s"$root/centroids"),
+      nprobe = scaledNprobe(
+        Tables.publishedArtifactCount(s, s"$root/centroids", s"$root/_trained").toInt),
+      cells = s.read.schema(cellsSchema).parquet(s"$root/cells"),
+      codes = s.read.schema(codesSchema).parquet(s"$root/codes$tier"),
+      probeSub = probeSub, codebooks = readCodebooks(s, root, s"codebook${tier}_", spaces),
+      spaces = spaces, k = k)
 
   // ---- q151: incremental maintenance of the persisted index -------------
 
@@ -2214,7 +2091,7 @@ object VectorQueries {
     * unaffected by whether these rows were present at build time. It
     * need NOT dodge the Lloyd seeds (ADVICE r17 #1: the old fixed
     * `vec_id < k` seed range overlapped this predicate once the ladder
-    * raised k past 9, silently seeding k−1 cells): [[lloyd]] now seeds
+    * raised k past 9, silently seeding k−1 cells): [[lloydMulti]] seeds
     * from the k smallest vec_ids PRESENT in its training relation, so a
     * base slice with id gaps still seeds exactly k cells.
     */

@@ -471,13 +471,14 @@ class ScaleSpec extends AnyFunSuite {
       // extracted from the checkpointed state by distinct() over columns
       // that are constant per lang)
       "q204_bpe_train", "q225_bpe_byte_level",
-      // the PQ8 serve (q235, and q229's recall stage) checkpoints the
-      // normalized probe relation — <= MaxProbes rows by the id-cap
-      // predicate, materialized once so 16 subspace LUTs don't re-scan
-      // the corpus; q236 checkpoints the 1-row tuned-nprobe aggregate
+      // the PQ8 serve (q235, and q229's recall stage) hands the IVF-PQ
+      // serve core (ivfPqServe) a checkpointed normalized probe relation —
+      // <= MaxProbes rows by the id-cap predicate, materialized once so
+      // 16 subspace LUTs don't re-scan the corpus; q236 broadcasts the
+      // Lloyd centroids as q54 does
       "q229_reranked_ann", "q235_pq8_search", "q236_tuned_ivf_search",
-      // the 4-bit artifact serve (q148, and q151's incremental replay)
-      // rides the same adcTopKFromArtifacts probe checkpoint — the
+      // the 3-bit artifact serve (q148, and q151's incremental replay)
+      // hands ivfPqServe the same kind of probe checkpoint — the
       // localCheckpoint hides the `vec_id % m = r AND vec_id < cap`
       // id-cap evidence, but the relation is <= MaxProbes rows before
       // the checkpoint (matching the q235 entry above)

@@ -190,6 +190,49 @@ class SparkifyEtlSpec extends AnyFunSuite {
     assert(ids == Set("SOYOU1", "SOSHALLOW", "SODEEP"))
   }
 
+  /** The log-data glob the pipeline read before it listed the root. */
+  private def globbedLogs(lake: String): DataFrame =
+    spark.read.schema(graft.etl.SparkifySchemas.logSchema).json(s"$lake/log-data/*.json")
+
+  /** Throwables logged by Spark's FileStreamSink (which probes every
+    * non-streaming file read for a sink metadata dir) while `body` runs.
+    */
+  private def fileStreamSinkThrowables(body: => Unit): Seq[Throwable] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink").asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = Option(e.getThrown).foreach(seen.add)
+    }
+    capture.start()
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    try body finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("readLogData lists exactly the files of the log-data glob") {
+    assert(SparkifyEtl.readLogData(spark, fixture).inputFiles.sorted.toSeq ==
+      globbedLogs(fixture).inputFiles.sorted.toSeq)
+    assert(SparkifyEtl.readLogData(spark, fixture).inputFiles.length == 2)
+  }
+
+  test("building the log relation logs no FileNotFoundException, where the glob logs one") {
+    def notFound(ts: Seq[Throwable]) = ts.count(_.isInstanceOf[java.io.FileNotFoundException])
+    // self-check: the appender sees the glob's failed metadata-dir probe
+    assert(notFound(fileStreamSinkThrowables(globbedLogs(fixture))) == 1)
+    assert(fileStreamSinkThrowables(SparkifyEtl.readLogData(spark, fixture)).isEmpty)
+  }
+
   test("F3: the string-route to_timestamp path equals the direct timestamp_seconds path") {
     import spark.implicits._
     val events = SparkifyEtl.songplayEvents(SparkifyEtl.readLogData(spark, fixture))
@@ -248,21 +291,23 @@ class SparkifyEtlSpec extends AnyFunSuite {
     // observation-free on the reference's own data shape: inference
     // chooses exactly the pinned types, and the rows are identical.
     import org.apache.spark.sql.functions.col
-    def parity(glob: String, schema: org.apache.spark.sql.types.StructType): Unit = {
-      val explicit = spark.read.schema(schema).json(glob)
-      val inferred = spark.read.json(glob)
+    // each source is listed from its root, as the pipeline lists it
+    def parity(root: String, schema: org.apache.spark.sql.types.StructType): Unit = {
+      def reader = spark.read.option("recursiveFileLookup", "true").option("pathGlobFilter", "*.json")
+      val explicit = reader.schema(schema).json(root)
+      val inferred = reader.json(root)
       // normalized schema equality: same field set, and same type per
       // field (inference orders fields alphabetically — order is the only
       // permitted difference, normalized by the select below)
       assert(
         inferred.schema.fields.map(f => f.name -> f.dataType).toMap ==
           explicit.schema.fields.map(f => f.name -> f.dataType).toMap,
-        s"inference chose different types for $glob")
+        s"inference chose different types for $root")
       val aligned = inferred.select(schema.fieldNames.map(col): _*)
       assert(aligned.exceptAll(explicit).isEmpty && explicit.exceptAll(aligned).isEmpty,
-        s"inferred and explicit reads disagree on rows for $glob")
+        s"inferred and explicit reads disagree on rows for $root")
     }
-    parity(s"$fixture/song_data/*/*/*/*.json", graft.etl.SparkifySchemas.songSchema)
-    parity(s"$fixture/log-data/*.json", graft.etl.SparkifySchemas.logSchema)
+    parity(s"$fixture/song_data", graft.etl.SparkifySchemas.songSchema)
+    parity(s"$fixture/log-data", graft.etl.SparkifySchemas.logSchema)
   }
 }

@@ -91,6 +91,19 @@ class VectorLawsSpec extends AnyFunSuite {
       s"missing=${(exhaustive -- allCells).take(3)} extra=${(allCells -- exhaustive).take(3)}")
   }
 
+  test("IVF-PQ with nprobe = ncells degenerates to exhaustive PQ-ADC (== q138), row for row") {
+    // both serve through the one LUT builder, ADC scorer and top-k tail;
+    // probing every cell must leave the candidate set, and so every ADC
+    // sum and rank, exactly as the exhaustive scan has them
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    val exhaustive = rows(vector.VectorQueries.q138PqAdcSearch(spark, sf))
+    val allCells = rows(vector.VectorQueries.ivfPqSearch(spark, sf, nprobe = ncellsHere))
+    assert(exhaustive.nonEmpty)
+    assert(allCells == exhaustive,
+      s"missing=${exhaustive.diff(allCells).take(3)} extra=${allCells.diff(exhaustive).take(3)}")
+  }
+
   test("IVF k-means: Lloyd SSE descends monotonically across training rounds") {
     // mean-update + L2-assignment is the textbook Lloyd step, so the sum of
     // squared distances to assigned centroids cannot increase; the epsilon
@@ -346,28 +359,25 @@ class VectorLawsSpec extends AnyFunSuite {
       s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
   }
 
-  test("lloydMulti == per-subspace lloyd, bit for bit, every m (round-19 optimization)") {
-    // the keyed trainer must reproduce each per-space training EXACTLY —
-    // same seeds (k smallest present ids), same kernel assignment, same
-    // quantized-integer means — or every PQ oracle replay fails. Exact
-    // float-array equality per (m, cell) is the assertion.
+  test("lloydMulti over all subspaces == lloydMulti per subspace alone, bit for bit") {
+    // the one Lloyd loop trains all subspaces keyed by m; a row of one m
+    // must never reach another m's centroids, seeds or means — or every PQ
+    // oracle replay fails. Exact float-array equality per (m, cell) is the
+    // assertion.
     import org.apache.spark.sql.functions._
+    import vector.VectorQueries.{lloydMulti, subspacesAll, trainSlice, PqSubspaces, PqSubDim, PqCodes, PqIters}
     val raw = Tables.embeddings(spark, sf)
     val n = Tables.rowCount(spark, sf, "embeddings")
-    import vector.VectorQueries.{PqSubspaces, PqSubDim, PqCodes, PqIters}
-    val multi = vector.VectorQueries.lloydMulti(
-      vector.VectorQueries.trainSlice(
-        vector.VectorQueries.subspacesAll(raw, PqSubspaces, PqSubDim), n, PqCodes),
-      PqIters, PqCodes)
-      .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getSeq[Float](2).toList)).toMap
+    def train(eM: org.apache.spark.sql.DataFrame): Map[(Int, Long), List[Float]] =
+      lloydMulti(trainSlice(eM, n, PqCodes), PqIters, PqCodes)
+        .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getSeq[Float](2).toList)).toMap
+    val all = subspacesAll(raw, PqSubspaces, PqSubDim)
+    val multi = train(all)
     (0 until PqSubspaces).foreach { m =>
-      val single = vector.VectorQueries.lloyd(
-        vector.VectorQueries.trainSlice(
-          vector.VectorQueries.subspaceOf(raw, m), n, PqCodes), PqIters, PqCodes)
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toList)).toMap
-      assert(single.nonEmpty)
-      single.foreach { case (cell, emb) =>
-        assert(multi.get((m, cell)).contains(emb), s"m=$m cell=$cell diverged")
+      val single = train(all.filter(col("m") === m))
+      assert(single.nonEmpty && single.keys.forall(_._1 == m))
+      single.foreach { case (key, emb) =>
+        assert(multi.get(key).contains(emb), s"m=$m cell=${key._2} diverged")
       }
       assert(multi.count(_._1._1 == m) == single.size)
     }
@@ -1037,5 +1047,23 @@ class VectorLawsSpec extends AnyFunSuite {
     // CartesianProductExec would mean an unpriced scan×scan
     assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),
       s"unpriced cartesian product in the seed plan:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("VectorQueries.scala ranks probe cells in one place and runs one Lloyd loop") {
+    // comments are dropped first, so scaladoc may still quote the idioms;
+    // a new IVF variant calls rankCells / lloydMulti instead of copying them
+    def oneEach(source: String): Boolean = {
+      val code = source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+      """orderBy\(\s*\$"pd2"\s*,\s*\$"cell"\s*\)""".r.findAllIn(code).size == 1 &&
+        """for\s*\(\s*_\s*<-\s*1\s+to\s+iters\s*\)""".r.findAllIn(code).size == 1
+    }
+    val rank = "Window.partitionBy($\"probe_id\").orderBy($\"pd2\", $\"cell\")"
+    val loop = "for (_ <- 1 to iters) { step() }"
+    assert(oneEach(s"val w = $rank\n$loop /** $rank */ // $loop"))
+    assert(!oneEach(s"val w = $rank\nval w2 = $rank\n$loop"))
+    assert(!oneEach(s"val w = $rank\n$loop\n$loop"))
+    val f = java.nio.file.Paths.get("src/main/scala/graft/vector/VectorQueries.scala")
+    assert(java.nio.file.Files.isRegularFile(f), s"$f not found from ${sys.props("user.dir")}")
+    assert(oneEach(java.nio.file.Files.readString(f)))
   }
 }
