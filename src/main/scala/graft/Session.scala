@@ -41,4 +41,19 @@ object Session {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
+
+  /** Runs `body` with the SQL conf `settings` set on `s`, then restores
+    * each key's prior value, or unsets a key that had none — also when
+    * `body` throws. A query must not leave session config mutated.
+    */
+  def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prior = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -777,7 +777,8 @@ object EtlQueries {
     */
   def q125FileMetadata(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/orders.parquet")
+    val orders = s"$dir/orders.parquet"
+    Tables.parquetStable(s, orders, Seq(orders))
       .select(regexp_extract(col("_metadata.file_name"), "([^/]+)$", 1).as("file"),
         $"o_orderkey")
       .groupBy($"file")
@@ -884,13 +885,8 @@ object EtlQueries {
     val path = graft.sources.FwbFormat.writeFixture(s, dir)
     val view = s"gfwb_cbo_${graft.Scratch.tag(dir)}"
     s.read.format("graft-fwb").load(path).createOrReplaceTempView(view)
-    val flags = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prior = flags.map(k => k -> s.conf.getOption(k))
-    flags.foreach(s.conf.set(_, "true"))
-    try s.sql(connectorCboSql(view, pre)).localCheckpoint()
-    finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    graft.Session.withConf(s, graft.relational.AdvancedQueries.CboFlags.map(_ -> "true"): _*) {
+      s.sql(connectorCboSql(view, pre)).localCheckpoint()
     }
   }
 

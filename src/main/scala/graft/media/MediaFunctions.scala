@@ -821,37 +821,45 @@ object MediaFunctions {
       restartInterval: Int): Array[Byte] =
     encodeJpegImpl(width, height, coef, s420 = true, restartInterval)
 
-  private[graft] def encodeJpegImpl(width: Int, height: Int, coef: (Int, Int) => Array[Int],
-      s420: Boolean, restartInterval: Int): Array[Byte] = {
-    require(width >= 1 && height >= 1 && width < 4096 && height < 4096)
-    val out = new java.io.ByteArrayOutputStream()
+  /** JFIF framing shared by both JPEG encoders (T.81 Annex B): the output
+    * stream, markers and length-prefixed segments, the SOI/APP0/DQT/SOFn/DHT
+    * header, and the entropy-coded bit writer — MSB first, 0xFF bytes
+    * 0x00-stuffed, 1-padded to the byte boundary at every [[flushPad]].
+    */
+  private final class JfifWriter {
+    private val out = new java.io.ByteArrayOutputStream()
+    private var acc = 0
+    private var nbits = 0
+
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+
     def seg(m: Int, p: Array[Byte]): Unit = {
       marker(m); out.write((p.length + 2) >> 8); out.write((p.length + 2) & 0xff)
       out.write(p, 0, p.length)
     }
-    marker(0xd8) // SOI
-    seg(0xe0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = new Array[Byte](2 * 65)
-    for (t <- 0 to 1) {
-      dqt(65 * t) = t.toByte // Pq=0 (8-bit), Tq=t
-      for (z <- 0 until 64) dqt(65 * t + 1 + z) = JpegQuant(t)(JpegZigzag(z)).toByte
+
+    /** SOI, APP0 (JFIF 1.1), both Annex K DQTs, the `sof` frame header
+      * (3 components; `lumaSamp` is the luma H·V byte, chroma at 1×1) and
+      * one DHT segment holding `tables` as (Tc·Th byte, spec) pairs.
+      */
+    def header(sof: Int, width: Int, height: Int, lumaSamp: Int,
+        tables: Seq[(Int, (Array[Int], Array[Int]))]): Unit = {
+      marker(0xd8)
+      seg(0xe0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
+      val dqt = new Array[Byte](2 * 65)
+      for (t <- 0 to 1) {
+        dqt(65 * t) = t.toByte // Pq=0 (8-bit), Tq=t
+        for (z <- 0 until 64) dqt(65 * t + 1 + z) = JpegQuant(t)(JpegZigzag(z)).toByte
+      }
+      seg(0xdb, dqt)
+      seg(sof, Array[Byte](8, (height >> 8).toByte, (height & 0xff).toByte,
+        (width >> 8).toByte, (width & 0xff).toByte, 3,
+        1, lumaSamp.toByte, 0, 2, 0x11, 1, 3, 0x11, 1))
+      seg(0xc4, tables.toArray.flatMap {
+        case (tc, (bits, vals)) => (tc +: bits).map(_.toByte) ++ vals.map(_.toByte)
+      })
     }
-    seg(0xdb, dqt)
-    val lumaSamp: Byte = if (s420) 0x22 else 0x11
-    seg(0xc0, Array[Byte](8, (height >> 8).toByte, (height & 0xff).toByte,
-      (width >> 8).toByte, (width & 0xff).toByte, 3,
-      1, lumaSamp, 0, 2, 0x11, 1, 3, 0x11, 1))
-    val dht = Array(0x00, 0x10, 0x01, 0x11).zip(JpegHuffSpecs).flatMap {
-      case (tc, (bits, vals)) => (tc +: bits).map(_.toByte) ++ vals.map(_.toByte)
-    }
-    seg(0xc4, dht)
-    if (restartInterval > 0)
-      seg(0xdd, Array[Byte]((restartInterval >> 8).toByte, (restartInterval & 0xff).toByte))
-    seg(0xda, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0))
-    // entropy-coded segment: MSB-first bits, 0xFF byte-stuffed, 1-padded
-    var acc = 0
-    var nbits = 0
+
     def putBits(code: Int, len: Int): Unit = {
       var i = len - 1
       while (i >= 0) {
@@ -863,10 +871,26 @@ object MediaFunctions {
         i -= 1
       }
     }
-    def flushPad(): Unit = while (nbits != 0) { // 1-pad to the byte boundary
-      acc = (acc << 1) | 1; nbits += 1
-      if (nbits == 8) { out.write(acc); if (acc == 0xff) out.write(0x00); acc = 0; nbits = 0 }
-    }
+
+    def flushPad(): Unit = while (nbits != 0) putBits(1, 1)
+
+    /** Pad the last entropy byte, write EOI, return the stream. */
+    def finish(): Array[Byte] = { flushPad(); marker(0xd9); out.toByteArray }
+  }
+
+  /** The Annex K DHT list: DC luma, AC luma, DC chroma, AC chroma. */
+  private val JpegBaselineDht: Seq[(Int, (Array[Int], Array[Int]))] =
+    Seq(0x00, 0x10, 0x01, 0x11).zip(JpegHuffSpecs)
+
+  private[graft] def encodeJpegImpl(width: Int, height: Int, coef: (Int, Int) => Array[Int],
+      s420: Boolean, restartInterval: Int): Array[Byte] = {
+    require(width >= 1 && height >= 1 && width < 4096 && height < 4096)
+    val w = new JfifWriter
+    import w.putBits
+    w.header(0xc0, width, height, if (s420) 0x22 else 0x11, JpegBaselineDht)
+    if (restartInterval > 0)
+      w.seg(0xdd, Array[Byte]((restartInterval >> 8).toByte, (restartInterval & 0xff).toByte))
+    w.seg(0xda, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0))
     val pred = Array(0, 0, 0)
     val dcT = Array(JpegEncTables(0), JpegEncTables(2), JpegEncTables(2))
     val acT = Array(JpegEncTables(1), JpegEncTables(3), JpegEncTables(3))
@@ -893,36 +917,26 @@ object MediaFunctions {
       }
       if (lastNz < 63) { val (ec, el) = acT(c)(0x00); putBits(ec, el) }
     }
-    if (!s420) {
-      val bw = (width + 7) / 8
-      val bh = (height + 7) / 8
-      for (mcu <- 0 until bw * bh) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          flushPad()
-          marker(0xd0 + ((mcu / restartInterval - 1) % 8))
-          pred(0) = 0; pred(1) = 0; pred(2) = 0
-        }
-        for (c <- 0 until 3) encodeBlock(c, coef(c, mcu))
+    // an MCU is one block per component (4:4:4) or 2×2 luma blocks plus
+    // one per chroma (4:2:0), raster-ordered over the mcu grid
+    val mcuPx = if (s420) 16 else 8
+    val mcuW = (width + mcuPx - 1) / mcuPx
+    val mcuH = (height + mcuPx - 1) / mcuPx
+    for (mcu <- 0 until mcuW * mcuH) {
+      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+        w.flushPad()
+        w.marker(0xd0 + ((mcu / restartInterval - 1) % 8))
+        pred(0) = 0; pred(1) = 0; pred(2) = 0
       }
-    } else {
-      val mcuW = (width + 15) / 16
-      val mcuH = (height + 15) / 16
-      for (mcu <- 0 until mcuW * mcuH) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          flushPad()
-          marker(0xd0 + ((mcu / restartInterval - 1) % 8))
-          pred(0) = 0; pred(1) = 0; pred(2) = 0
-        }
+      if (s420) {
         val mx = mcu % mcuW; val my = mcu / mcuW
         for (v <- 0 to 1; u <- 0 to 1)
           encodeBlock(0, coef(0, (my * 2 + v) * (2 * mcuW) + (mx * 2 + u)))
-        encodeBlock(1, coef(1, mcu))
-        encodeBlock(2, coef(2, mcu))
-      }
+      } else encodeBlock(0, coef(0, mcu))
+      encodeBlock(1, coef(1, mcu))
+      encodeBlock(2, coef(2, mcu))
     }
-    flushPad()
-    marker(0xd9) // EOI
-    out.toByteArray
+    w.finish()
   }
 
   /** One scan of a progressive script: component INDEXES (0..2), the
@@ -968,46 +982,9 @@ object MediaFunctions {
     val bh = (height + 7) / 8
     // materialize the spectrum once: script scans revisit blocks
     val zz = Array.tabulate(3, bw * bh)((c, bi) => coef(c, bi))
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, p: Array[Byte]): Unit = {
-      marker(m); out.write((p.length + 2) >> 8); out.write((p.length + 2) & 0xff)
-      out.write(p, 0, p.length)
-    }
-    marker(0xd8)
-    seg(0xe0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = new Array[Byte](2 * 65)
-    for (t <- 0 to 1) {
-      dqt(65 * t) = t.toByte
-      for (z <- 0 until 64) dqt(65 * t + 1 + z) = JpegQuant(t)(JpegZigzag(z)).toByte
-    }
-    seg(0xdb, dqt)
-    seg(0xc2, Array[Byte](8, (height >> 8).toByte, (height & 0xff).toByte,
-      (width >> 8).toByte, (width & 0xff).toByte, 3,
-      1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1))
-    val dht = (Array(0x00, 0x10, 0x01, 0x11).zip(JpegHuffSpecs) :+
-        (0x12 -> JpegProgAcSpec)).flatMap {
-      case (tc, (bits, vals)) => (tc +: bits).map(_.toByte) ++ vals.map(_.toByte)
-    }
-    seg(0xc4, dht)
-    // per-scan entropy state
-    var acc = 0
-    var nbits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((code >> i) & 1); nbits += 1
-        if (nbits == 8) {
-          out.write(acc); if (acc == 0xff) out.write(0x00)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    def flushPad(): Unit = while (nbits != 0) {
-      acc = (acc << 1) | 1; nbits += 1
-      if (nbits == 8) { out.write(acc); if (acc == 0xff) out.write(0x00); acc = 0; nbits = 0 }
-    }
+    val w = new JfifWriter
+    import w.{flushPad, putBits, seg}
+    w.header(0xc2, width, height, 0x11, JpegBaselineDht :+ (0x12 -> JpegProgAcSpec))
     val dcT = Array(JpegEncTables(0), JpegEncTables(2), JpegEncTables(2))
     for (scan <- script) {
       val ProgScan(comps, ss, se, ah, al) = scan
@@ -1124,10 +1101,8 @@ object MediaFunctions {
         flushEob()
       }
       flushPad()
-      acc = 0; nbits = 0
     }
-    marker(0xd9)
-    out.toByteArray
+    w.finish()
   }
 
   /** Decode a baseline JFIF payload. Total like the other codecs — None,

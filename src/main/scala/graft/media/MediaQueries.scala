@@ -1,6 +1,6 @@
 package graft.media
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -197,20 +197,19 @@ object MediaQueries {
     * per payload — bounded regardless of corpus row width). The encode is
     * map-side typed work; filters belong on `docs` BEFORE this call.
     */
-  private def imageRecords(docs: DataFrame, container: String) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val w = (4 + id % 13).toInt
-      val h = (3 + id % 7).toInt
-      val rgb = syntheticRgb(id, w, h)
-      container match {
-        case "bmp" =>
-          MediaFunctions.MediaRecord(id, MediaFunctions.encodeBmp(w, h, rgb), "bmp")
-        case "png" =>
-          MediaFunctions.MediaRecord(id, MediaFunctions.encodePng(w, h, rgb), "png")
-        case _ =>
-          MediaFunctions.MediaRecord(id, MediaFunctions.encodePpm(w, h, rgb), "ppm")
-      }
+  private def imageRecords(docs: DataFrame, container: String) =
+    payloads(docs, container)(imageBytes(_, container))
+
+  /** Doc `id`'s [[syntheticRgb]] raster as `container` ("bmp", "png",
+    * else PPM) bytes. */
+  private def imageBytes(id: Long, container: String): Array[Byte] = {
+    val w = (4 + id % 13).toInt
+    val h = (3 + id % 7).toInt
+    val rgb = syntheticRgb(id, w, h)
+    container match {
+      case "bmp" => MediaFunctions.encodeBmp(w, h, rgb)
+      case "png" => MediaFunctions.encodePng(w, h, rgb)
+      case _ => MediaFunctions.encodePpm(w, h, rgb)
     }
   }
 
@@ -446,11 +445,7 @@ object MediaQueries {
     import docs.sparkSession.implicits._
     docIds(docs).map { id =>
       (id % 5) match {
-        case 0 =>
-          val w = (4 + id % 13).toInt
-          val h = (3 + id % 7).toInt
-          MediaFunctions.MediaRecord(
-            id, MediaFunctions.encodePpm(w, h, syntheticRgb(id, w, h)), "ppm")
+        case 0 => MediaFunctions.MediaRecord(id, imageBytes(id, "ppm"), "ppm")
         case 1 => MediaFunctions.MediaRecord(id, jpegMagicBytes(id), "ppm")
         case 2 => MediaFunctions.MediaRecord(id, pngMagicBytes(id), "bmp")
         case 3 => MediaFunctions.MediaRecord(id, floatWavBytes(id), "wav")
@@ -555,21 +550,6 @@ object MediaQueries {
   private[graft] val PngPoisonKinds =
     Array("interlaced", "depth16", "badcrc", "truncated")
 
-  /** One poisoned PNG per doc (callers pre-filter to doc_id % 5 = 0);
-    * kind rotates by (doc_id / 5) % 4 so the oracle can replay the
-    * assignment with integer division.
-    */
-  private def pngPoisonRecords(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val w = (4 + id % 13).toInt
-      val h = (3 + id % 7).toInt
-      val good = MediaFunctions.encodePng(w, h, syntheticRgb(id, w, h))
-      MediaFunctions.MediaRecord(
-        id, pngPoison(PngPoisonKinds(((id / 5) % 4).toInt), good), "png")
-    }
-  }
-
   /** REAL PNG decode under the oracle gate (VERDICT r15 #3) — the
     * dominant production image container, pure-JVM (zlib via
     * java.util.zip.Inflater + the five filter types; the encoder cycles
@@ -584,7 +564,8 @@ object MediaQueries {
     *   four poison kinds — [[pngPoison]] variants that must quarantine
     *     to the last record (n_quarantined = n_records, pinned by the
     *     oracle; a silent partial decode flips a hashed count, not a
-    *     log line).
+    *     log line), the rows [[poisonRows]] builds for every codec
+    *     pipeline.
     * All decode work is map-side typed iteration; the only shuffles are
     * the id-equi-join for invariance and the 5-row rollup.
     */
@@ -594,32 +575,15 @@ object MediaQueries {
     val png = MediaFunctions.decodeFrames(imageRecords(docs, "png")).toDF()
     val ppm = MediaFunctions.decodeFrames(imageRecords(docs, "ppm")).toDF()
       .select($"id", $"checksum".as("ppm_sum"))
-    val valid = png.join(ppm, "id")
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum(when($"checksum" === $"ppm_sum", 1L).otherwise(0L))
-          .as("n_container_invariant"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
+    val valid = frameRollup(png.join(ppm, "id").groupBy(),
+        sum(when($"checksum" === $"ppm_sum", 1L).otherwise(0L)).as("n_container_invariant"))
       .select(lit("valid").as("kind"), $"n_records", $"n_quarantined",
         $"n_container_invariant", $"total_pixels", $"checksum_xor")
-    val poison = MediaFunctions.decodeFrames(
-        pngPoisonRecords(docs.filter($"doc_id" % 5 === 0))).toDF()
-      .groupBy(element_at(
-        typedLit(PngPoisonKinds.toSeq), (expr("(id div 5) % 4") + 1).cast("int"))
-        .as("kind"))
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        min(lit(0L)).as("n_container_invariant"), // poison never joins ppm
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
+    val poison = poisonRows(docs, "png", PngPoisonKinds,
+      (kind, id) => pngPoison(kind, imageBytes(id, "png")),
+      min(lit(0L)).as("n_container_invariant")) // poison never joins ppm
     valid.unionByName(poison).orderBy($"kind")
   }
-
 
   /** The id spine of every fixture generator, REPARTITIONED to the
     * session's parallelism before the expensive per-row encode/decode
@@ -642,6 +606,112 @@ object MediaQueries {
     import docs.sparkSession.implicits._
     docs.select($"doc_id").as[Long]
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+  }
+
+  /** One `format` record per doc, its payload `bytes(id)` encoded
+    * map-side on the [[docIds]] spine. */
+  private def payloads(docs: DataFrame, format: String)(bytes: Long => Array[Byte]) = {
+    import docs.sparkSession.implicits._
+    docIds(docs).map(id => MediaFunctions.MediaRecord(id, bytes(id), format))
+  }
+
+  // ---- the valid-plus-poison codec pipeline (q231, q233, q234, q237) ----
+
+  /** The decode rollup every codec pipeline row carries: record and
+    * quarantine counts, then `extra` (q231's container-invariance
+    * column), then decoded pixels and the XOR of the decoded luma
+    * checksums (0 when every record quarantined).
+    */
+  private def frameRollup(g: RelationalGroupedDataset, extra: Column*): DataFrame =
+    g.agg(count(lit(1)).as("n_records"),
+      Seq(sum(when(col("width") === 0, 1L).otherwise(0L)).as("n_quarantined")) ++ extra ++
+        Seq(sum(col("n_pixels")).as("total_pixels"),
+          coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
+            .as("checksum_xor")): _*)
+
+  /** The poison rows of a codec pipeline: each doc with doc_id % 5 = 0
+    * gets one `poison(kind, id)` payload, the kind rotating by
+    * (doc_id / 5) % 4 — stated once in Scala (which bytes a doc gets) and
+    * once in SQL (which row they land in), so the oracle replays the
+    * assignment with integer division. One rollup row per kind; every
+    * poison must quarantine to the last record.
+    */
+  private def poisonRows(docs: DataFrame, format: String, kinds: Array[String],
+      poison: (String, Long) => Array[Byte], extra: Column*): DataFrame = {
+    require(kinds.length == 4, s"poison kinds rotate mod 4: ${kinds.mkString(", ")}")
+    val recs = payloads(docs.filter(col("doc_id") % 5 === 0), format)(id =>
+      poison(kinds(((id / 5) % 4).toInt), id))
+    frameRollup(MediaFunctions.decodeFrames(recs).toDF().groupBy(element_at(
+        typedLit(kinds.toSeq), (expr("(id div 5) % 4") + 1).cast("int")).as("kind")),
+      extra: _*)
+  }
+
+  /** The valid-plus-poison pipeline q233, q234 and q237 are: every doc's
+    * `valid(id)` payload decoded into one `valid` row, plus the
+    * [[poisonRows]]. All decode work is map-side typed iteration; the
+    * only shuffles are the id spine and the rollups.
+    */
+  private def codecPipeline(docs: DataFrame, format: String, valid: Long => Array[Byte],
+      kinds: Array[String], poison: (String, Long) => Array[Byte]): DataFrame =
+    frameRollup(MediaFunctions.decodeFrames(payloads(docs, format)(valid)).toDF().groupBy())
+      .select(lit("valid").as("kind"), col("n_records"), col("n_quarantined"),
+        col("total_pixels"), col("checksum_xor"))
+      .unionByName(poisonRows(docs, format, kinds, poison))
+      .orderBy(col("kind"))
+
+  // ---- the JPEG segment walk every poison surgery shares ----------------
+
+  private def jpegMissing(jpg: Array[Byte], what: String): Nothing =
+    throw new IllegalArgumentException(
+      s"no $what before byte ${jpg.length} — input is not a JPEG fixture of this tier")
+
+  /** End of the marker segment at `off`: marker, length field, payload. */
+  private def jpegSegEnd(jpg: Array[Byte], off: Int): Int =
+    off + 2 + (((jpg(off + 2) & 0xff) << 8) | (jpg(off + 3) & 0xff))
+
+  /** Offset of the first FF `m` marker after SOI, stepping over whole
+    * segments. A stream without it fails with a named
+    * IllegalArgumentException before any read past its end, never with an
+    * executor-side ArrayIndexOutOfBoundsException (ADVICE r18 #3).
+    */
+  private def jpegMarkerAt(jpg: Array[Byte], m: Int): Int = {
+    var off = 2
+    while ({
+      if (off + 3 >= jpg.length) jpegMissing(jpg, f"FF$m%02X marker")
+      !((jpg(off) & 0xff) == 0xff && (jpg(off + 1) & 0xff) == m)
+    }) off = jpegSegEnd(jpg, off)
+    off
+  }
+
+  /** Offset of the `nth` (0-based) FF pair at or after `from` whose
+    * second byte passes `is` — a byte scan, exact across entropy data
+    * because an in-stream 0xFF is always 0x00-stuffed.
+    */
+  private def jpegByteScan(jpg: Array[Byte], from: Int, nth: Int, what: String)(
+      is: Int => Boolean): Int = {
+    var seen = 0
+    var i = from
+    while (i + 1 < jpg.length) {
+      if ((jpg(i) & 0xff) == 0xff && is(jpg(i + 1) & 0xff)) {
+        if (seen == nth) return i
+        seen += 1
+      }
+      i += 1
+    }
+    jpegMissing(jpg, what)
+  }
+
+  /** The `truncated` poison of every JPEG family: 4 entropy bytes cut
+    * before EOI — bit starvation mid-MCU (padding is < 1 byte, so the
+    * cut always removes real payload).
+    */
+  private def jpegTruncated(jpg: Array[Byte]): Array[Byte] = {
+    require(jpg.length > 12, s"JPEG too short to truncate: ${jpg.length} bytes")
+    val out = new Array[Byte](jpg.length - 4)
+    System.arraycopy(jpg, 0, out, 0, jpg.length - 6) // cut 4 pre-EOI bytes
+    out(out.length - 2) = 0xff.toByte
+    out(out.length - 1) = 0xd9.toByte
+    out
   }
 
   // ---- q233: JPEG pipeline (VERDICT r16 #4 — the compressed-DCT
@@ -671,16 +741,12 @@ object MediaQueries {
   private[graft] def jpegDims(id: Long): (Int, Int) =
     ((8 + id % 13).toInt, (8 + id % 11).toInt)
 
-  /** Real baseline-JFIF bytes per doc (≤ 20×18 px, 3 components 4:4:4,
-    * non-multiple-of-8 dims exercise the MCU crop). Map-side typed work.
+  /** Real baseline-JFIF bytes for doc `id` (≤ 20×18 px, 3 components
+    * 4:4:4, non-multiple-of-8 dims exercise the MCU crop).
     */
-  private def jpegRecords(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val (w, h) = jpegDims(id)
-      MediaFunctions.MediaRecord(
-        id, MediaFunctions.encodeJpeg(w, h, jpegQuantCoefs(id)), "jpg")
-    }
+  private def jpegBytes(id: Long): Array[Byte] = {
+    val (w, h) = jpegDims(id)
+    MediaFunctions.encodeJpeg(w, h, jpegQuantCoefs(id))
   }
 
   /** Marker surgery on a VALID [[MediaFunctions.encodeJpeg]] output —
@@ -700,47 +766,21 @@ object MediaQueries {
     * mid-MCU; padding is < 1 byte so a 4-byte cut always removes real
     * payload).
     */
-  private[graft] def jpegPoison(kind: String, jpg: Array[Byte]): Array[Byte] = {
-    def markerAt(m: Int): Int = {
-      var off = 2
-      while (!((jpg(off) & 0xff) == 0xff && (jpg(off + 1) & 0xff) == m))
-        off += 2 + (((jpg(off + 2) & 0xff) << 8) | (jpg(off + 3) & 0xff))
-      off
-    }
+  private[graft] def jpegPoison(kind: String, jpg: Array[Byte]): Array[Byte] =
     kind match {
       case "progressive" =>
-        val o = jpg.clone(); o(markerAt(0xc0) + 1) = 0xc2.toByte; o
+        val o = jpg.clone(); o(jpegMarkerAt(jpg, 0xc0) + 1) = 0xc2.toByte; o
       case "dqt16" =>
-        val o = jpg.clone(); val d = markerAt(0xdb)
+        val o = jpg.clone(); val d = jpegMarkerAt(jpg, 0xdb)
         o(d + 4) = (0x10 | (o(d + 4) & 0x0f)).toByte; o
       case "subsampled" =>
-        val o = jpg.clone(); val f = markerAt(0xc0)
+        val o = jpg.clone(); val f = jpegMarkerAt(jpg, 0xc0)
         o(f + 11) = 0x21.toByte; o // first component's H·V factors
-      case _ => // truncated
-        require(jpg.length > 8)
-        val out = new Array[Byte](jpg.length - 4)
-        System.arraycopy(jpg, 0, out, 0, jpg.length - 6) // cut 4 pre-EOI bytes
-        out(out.length - 2) = 0xff.toByte
-        out(out.length - 1) = 0xd9.toByte
-        out
+      case _ => jpegTruncated(jpg)
     }
-  }
 
   private[graft] val JpegPoisonKinds =
     Array("progressive", "dqt16", "subsampled", "truncated")
-
-  /** One poisoned JPEG per doc (callers pre-filter to doc_id % 5 = 0);
-    * kind rotates by (doc_id / 5) % 4, replayable with integer division.
-    */
-  private def jpegPoisonRecords(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val (w, h) = jpegDims(id)
-      val good = MediaFunctions.encodeJpeg(w, h, jpegQuantCoefs(id))
-      MediaFunctions.MediaRecord(
-        id, jpegPoison(JpegPoisonKinds(((id / 5) % 4).toInt), good), "jpg")
-    }
-  }
 
   /** REAL JPEG decode under the oracle gate (VERDICT r16 #4): every doc's
     * coefficient-domain fixture encoded to real baseline-JFIF bytes,
@@ -750,34 +790,12 @@ object MediaQueries {
     * replaying the GENERATOR FORMULAS through the identical integer
     * post-entropy arithmetic — the JPEG bytes exist only Spark-side, so
     * any entropy/marker bug lands in checksum_xor. Four poison kinds
-    * ([[jpegPoison]]) must quarantine to the last record. All decode work
-    * is map-side typed iteration; the only shuffle is the rollup.
+    * ([[jpegPoison]]) must quarantine to the last record. One
+    * [[codecPipeline]] call.
     */
-  def q233JpegPipeline(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val valid = MediaFunctions.decodeFrames(jpegRecords(docs)).toDF()
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
-      .select(lit("valid").as("kind"), $"n_records", $"n_quarantined",
-        $"total_pixels", $"checksum_xor")
-    val poison = MediaFunctions.decodeFrames(
-        jpegPoisonRecords(docs.filter($"doc_id" % 5 === 0))).toDF()
-      .groupBy(element_at(
-        typedLit(JpegPoisonKinds.toSeq), (expr("(id div 5) % 4") + 1).cast("int"))
-        .as("kind"))
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
-    valid.unionByName(poison).orderBy($"kind")
-  }
+  def q233JpegPipeline(s: SparkSession, dir: String): DataFrame =
+    codecPipeline(Tables.documents(s, dir), "jpg", jpegBytes, JpegPoisonKinds,
+      (kind, id) => jpegPoison(kind, jpegBytes(id)))
 
   // ---- q237: PROGRESSIVE JPEG pipeline (VERDICT r18 next #4 — the
   // ---- second-most-common real-world coding, decided as DECODE) --------
@@ -825,17 +843,13 @@ object MediaQueries {
     }
   }
 
-  /** Real progressive-JFIF bytes per doc — [[jpegQuantCoefs]] spectra
-    * (distinct dims grid) delivered across [[jpegProgScript]]'s scans.
+  /** Real progressive-JFIF bytes for doc `id` — [[jpegQuantCoefs]]
+    * spectra (distinct dims grid) delivered across [[jpegProgScript]]'s
+    * scans.
     */
-  private def jpegProgRecords(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val (w, h) = jpegProgDims(id)
-      MediaFunctions.MediaRecord(
-        id, MediaFunctions.encodeJpegProgressive(w, h, jpegQuantCoefs(id),
-          jpegProgScript(id)), "jpg")
-    }
+  private def jpegProgBytes(id: Long): Array[Byte] = {
+    val (w, h) = jpegProgDims(id)
+    MediaFunctions.encodeJpegProgressive(w, h, jpegQuantCoefs(id), jpegProgScript(id))
   }
 
   /** Marker surgery on a VALID progressive fixture — four corrupt
@@ -853,100 +867,36 @@ object MediaQueries {
     * surgery targets exists by construction.
     */
   private[graft] def jpegProgPoison(kind: String, jpg: Array[Byte]): Array[Byte] = {
-    def fail(what: String): Nothing =
-      throw new IllegalArgumentException(
-        s"jpegProgPoison: no $what before byte ${jpg.length} — " +
-          "input is not an encodeJpegProgressive fixture")
-    def markerAt(m: Int): Int = {
-      var off = 2
-      while (off + 3 < jpg.length &&
-        !((jpg(off) & 0xff) == 0xff && (jpg(off + 1) & 0xff) == m))
-        off += 2 + (((jpg(off + 2) & 0xff) << 8) | (jpg(off + 3) & 0xff))
-      if (off + 3 >= jpg.length) fail(f"FF$m%02X marker")
-      off
-    }
-    // nth (0-based) SOS marker: FF DA never occurs inside entropy data
-    // (in-stream 0xFF is always 0x00-stuffed), so a byte scan is exact
-    def sosAt(nth: Int): Int = {
-      var cnt = 0
-      var i = 2
-      while (i + 1 < jpg.length) {
-        if ((jpg(i) & 0xff) == 0xff && (jpg(i + 1) & 0xff) == 0xda) {
-          if (cnt == nth) return i
-          cnt += 1
-        }
-        i += 1
-      }
-      fail(s"SOS #$nth")
-    }
+    // nth (0-based) SOS marker
+    def sosAt(nth: Int): Int = jpegByteScan(jpg, 2, nth, s"FFDA (SOS #$nth) marker")(_ == 0xda)
     kind match {
       case "s422p" =>
-        val o = jpg.clone(); o(markerAt(0xc2) + 11) = 0x21.toByte; o
+        val o = jpg.clone(); o(jpegMarkerAt(jpg, 0xc2) + 11) = 0x21.toByte; o
       case "band_overlap" => // 2nd scan = AC first, comp 0: Ss 1 → 0
         val o = jpg.clone(); o(sosAt(1) + 7) = 0; o
       case "ah_skip" => // 6th scan = AC refine, comp 0: (Ah,Al) 1,0 → 2,1
         val o = jpg.clone(); o(sosAt(5) + 9) = 0x21.toByte; o
-      case _ => // truncated
-        require(jpg.length > 12)
-        val out = new Array[Byte](jpg.length - 4)
-        System.arraycopy(jpg, 0, out, 0, jpg.length - 6)
-        out(out.length - 2) = 0xff.toByte
-        out(out.length - 1) = 0xd9.toByte
-        out
+      case _ => jpegTruncated(jpg)
     }
   }
 
   private[graft] val JpegProgPoisonKinds =
     Array("s422p", "band_overlap", "ah_skip", "truncated")
 
-  /** One poisoned progressive JPEG per doc (callers pre-filter doc_id %
-    * 5 = 0); kind rotates by (doc_id / 5) % 4.
-    */
-  private def jpegProgPoisonRecords(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val good = MediaFunctions.encodeJpegProgressive(
-        24, 16, jpegQuantCoefs(id), jpegProgScript(1))
-      MediaFunctions.MediaRecord(
-        id, jpegProgPoison(JpegProgPoisonKinds(((id / 5) % 4).toInt), good), "jpg")
-    }
-  }
-
   /** REAL progressive-JPEG decode under the oracle gate (VERDICT r18
     * next #4): per doc, the coefficient spectrum delivered across a
     * per-doc scan script — spectral selection, successive approximation
     * (DC bit refinements, AC correction-bit refinements), EOB runs —
     * decoded by the extended codec and adjudicated against the
-    * script-INDEPENDENT oracle (the same q233-family integer replay of
-    * the generator spectra, on q237's dims grid). Four poison kinds
-    * must quarantine to the last record. All decode work is map-side
-    * typed iteration; the only shuffle is the rollup.
+    * script-INDEPENDENT oracle ([[jpeg444PipelineOracle]]'s integer
+    * replay of the generator spectra, shared with q233, on q237's dims
+    * grid). Four poison kinds ([[jpegProgPoison]]) must quarantine to the
+    * last record. One [[codecPipeline]] call.
     */
-  def q237JpegProgressivePipeline(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val valid = MediaFunctions.decodeFrames(jpegProgRecords(docs)).toDF()
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
-      .select(lit("valid").as("kind"), $"n_records", $"n_quarantined",
-        $"total_pixels", $"checksum_xor")
-    val poison = MediaFunctions.decodeFrames(
-        jpegProgPoisonRecords(docs.filter($"doc_id" % 5 === 0))).toDF()
-      .groupBy(element_at(
-        typedLit(JpegProgPoisonKinds.toSeq), (expr("(id div 5) % 4") + 1).cast("int"))
-        .as("kind"))
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
-    valid.unionByName(poison).orderBy($"kind")
-  }
+  def q237JpegProgressivePipeline(s: SparkSession, dir: String): DataFrame =
+    codecPipeline(Tables.documents(s, dir), "jpg", jpegProgBytes, JpegProgPoisonKinds,
+      (kind, id) => jpegProgPoison(kind, MediaFunctions.encodeJpegProgressive(
+        24, 16, jpegQuantCoefs(id), jpegProgScript(1))))
 
   // ---- q234: 4:2:0 JPEG pipeline (VERDICT r17 next #4 — the dominant
   // ---- real-world sampling form, plus DRI/RSTn restart markers) --------
@@ -968,17 +918,13 @@ object MediaQueries {
     */
   private[graft] def jpeg420Ri(id: Long): Int = (id % 5).toInt
 
-  /** Real 4:2:0 baseline-JFIF bytes per doc ([[jpegQuantCoefs]] spectra —
-    * the same coefficient-domain generator as q233, indexed over the
-    * larger 4:2:0 block grid). Map-side typed work.
+  /** Real 4:2:0 baseline-JFIF bytes for doc `id` ([[jpegQuantCoefs]]
+    * spectra — the same coefficient-domain generator as q233, indexed
+    * over the larger 4:2:0 block grid).
     */
-  private def jpeg420Records(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val (w, h) = jpeg420Dims(id)
-      MediaFunctions.MediaRecord(
-        id, MediaFunctions.encodeJpeg420(w, h, jpegQuantCoefs(id), jpeg420Ri(id)), "jpg")
-    }
+  private def jpeg420Bytes(id: Long): Array[Byte] = {
+    val (w, h) = jpeg420Dims(id)
+    MediaFunctions.encodeJpeg420(w, h, jpegQuantCoefs(id), jpeg420Ri(id))
   }
 
   /** Marker surgery on a VALID [[MediaFunctions.encodeJpeg420]] output —
@@ -993,32 +939,9 @@ object MediaQueries {
     * and 4) so the rst poisons always have a marker to corrupt.
     */
   private[graft] def jpeg420Poison(kind: String, jpg: Array[Byte]): Array[Byte] = {
-    // callers guarantee the markers by construction (fixed 40×24, ri=2),
-    // so a scan running off the end means a broken FIXTURE — fail with a
-    // named diagnostic instead of an executor-side
-    // ArrayIndexOutOfBoundsException (ADVICE r18 #3)
-    def require2(off: Int, what: String): Unit =
-      if (off + 1 >= jpg.length)
-        throw new IllegalArgumentException(
-          s"jpeg420Poison: no $what marker before byte ${jpg.length} — " +
-            "input is not an encodeJpeg420 fixture")
-    def markerAt(m: Int): Int = {
-      var off = 2
-      while ({ require2(off, f"FF$m%02X")
-        !((jpg(off) & 0xff) == 0xff && (jpg(off + 1) & 0xff) == m) })
-        off += 2 + (((jpg(off + 2) & 0xff) << 8) | (jpg(off + 3) & 0xff))
-      off
-    }
-    // first in-stream restart marker: FF inside entropy data is always
-    // stuffed (FF 00), so the first FF D0..D7 past SOS IS a restart
-    def firstRst: Int = {
-      var off = markerAt(0xda)
-      off += 2 + (((jpg(off + 2) & 0xff) << 8) | (jpg(off + 3) & 0xff))
-      while ({ require2(off, "RSTn")
-        !((jpg(off) & 0xff) == 0xff &&
-          (jpg(off + 1) & 0xff) >= 0xd0 && (jpg(off + 1) & 0xff) <= 0xd7) }) off += 1
-      off
-    }
+    // first restart marker past the SOS header
+    def firstRst: Int = jpegByteScan(jpg, jpegSegEnd(jpg, jpegMarkerAt(jpg, 0xda)), 0,
+      "FFD0-FFD7 (RSTn) marker")(m => m >= 0xd0 && m <= 0xd7)
     kind match {
       case "rst_drop" =>
         val at = firstRst
@@ -1030,26 +953,14 @@ object MediaQueries {
         val o = jpg.clone(); val at = firstRst
         o(at + 1) = (0xd0 + (((o(at + 1) & 0x0f) + 1) % 8)).toByte; o
       case "s422" =>
-        val o = jpg.clone(); o(markerAt(0xc0) + 11) = 0x21.toByte; o
+        val o = jpg.clone(); o(jpegMarkerAt(jpg, 0xc0) + 11) = 0x21.toByte; o
       case _ => // dri_len
-        val o = jpg.clone(); o(markerAt(0xdd) + 3) = 3.toByte; o
+        val o = jpg.clone(); o(jpegMarkerAt(jpg, 0xdd) + 3) = 3.toByte; o
     }
   }
 
   private[graft] val Jpeg420PoisonKinds =
     Array("rst_drop", "rst_reseq", "s422", "dri_len")
-
-  /** One poisoned 4:2:0 JPEG per doc (callers pre-filter doc_id % 5 = 0);
-    * kind rotates by (doc_id / 5) % 4, replayable with integer division.
-    */
-  private def jpeg420PoisonRecords(docs: DataFrame) = {
-    import docs.sparkSession.implicits._
-    docIds(docs).map { id =>
-      val good = MediaFunctions.encodeJpeg420(40, 24, jpegQuantCoefs(id), 2)
-      MediaFunctions.MediaRecord(
-        id, jpeg420Poison(Jpeg420PoisonKinds(((id / 5) % 4).toInt), good), "jpg")
-    }
-  }
 
   /** REAL 4:2:0 JPEG decode under the oracle gate (VERDICT r17 next #4):
     * per doc, a 2×2-luma MCU stream with per-doc restart intervals,
@@ -1060,35 +971,14 @@ object MediaQueries {
     * 4:2:0 geometry — luma addressed on the 2·mcuW-wide padded plane,
     * chroma fetched at (px/2, py/2). The JFIF bytes exist only
     * Spark-side; the oracle is restart-interval-independent, so any
-    * RSTn/DRI mishandling lands in checksum_xor. Four poison kinds must
-    * quarantine to the last record. All decode work is map-side typed
-    * iteration; the only shuffle is the rollup.
+    * RSTn/DRI mishandling lands in checksum_xor. Four poison kinds
+    * ([[jpeg420Poison]]) must quarantine to the last record. One
+    * [[codecPipeline]] call.
     */
-  def q234Jpeg420Pipeline(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val valid = MediaFunctions.decodeFrames(jpeg420Records(docs)).toDF()
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
-      .select(lit("valid").as("kind"), $"n_records", $"n_quarantined",
-        $"total_pixels", $"checksum_xor")
-    val poison = MediaFunctions.decodeFrames(
-        jpeg420PoisonRecords(docs.filter($"doc_id" % 5 === 0))).toDF()
-      .groupBy(element_at(
-        typedLit(Jpeg420PoisonKinds.toSeq), (expr("(id div 5) % 4") + 1).cast("int"))
-        .as("kind"))
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when($"width" === 0, 1L).otherwise(0L)).as("n_quarantined"),
-        sum($"n_pixels").as("total_pixels"),
-        coalesce(expr("bit_xor(CASE WHEN width > 0 THEN checksum END)"), lit(0L))
-          .as("checksum_xor"))
-    valid.unionByName(poison).orderBy($"kind")
-  }
+  def q234Jpeg420Pipeline(s: SparkSession, dir: String): DataFrame =
+    codecPipeline(Tables.documents(s, dir), "jpg", jpeg420Bytes, Jpeg420PoisonKinds,
+      (kind, id) => jpeg420Poison(kind,
+        MediaFunctions.encodeJpeg420(40, 24, jpegQuantCoefs(id), 2)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q233_jpeg_pipeline" -> (q233JpegPipeline _),

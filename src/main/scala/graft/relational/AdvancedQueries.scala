@@ -690,14 +690,10 @@ object AdvancedQueries {
     * that aggregate, so at 100 TB the loop costs 26 memory-speed partial
     * sums, not 26 fact scans.
     */
-  def q196SqlScripting(s: SparkSession, dir: String): DataFrame = {
-    // restored below — a query must not leave session config mutated
-    // (VERDICT r11 hygiene)
-    val priorScripting = s.conf.getOption("spark.sql.scripting.enabled")
-    s.conf.set("spark.sql.scripting.enabled", "true")
-    // the whole setup sits inside the try: an exception in the view /
+  def q196SqlScripting(s: SparkSession, dir: String): DataFrame =
+    // the whole setup runs inside the scope: an exception in the view /
     // cache statements must not leak the scripting flag (ADVICE r12)
-    try {
+    graft.Session.withConf(s, "spark.sql.scripting.enabled" -> "true") {
     Tables.orders(s, dir).createOrReplaceTempView("graft_v_orders")
     // (cents → n_orders) histogram, cached across the loop's probes; the
     // uncache drops a stale entry when the sf dir changes mid-session.
@@ -760,11 +756,7 @@ object AdvancedQueries {
          |  WHERE CAST(round(o_totalprice * 100) AS BIGINT) > hi
          |  GROUP BY o_orderpriority ORDER BY o_orderpriority;
          |END""".stripMargin)
-    } finally priorScripting match {
-      case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-      case None => s.conf.unset("spark.sql.scripting.enabled")
     }
-  }
 
   /** Mergeable distinct-count sketches (Spark's DataSketches HLL surface,
     * SPARK-16484: `hll_sketch_agg` / `hll_union_agg` /
@@ -1223,12 +1215,8 @@ object AdvancedQueries {
       ev.write.mode("overwrite").saveAsTable(s"${pre}_plain")
       ev.write.mode("overwrite").saveAsTable(s"${pre}_hist")
       s.sql(s"ANALYZE TABLE ${pre}_plain COMPUTE STATISTICS FOR COLUMNS value")
-      val prior = s.conf.getOption("spark.sql.statistics.histogram.enabled")
-      s.conf.set("spark.sql.statistics.histogram.enabled", "true")
-      try s.sql(s"ANALYZE TABLE ${pre}_hist COMPUTE STATISTICS FOR COLUMNS value")
-      finally prior match {
-        case Some(v) => s.conf.set("spark.sql.statistics.histogram.enabled", v)
-        case None => s.conf.unset("spark.sql.statistics.histogram.enabled")
+      graft.Session.withConf(s, "spark.sql.statistics.histogram.enabled" -> "true") {
+        s.sql(s"ANALYZE TABLE ${pre}_hist COMPUTE STATISTICS FOR COLUMNS value")
       }
       pre
     })
@@ -1296,17 +1284,15 @@ object AdvancedQueries {
     */
   def q206CboJoinReorder(s: SparkSession, dir: String): DataFrame = {
     val pre = cboPrefix(s, dir)
-    val flags = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prior = flags.map(k => k -> s.conf.getOption(k))
-    flags.foreach(s.conf.set(_, "true"))
     // materialize UNDER the CBO flags: a lazy return would re-optimize at
     // action time (possibly after restore) and silently lose the reorder
-    try s.sql(cboJoinSql(pre)).localCheckpoint()
-    finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    graft.Session.withConf(s, CboFlags.map(_ -> "true"): _*) {
+      s.sql(cboJoinSql(pre)).localCheckpoint()
     }
   }
+
+  /** The two flags the cost-based join reorder needs. */
+  private[graft] val CboFlags = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q206_cbo_join_reorder" -> (q206CboJoinReorder _),

@@ -56,7 +56,8 @@ object GraphQueries {
         .distinct()
         .write.mode("overwrite").parquet(s"$staging/edges")
     }
-    val e = s.read.parquet(s"$root/edges")
+    // read with the writer's schema: no footer-inference job per execution
+    val e = s.read.schema("c BIGINT, sup BIGINT").parquet(s"$root/edges")
     val outc = e.groupBy($"c").agg(count(lit(1)).as("dc"))
     val outs = e.groupBy($"sup").agg(count(lit(1)).as("ds"))
     // superstep 1: uniform customer mass 10⁶ splits over each customer's

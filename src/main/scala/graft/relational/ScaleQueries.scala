@@ -230,7 +230,7 @@ object ScaleQueries {
     // shuffle join — and DPP only prunes for free when it can reuse the
     // join's own broadcast (reuseBroadcastOnly default); without the hint
     // the pruning expression degrades to the no-op `true` literal.
-    s.read.parquet(out)
+    Tables.parquetStable(s, out, Seq(out))
       .join(broadcast(dim), $"o_year" === $"yr")
       .groupBy($"yr".cast("long").as("yr"))
       .agg(

@@ -729,7 +729,7 @@ object PipelineQueries {
     * (process, corpus) — shared by q207/q208.
     */
   private[graft] def trainedMerges(s: SparkSession, dir: String): Array[org.apache.spark.sql.Row] =
-    trainedMergesOn(s, dir, "full", Tables.documents(s, dir))
+    trainedMergesOn(s, dir, "full", bpeTrainOn(Tables.documents(s, dir)))
 
   /** Lake root for the persisted tokenizer artifacts — scoped by corpus
     * dir and TRAINING VERSION (the merge budget: a config change is a new
@@ -761,9 +761,11 @@ object PipelineQueries {
   private[graft] def publishTokenizerOnce(vroot: String, train: String => Unit): Unit =
     graft.Scratch.publishOnce(vroot, "_trained")(train)
 
-  /** Variant-keyed trained-merge artifacts (the q212 drift audit trains a
-    * second tokenizer on the half corpus). Bounded: <= BpeMerges rows per
-    * language per variant.
+  /** Variant-keyed trained-merge artifacts: `full` (q207/q208), `half`
+    * (the q212 drift audit trains a second tokenizer on the half corpus)
+    * and `byte` (q226 serves the q225 byte-level training). `mergeTable`
+    * builds the variant's merges; it runs only when no artifact is
+    * published yet. Bounded: <= BpeMerges rows per language per variant.
     *
     * The merge table is a LAKE ARTIFACT, not process state (VERDICT r12
     * #3 — the q148 train-once/serve-many discipline): training publishes
@@ -778,7 +780,7 @@ object PipelineQueries {
     * write-once per version).
     */
   private def trainedMergesOn(s: SparkSession, dir: String, variant: String,
-      docs: => DataFrame): Array[org.apache.spark.sql.Row] = {
+      mergeTable: => DataFrame): Array[org.apache.spark.sql.Row] = {
     import s.implicits._
     // get/putIfAbsent rather than computeIfAbsent: the training job takes
     // seconds, and computeIfAbsent would run it INSIDE the map's bin lock
@@ -789,10 +791,13 @@ object PipelineQueries {
     val rows = Option(bpeMergeCache.get(key)).getOrElse {
       val vroot = s"${tokenizerRoot(dir)}/$variant"
       publishTokenizerOnce(vroot, staging =>
-        bpeTrainOn(docs)
+        mergeTable
           .select($"lang", $"rank", $"left_sym", $"right_sym", $"merged")
           .coalesce(1).write.mode("overwrite").parquet(s"$staging/merges"))
-      val served = s.read.parquet(s"$vroot/merges")
+      // read back with the writer's schema: no footer-inference job
+      val served = s.read
+        .schema("lang STRING, rank BIGINT, left_sym STRING, right_sym STRING, merged STRING")
+        .parquet(s"$vroot/merges")
         .orderBy($"lang", $"rank").collect()
       val prior = bpeMergeCache.putIfAbsent(key, served)
       if (prior != null) prior else served
@@ -947,28 +952,6 @@ object PipelineQueries {
       .orderBy($"lang", $"rank")
   }
 
-  /** The byte-level trained-merge artifact — the q148/q204 discipline
-    * (pid-free publish, read-back serve) under the `byte` variant key.
-    */
-  private def trainedByteMerges(s: SparkSession, dir: String): Array[org.apache.spark.sql.Row] = {
-    import s.implicits._
-    val key = s"$dir|byte"
-    val rows = Option(bpeMergeCache.get(key)).getOrElse {
-      val vroot = s"${tokenizerRoot(dir)}/byte"
-      publishTokenizerOnce(vroot, staging =>
-        bpeTrainOnWords(byteWordTable(byteDocs(s, dir)))
-          .select($"lang", $"rank", $"left_sym", $"right_sym", $"merged")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/merges"))
-      val served = s.read.parquet(s"$vroot/merges")
-        .orderBy($"lang", $"rank").collect()
-      val prior = bpeMergeCache.putIfAbsent(key, served)
-      if (prior != null) prior else served
-    }
-    require(rows.length <= BpeMerges * 16,
-      s"byte-level merge table exceeded its structural bound: ${rows.length}")
-    rows
-  }
-
   /** BYTE-LEVEL ENCODE (q226): every word byte-aliased and segmented by
     * the q225 artifact through the SAME native [[graft.expressions.BpeEncode]]
     * kernel — alias codepoints are ordinary codepoints to it, merged ids
@@ -979,7 +962,7 @@ object PipelineQueries {
     */
   def q226ByteLevelEncode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val rows = trainedByteMerges(s, dir)
+    val rows = trainedMergesOn(s, dir, "byte", bpeTrainOnWords(byteWordTable(byteDocs(s, dir))))
     val table = graft.expressions.BpeMergeTable(
       rows.toSeq.map(r => (r.getString(0), r.getLong(1),
         r.getString(2), r.getString(3), r.getString(4))),
@@ -1021,7 +1004,7 @@ object PipelineQueries {
     import s.implicits._
     val full = trainedMerges(s, dir)
     val half = trainedMergesOn(s, dir, "half",
-      Tables.documents(s, dir).filter($"doc_id" % 2 === 0))
+      bpeTrainOn(Tables.documents(s, dir).filter($"doc_id" % 2 === 0)))
     def byRank(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getLong(1)) -> r.getString(4)).toMap
     val (fm, hm) = (byRank(full), byRank(half))

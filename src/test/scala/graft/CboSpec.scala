@@ -15,19 +15,13 @@ class CboSpec extends AnyFunSuite {
 
   private def leafOrder(cboOn: Boolean): Seq[String] = {
     val pre = AdvancedQueries.cboPrefix(spark, sf)
-    val flags = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prior = flags.map(k => k -> spark.conf.getOption(k))
-    flags.foreach(spark.conf.set(_, cboOn.toString))
-    try {
+    Session.withConf(spark, AdvancedQueries.CboFlags.map(_ -> cboOn.toString): _*) {
       val plan = spark.sql(AdvancedQueries.cboJoinSql(pre)).queryExecution.optimizedPlan
       plan.collectLeaves().flatMap {
         case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           l.catalogTable.map(_.identifier.table.stripPrefix(s"${pre}_"))
         case _ => None
       }
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -61,10 +55,7 @@ class CboSpec extends AnyFunSuite {
 
   test("equi-height histograms fix the skewed-column selectivity estimate; uniform stats mislead") {
     val pre = AdvancedQueries.histPrefix(spark, sf)
-    val flags = Seq("spark.sql.cbo.enabled")
-    val prior = flags.map(k => k -> spark.conf.getOption(k))
-    flags.foreach(spark.conf.set(_, "true"))
-    try {
+    Session.withConf(spark, "spark.sql.cbo.enabled" -> "true") {
       def estimateOf(table: String): BigInt = {
         val plan = spark.sql(
           s"SELECT * FROM $table WHERE ${AdvancedQueries.HistProbeSql}")
@@ -88,9 +79,6 @@ class CboSpec extends AnyFunSuite {
         s"histogram estimate off >2x: $estHist vs $actual")
       assert(err(estPlain) > 0.5,
         s"uniform estimate unexpectedly accurate ($estPlain vs $actual) — the demo column lost its skew")
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -155,23 +143,17 @@ class CboSpec extends AnyFunSuite {
     val path = sources.FwbFormat.writeFixture(spark, sf)
     val view = s"gfwb_cbospec_${Scratch.tag(sf)}"
     spark.read.format("graft-fwb").load(path).createOrReplaceTempView(view)
-    def leaves(cboOn: Boolean): Seq[String] = {
-      val flags = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-      val prior = flags.map(k => k -> spark.conf.getOption(k))
-      flags.foreach(spark.conf.set(_, cboOn.toString))
-      try spark.sql(etl.EtlQueries.connectorCboSql(view, pre))
-        .queryExecution.optimizedPlan.collectLeaves().flatMap {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.catalogTable.map(_.identifier.table.stripPrefix(s"${pre}_"))
-          case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            Some("gfwb")
-          case _ => None
-        }
-      finally prior.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+    def leaves(cboOn: Boolean): Seq[String] =
+      Session.withConf(spark, AdvancedQueries.CboFlags.map(_ -> cboOn.toString): _*) {
+        spark.sql(etl.EtlQueries.connectorCboSql(view, pre))
+          .queryExecution.optimizedPlan.collectLeaves().flatMap {
+            case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+              l.catalogTable.map(_.identifier.table.stripPrefix(s"${pre}_"))
+            case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              Some("gfwb")
+            case _ => None
+          }
       }
-    }
     val without = leaves(cboOn = false)
     assert(without.head == "gfwb", s"syntactic order should join the fact first: $without")
     val withCbo = leaves(cboOn = true)

@@ -43,6 +43,50 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(offenders == Seq("src/main/scala/graft/Session.scala"))
   }
 
+  test("Session.withConf restores a prior value and leaves an unset key unset, also when the body throws") {
+    val prior = "graft.test.withconf.prior"
+    val unset = "graft.test.withconf.unset"
+    spark.conf.set(prior, "before")
+    spark.conf.unset(unset)
+    def restored(): Unit = {
+      assert(spark.conf.getOption(prior).contains("before"))
+      assert(spark.conf.getOption(unset).isEmpty)
+    }
+    try {
+      val inside = Session.withConf(spark, prior -> "in", unset -> "in") {
+        Seq(prior, unset).map(spark.conf.getOption)
+      }
+      assert(inside == Seq(Some("in"), Some("in")))
+      restored()
+      val e = intercept[IllegalStateException] {
+        Session.withConf(spark, prior -> "in", unset -> "in") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      restored()
+    } finally spark.conf.unset(prior)
+  }
+
+  test("src/main reads parquet without a declared schema only in Tables.scala and ScaleUp.scala") {
+    // a schema-less read runs a footer-inference job every time its
+    // DataFrame is built; query paths read through Tables or declare the
+    // writer's schema. Comments are dropped first.
+    def schemaLess(source: String): Boolean =
+      """\bread\s*\.\s*parquet\s*\(""".r.findFirstIn(
+        source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")).isDefined
+    assert(schemaLess("val e = s.read.parquet(s\"$root/edges\")"))
+    assert(schemaLess("spark.read\n  .parquet(path)"))
+    assert(!schemaLess("s.read.schema(\"c BIGINT\").parquet(p) /** s.read.parquet(p) */ // read.parquet("))
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
+    val files = Files.walk(root)
+    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    val offenders = sources.filter(f => schemaLess(Files.readString(f))).map(_.toString).sorted
+    assert(offenders == Seq("src/main/scala/graft/ScaleUp.scala", "src/main/scala/graft/Tables.scala"))
+  }
+
   test("kernels are callable from SQL") {
     val spark2 = spark
     val row = spark2.sql(
