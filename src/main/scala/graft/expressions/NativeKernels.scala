@@ -4,8 +4,9 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
@@ -24,47 +25,77 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~50-200× on those queries) — the difference between a usable and an
   * unusable operator at 100 TB.
   *
-  * Each expression implements REAL `doGenCode`: whole-stage codegen emits a
-  * static call into [[KernelOps]] (null checks handled by
-  * defineCodeGen), so the kernels sit inside the generated loop like any
-  * built-in — no CodegenFallback row re-evaluation, no interpreted subtree.
-  * The interpreted path (`nullSafeEval`) delegates to the SAME KernelOps
-  * body, so both paths cannot drift.
+  * Each kernel is declared once: its function below builds a
+  * `StaticInvoke` of the [[KernelOps]] method of the same name (see
+  * [[kernel]]). Whole-stage codegen emits that static call inside the
+  * generated loop like any built-in — no CodegenFallback row
+  * re-evaluation, no interpreted subtree — and the interpreted path calls
+  * the SAME method by reflection, so the two paths cannot drift.
+  * `propagateNull` gives null in → null out; `returnNullable` marks the
+  * three kernels that also return NULL themselves (`dotF`, `randomProject`,
+  * `byteUnalias`). Int and byte parameters, and `bpeEncode`'s merge
+  * table, travel as `Literal` arguments; the bounds on the parameters are
+  * checked here, when the column is built. The declared input types are
+  * implicit-cast targets (StaticInvoke is `ImplicitCastInputTypes`): an
+  * input Spark's type coercion can cast to the declared type is cast, not
+  * rejected (a bigint text is read as its decimal string); any other
+  * input fails analysis with `DATATYPE_MISMATCH`. An unaliased kernel
+  * column is named
+  * `static_invoke(graft.expressions.KernelOps.<method>(…))`.
+  *
+  * Two kernels keep a hand-written expression class, because a
+  * StaticInvoke cannot say them: [[NearestCell]] is not null-intolerant,
+  * and [[JaccardSorted]] passes a codegen literal computed from its
+  * RESOLVED input types, which a Column builder cannot see.
   */
 object NativeKernels {
 
   private def c(e: Expression): Column = ColumnBridge.column(e)
 
-  /** checkInputDataTypes helper (ExpectsInputTypes is private[sql] in
-    * Spark 4, so kernels validate against concrete DataTypes directly).
+  private val StrArray: DataType = ArrayType(StringType)
+  private val FloatArray: DataType = ArrayType(FloatType)
+  // kernel outputs: arrays that never hold a null element
+  private val Strs: DataType = ArrayType(StringType, containsNull = false)
+  private val Longs: DataType = ArrayType(LongType, containsNull = false)
+
+  /** The one kernel declaration: `KernelOps.<method>(inputs ++ params)` as
+    * a null-propagating `StaticInvoke`. `inputs` pairs each column with
+    * its declared type; `params` are the literal arguments.
     */
-  private[expressions] def checkTypes(
-      name: String, actual: Seq[DataType], expected: Seq[DataType]): TypeCheckResult =
-    if (actual.zip(expected).forall { case (a, e) => DataType.equalsIgnoreNullability(a, e) }) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name expects ${expected.mkString(", ")}, got ${actual.mkString(", ")}")
+  private def kernel(method: String, dataType: DataType, inputs: Seq[(Column, DataType)],
+      params: Seq[Literal] = Nil, returnNullable: Boolean = false): Column =
+    c(StaticInvoke(KernelOps.getClass, dataType, method,
+      inputs.map(i => ColumnBridge.expression(i._1)) ++ params,
+      inputs.map(_._2) ++ params.map(_.dataType),
+      propagateNull = true, returnNullable = returnNullable))
 
   /** Σ aᵢ·bᵢ over two float-array columns, accumulated in double —
     * bit-identical to DuckDB's list_dot_product over DOUBLE[] casts
-    * (sequential left-to-right fold in both engines).
+    * (sequential left-to-right fold in both engines). NULL when the
+    * lengths differ or any element is null — the exact semantics of
+    * `aggregate(zip_with(a,b,(x,y)->x*y),0d,(m,n)->m+n)` — so the
+    * AccelerateVectorOps rewrite is observationally identical for every
+    * float-array input (ADVICE r2, medium).
     */
   def dotF(a: Column, b: Column): Column =
-    c(DotProductFloat(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    kernel("dotF", DoubleType, Seq(a -> FloatArray, b -> FloatArray), returnNullable = true)
 
   /** Membership probe against a [[KernelOps.BloomBytes]]-sized bloom
     * (binary column) — codegen'd, so the corpus-side pre-filter of q228
     * sits inside the generated scan loop.
     */
   def bloomMightContain(bloom: Column, key: Column): Column =
-    c(BloomMightContain(ColumnBridge.expression(bloom), ColumnBridge.expression(key)))
+    kernel("bloomMightContain", BooleanType, Seq(bloom -> BinaryType, key -> LongType))
 
   /** Distinct word k-shingles of a space-separated text, sorted (binary
     * UTF8 order) so downstream set ops can two-pointer merge. Matches
     * TextFunctions.shingles ∘ array_distinct up to order, including the
     * "fewer than k tokens → whole text" degenerate case.
     */
-  def wordShingles(text: Column, k: Int): Column =
-    c(WordShingles(ColumnBridge.expression(text), k))
+  def wordShingles(text: Column, k: Int): Column = {
+    require(k >= 1)
+    kernel("wordShingles", Strs, Seq(text -> StringType), Seq(Literal(k)))
+  }
 
   /** ALL word k-grams of a space-separated text, in token order, duplicates
     * kept — the MULTISET twin of [[wordShingles]], bit-equal to
@@ -78,14 +109,17 @@ object NativeKernels {
     * pass of q89/q141).
     */
   def wordGrams(text: Column, k: Int): Column =
-    c(WordGrams(ColumnBridge.expression(text), k))
+    kernel("wordGrams", Strs, Seq(text -> StringType), Seq(Literal(k)))
 
   /** Distinct char n-grams of a string, sorted. */
-  def charNgrams(text: Column, n: Int): Column =
-    c(CharNgrams(ColumnBridge.expression(text), n))
+  def charNgrams(text: Column, n: Int): Column = {
+    require(n >= 1)
+    kernel("charNgrams", Strs, Seq(text -> StringType), Seq(Literal(n)))
+  }
 
-  /** |A∩B| / |A∪B| of two SORTED distinct string arrays (two-pointer merge,
-    * no allocation). Inputs MUST come from wordShingles/charNgrams.
+  /** |A∩B| / |A∪B| of two SORTED distinct arrays, both of strings or
+    * both of longs (two-pointer merge, no allocation). Inputs MUST come
+    * from wordShingles/charNgrams/charNgramHashes.
     */
   def jaccardSorted(a: Column, b: Column): Column =
     c(JaccardSorted(ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -96,33 +130,35 @@ object NativeKernels {
     * collisions perturb a Jaccard count with probability ~2⁻⁶⁴ per in-doc
     * gram pair (≪ the round(…,4) guard at any realistic corpus).
     */
-  def charNgramHashes(text: Column, n: Int): Column =
-    c(CharNgramHashes(ColumnBridge.expression(text), n))
-
-  /** |A∩B| / |A∪B| of two SORTED distinct long arrays. */
-  def jaccardSortedLong(a: Column, b: Column): Column =
-    c(JaccardSortedLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def charNgramHashes(text: Column, n: Int): Column = {
+    require(n >= 1)
+    kernel("charNgramHashes", Longs, Seq(text -> StringType), Seq(Literal(n)))
+  }
 
   /** k-element MinHash signature: sig[j] = min over shingles of
     * xxhash64(shingle, seed=j). Order- and duplicate-insensitive.
     */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    c(MinHashSignature(ColumnBridge.expression(shingles), k))
+  def minhashSignature(shingles: Column, k: Int): Column = {
+    require(k >= 1)
+    kernel("minhashSignature", Longs, Seq(shingles -> StrArray), Seq(Literal(k)))
+  }
 
   /** 60-bit SimHash over DISTINCT shingle strings, using the md5-prefix
     * hash h60(s) = int(md5hex(s)[0:15], 16) — reproducible bit-for-bit in
     * the DuckDB oracle (q26). Input must already be distinct.
     */
   def simhash60(shingles: Column): Column =
-    c(SimHash60(ColumnBridge.expression(shingles)))
+    kernel("simhash60", LongType, Seq(shingles -> StrArray))
 
   /** Winnowing fingerprints (the MOSS scheme, Schleimer et al. '03):
     * rolling polynomial hash (base 256, mod 2³¹) over k-codepoint windows,
     * then the min of each w-hash window; sorted distinct selected hashes.
     * Pure integer arithmetic, so the DuckDB oracle reproduces every value.
     */
-  def rollingFingerprints(text: Column, k: Int, w: Int): Column =
-    c(RollingFingerprints(ColumnBridge.expression(text), k, w))
+  def rollingFingerprints(text: Column, k: Int, w: Int): Column = {
+    require(k >= 1 && w >= 1)
+    kernel("rollingFingerprints", Longs, Seq(text -> StringType), Seq(Literal(k), Literal(w)))
+  }
 
   /** Signed feature hashing (Weinberger et al. '09): each DISTINCT shingle
     * s lands in dimension h60(s) % dims with sign ± from bit 59 of h60(s).
@@ -131,22 +167,30 @@ object NativeKernels {
     * engines — the document-embedding input for cosine near-dup (q50).
     * dims must be ≤ 2⁵⁹ so the sign bit is independent of the bucket bits.
     */
-  def featureHashVector(shingles: Column, dims: Int): Column =
-    c(FeatureHashVector(ColumnBridge.expression(shingles), dims))
+  def featureHashVector(shingles: Column, dims: Int): Column = {
+    require(dims >= 1 && dims <= (1 << 20))
+    kernel("featureHashVector", ArrayType(FloatType, containsNull = false),
+      Seq(shingles -> StrArray), Seq(Literal(dims)))
+  }
 
   /** Portable (md5-derived, oracle-reproducible) MinHash signature — the
     * cross-engine-verifiable sibling of [[minhashSignature]].
     */
-  def minhashPortable(shingles: Column, k: Int): Column =
-    c(MinHashPortable(ColumnBridge.expression(shingles), k))
+  def minhashPortable(shingles: Column, k: Int): Column = {
+    require(k >= 1)
+    kernel("minhashPortable", Longs, Seq(shingles -> StrArray), Seq(Literal(k)))
+  }
 
   /** Signed ±1 random projection to `outDims` dimensions (JL lemma): the
     * dimensionality-reduction step before LSH/ANN when 64 dims is already
     * too wide to shuffle. Deterministic md5-derived sign matrix shared by
-    * the DuckDB oracle.
+    * the DuckDB oracle. NULL when any input element is null.
     */
-  def randomProject(vec: Column, outDims: Int): Column =
-    c(RandomProjection(ColumnBridge.expression(vec), outDims))
+  def randomProject(vec: Column, outDims: Int): Column = {
+    require(outDims >= 1)
+    kernel("randomProject", ArrayType(DoubleType, containsNull = false),
+      Seq(vec -> FloatArray), Seq(Literal(outDims)), returnNullable = true)
+  }
 
   /** Unicode case/diacritic folding: NFD-decompose, drop combining marks,
     * lowercase per code point, recompose NFC. The canonicalization pass a
@@ -154,7 +198,7 @@ object NativeKernels {
     * DuckDB's `lower(strip_accents(nfc_normalize(x)))` on Latin text.
     */
   def foldText(text: Column): Column =
-    c(FoldText(ColumnBridge.expression(text)))
+    kernel("foldText", StringType, Seq(text -> StringType))
 
   /** BPE subword encode — the standard tokenizer inner loop (VERDICT r12
     * top item): segment a word by a trained merge table and emit subword
@@ -164,10 +208,10 @@ object NativeKernels {
     * nest 30k expressions — past Janino's 64 KB method limit, silent
     * interpreted fallback or analyzer stack overflow — and (b) copy the
     * full delimited string O(merges) times per word. Here the merges live
-    * in a [[BpeMergeTable]] REFERENCE OBJECT (codegen embeds a pointer,
-    * not the table), so generated-code size is independent of merge
-    * count, and the loop is O(|word|²) hash probes worst case — the
-    * GPT-2-class apply loop.
+    * in a [[BpeMergeTable]] REFERENCE OBJECT (an `ObjectType` literal, which
+    * codegen embeds as a reference, not as the table), so generated-code
+    * size is independent of merge count, and the loop is O(|word|²) hash
+    * probes worst case — the GPT-2-class apply loop.
     *
     * Semantics: identical to applying the merges in rank order as
     * leftmost-non-overlapping replaces (the chain/oracle recipe). The
@@ -186,7 +230,8 @@ object NativeKernels {
     * pins the dual-derivation counterexample + a randomized law.
     */
   def bpeEncode(lang: Column, word: Column, table: BpeMergeTable): Column =
-    c(BpeEncode(ColumnBridge.expression(lang), ColumnBridge.expression(word), table))
+    kernel("bpeEncode", Longs, Seq(lang -> StringType, word -> StringType),
+      Seq(Literal(table, ObjectType(classOf[BpeMergeTable]))))
 
   /** Adjacent symbol pairs of a [[graft.text.PipelineQueries.BpeSep]]-
     * delimited BPE word state — `array<struct<l,r>>`, empty below 2
@@ -201,8 +246,13 @@ object NativeKernels {
     * multibyte sequence, so the byte walk splits exactly where the regex
     * split did.
     */
-  def bpePairs(seq: Column, sep: Char): Column =
-    c(BpePairs(ColumnBridge.expression(seq), sep))
+  def bpePairs(seq: Column, sep: Char): Column = {
+    require(sep.toInt > 0 && sep.toInt < 0x80, "sentinel must be a single ASCII byte")
+    kernel("bpePairs", ArrayType(StructType(Seq(
+      StructField("l", StringType, nullable = true),
+      StructField("r", StringType, nullable = true))), containsNull = false),
+      Seq(seq -> StringType), Seq(Literal(sep.toByte)))
+  }
 
   /** All unordered pairs (a[i], a[j]), i < j, of a SORTED distinct long
     * array — `array<struct<a,b>>`, empty below 2 elements. The basket
@@ -215,7 +265,10 @@ object NativeKernels {
     * ≤ k·(k−1)/2 structs per row no matter the corpus.
     */
   def sortedPairs(a: Column): Column =
-    c(SortedPairs(ColumnBridge.expression(a)))
+    kernel("sortedPairs", ArrayType(StructType(Seq(
+      StructField("a", LongType, nullable = false),
+      StructField("b", LongType, nullable = false))), containsNull = false),
+      Seq(a -> ArrayType(LongType)))
 
   /** Nearest centroid of an embedding against a (cell, c_emb, c_n2) struct
     * array — the map-side argmin that replaces the crossJoin → sort →
@@ -245,14 +298,14 @@ object NativeKernels {
     * keeps the inverse a subtraction.
     */
   def byteAlias(text: Column): Column =
-    c(ByteAlias(ColumnBridge.expression(text)))
+    kernel("byteAlias", StringType, Seq(text -> StringType))
 
   /** Inverse of [[byteAlias]]: alias codepoints back to raw BYTES
     * (BinaryType — the payload need not be valid UTF-8). Null for any
     * codepoint outside U+0100..U+01FF (not an alias string).
     */
   def byteUnalias(aliased: Column): Column =
-    c(ByteUnalias(ColumnBridge.expression(aliased)))
+    kernel("byteUnalias", BinaryType, Seq(aliased -> StringType), returnNullable = true)
 }
 
 /** The kernel bodies, static-callable from generated Java
@@ -991,236 +1044,103 @@ object KernelOps {
   }
 }
 
-case class ByteAlias(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("byteAlias", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.byteAlias(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.byteAlias($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class ByteUnalias(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("byteUnalias", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.byteUnalias(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("buRes")
-      s"""
-         |byte[] $r = graft.expressions.KernelOps.byteUnalias($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class MinHashPortable(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("minhashPortable", Seq(child.dataType), Seq(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.minhashPortable(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.minhashPortable($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class RandomProjection(child: Expression, outDims: Int) extends UnaryExpression {
-  require(outDims >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("randomProject", Seq(child.dataType),
-      Seq(ArrayType(FloatType)))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.randomProject(input.asInstanceOf[ArrayData], outDims)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // kernel returns null for null elements → wrap like DotProductFloat
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("rpRes")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.expressions.KernelOps.randomProject($c, $outDims);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class FoldText(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("foldText", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.foldText(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.foldText($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Result is NULL when the input lengths differ or any element is null —
-  * the exact semantics of `aggregate(zip_with(a,b,(x,y)->x*y),0d,(m,n)->m+n)`
-  * — so the AccelerateVectorOps rewrite is observationally identical for
-  * every float-array input (ADVICE r2, medium).
+/** |A∩B| / |A∪B| of two sorted distinct arrays, both of strings or both
+  * of longs; the element type picks `KernelOps.jaccardSorted` or
+  * `KernelOps.jaccardSortedLong`. A class, not a StaticInvoke, because
+  * the kernels' `mayNull` argument is a codegen-time literal taken from
+  * the RESOLVED inputs' containsNull (see [[KernelOps.jaccardSorted]]),
+  * and a Column builder sees its inputs before analysis resolves them.
   */
-case class DotProductFloat(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("dotF", Seq(left.dataType, right.dataType),
-      Seq(ArrayType(FloatType), ArrayType(FloatType)))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KernelOps.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dotRes")
-      s"""
-         |java.lang.Double $r = graft.expressions.KernelOps.dotF($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("wordShingles", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.wordShingles(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.wordShingles($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class WordGrams(child: Expression, k: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("wordGrams", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.wordGrams(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.wordGrams($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("charNgrams", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.charNgrams(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.charNgrams($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class CharNgramHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("charNgramHashes", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.charNgramHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.charNgramHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
 case class JaccardSorted(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("jaccardSorted", Seq(left.dataType, right.dataType),
-      Seq(ArrayType(StringType), ArrayType(StringType)))
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(l, _), ArrayType(r, _)) if l == r && (l == StringType || l == LongType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"jaccardSorted expects two array<string> or two array<bigint>, got $l, $r")
+  }
   override def dataType: DataType = DoubleType
+  private lazy val longs: Boolean = left.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
   private lazy val mayNull: Boolean = Seq(left, right).exists(_.dataType match {
     case ArrayType(_, cn) => cn
     case _ => true
   })
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KernelOps.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], mayNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.KernelOps.jaccardSorted($a, $b, $mayNull)")
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (longs) KernelOps.jaccardSortedLong(x, y, mayNull) else KernelOps.jaccardSorted(x, y, mayNull)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val method = if (longs) "jaccardSortedLong" else "jaccardSorted"
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.KernelOps.$method($a, $b, $mayNull)")
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
-case class JaccardSortedLong(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("jaccardSortedLong", Seq(left.dataType, right.dataType),
-      Seq(ArrayType(LongType), ArrayType(LongType)))
-  override def dataType: DataType = DoubleType
-  private lazy val mayNull: Boolean = Seq(left, right).exists(_.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => true
-  })
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KernelOps.jaccardSortedLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], mayNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.KernelOps.jaccardSortedLong($a, $b, $mayNull)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+/** struct<cell, d2> of the nearest centroid (see
+  * [[NativeKernels.nearestCell]]). A class, not a StaticInvoke, because it
+  * is NOT null-intolerant — a null embedding must still yield the
+  * (min-cell, null-d2) row the window formulation produced, so this
+  * implements eval/doGenCode directly instead of propagating nulls; the
+  * result is null ONLY for a null/empty centroid array.
+  */
+case class NearestCell(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def is(t: DataType, want: DataType) = DataType.equalsIgnoreNullability(t, want)
+    val ok = is(first.dataType, ArrayType(FloatType)) && is(second.dataType, DoubleType) &&
+      (third.dataType match {
+        case ArrayType(StructType(fields), _) if fields.length == 3 =>
+          is(fields(0).dataType, LongType) && is(fields(1).dataType, ArrayType(FloatType)) &&
+            is(fields(2).dataType, DoubleType)
+        case _ => false
+      })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure("nearestCell expects array<float>, double, " +
+      s"array<struct<cell:bigint,c_emb:array<float>,c_n2:double>>, got " +
+      s"${first.dataType}, ${second.dataType}, ${third.dataType}")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("cell", LongType, nullable = true),
+    StructField("d2", DoubleType, nullable = true)))
+  override def nullable: Boolean = true
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val emb = first.eval(input)
+    val n2 = second.eval(input)
+    val cents = third.eval(input)
+    KernelOps.nearestCell(
+      emb.asInstanceOf[ArrayData],
+      if (n2 == null) null else java.lang.Double.valueOf(n2.asInstanceOf[Double]),
+      cents.asInstanceOf[ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val e1 = first.genCode(ctx)
+    val e2 = second.genCode(ctx)
+    val e3 = third.genCode(ctx)
+    ev.copy(code =
+      code"""
+        ${e1.code}
+        ${e2.code}
+        ${e3.code}
+        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
+          graft.expressions.KernelOps.nearestCell(
+            ${e1.isNull} ? null : ${e1.value},
+            ${e2.isNull} ? null : java.lang.Double.valueOf(${e2.value}),
+            ${e3.isNull} ? null : ${e3.value});
+        boolean ${ev.isNull} = (${ev.value} == null);
+      """)
+  }
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
 }
 
-case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("minhashSignature", Seq(child.dataType), Seq(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.minhashSignature(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.minhashSignature($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class RollingFingerprints(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  require(k >= 1 && w >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("rollingFingerprints", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.rollingFingerprints(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.rollingFingerprints($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class FeatureHashVector(child: Expression, dims: Int) extends UnaryExpression {
-  require(dims >= 1 && dims <= (1 << 20))
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("featureHashVector", Seq(child.dataType), Seq(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.featureHashVector(input.asInstanceOf[ArrayData], dims)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.featureHashVector($c, $dims)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class SimHash60(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("simhash60", Seq(child.dataType), Seq(ArrayType(StringType)))
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.simhash60(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.KernelOps.simhash60($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** A trained BPE merge table as a driver-side artifact the [[BpeEncode]]
-  * kernel references: `merges` is (lang, rank, left, right, merged) rows
-  * in any order, `idBase` the id offset for merge-created symbols
+/** A trained BPE merge table as a driver-side artifact the
+  * [[NativeKernels.bpeEncode]] kernel references: `merges` is (lang,
+  * rank, left, right, merged) rows in any order, `idBase` the id offset for merge-created symbols
   * (single-codepoint symbols encode as their codepoint). A case class so
   * two expressions over the same training compare equal under Catalyst
   * canonicalization; the hash-map form rebuilds lazily per JVM
@@ -1295,124 +1215,4 @@ final class BpeLangTable(rs: Seq[(String, Long, String, String, String)],
     val v = mergedIds.get(sym)
     if (v == null) Long.MinValue else v.longValue()
   }
-}
-
-case class BloomMightContain(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("bloomMightContain", Seq(left.dataType, right.dataType),
-      Seq(BinaryType, LongType))
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(bloom: Any, key: Any): Any =
-    KernelOps.bloomMightContain(bloom.asInstanceOf[Array[Byte]], key.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, k) => s"graft.expressions.KernelOps.bloomMightContain($b, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class BpePairs(child: Expression, sep: Char) extends UnaryExpression {
-  require(sep.toInt > 0 && sep.toInt < 0x80, "sentinel must be a single ASCII byte")
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("bpePairs", Seq(child.dataType), Seq(StringType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("l", StringType, nullable = true),
-    StructField("r", StringType, nullable = true))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.bpePairs(input.asInstanceOf[UTF8String], sep.toByte)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.KernelOps.bpePairs($c, (byte) ${sep.toInt})")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-case class SortedPairs(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("sortedPairs", Seq(child.dataType), Seq(ArrayType(LongType)))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", LongType, nullable = false),
-    StructField("b", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    KernelOps.sortedPairs(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.expressions.KernelOps.sortedPairs($a)")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** struct<cell, d2> of the nearest centroid (see
-  * [[NativeKernels.nearestCell]]). NOT null-intolerant — a null embedding
-  * must still yield the (min-cell, null-d2) row the window formulation
-  * produced, so this implements eval/doGenCode directly instead of the
-  * nullSafe helpers; the result is null ONLY for a null/empty centroid
-  * array.
-  */
-case class NearestCell(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val centsOk = third.dataType match {
-      case ArrayType(StructType(fields), _) if fields.length == 3 =>
-        DataType.equalsIgnoreNullability(fields(0).dataType, LongType) &&
-          DataType.equalsIgnoreNullability(fields(1).dataType, ArrayType(FloatType)) &&
-          DataType.equalsIgnoreNullability(fields(2).dataType, DoubleType)
-      case _ => false
-    }
-    if (centsOk)
-      NativeKernels.checkTypes("nearestCell", Seq(first.dataType, second.dataType),
-        Seq(ArrayType(FloatType), DoubleType))
-    else TypeCheckResult.TypeCheckFailure(
-      s"nearestCell expects array<struct<cell:bigint,c_emb:array<float>,c_n2:double>>, got ${third.dataType}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", LongType, nullable = true),
-    StructField("d2", DoubleType, nullable = true)))
-  override def nullable: Boolean = true
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val emb = first.eval(input)
-    val n2 = second.eval(input)
-    val cents = third.eval(input)
-    KernelOps.nearestCell(
-      emb.asInstanceOf[ArrayData],
-      if (n2 == null) null else java.lang.Double.valueOf(n2.asInstanceOf[Double]),
-      cents.asInstanceOf[ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val e1 = first.genCode(ctx)
-    val e2 = second.genCode(ctx)
-    val e3 = third.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${e1.code}
-        ${e2.code}
-        ${e3.code}
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
-          graft.expressions.KernelOps.nearestCell(
-            ${e1.isNull} ? null : ${e1.value},
-            ${e2.isNull} ? null : java.lang.Double.valueOf(${e2.value}),
-            ${e3.isNull} ? null : ${e3.value});
-        boolean ${ev.isNull} = (${ev.value} == null);
-      """)
-  }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-case class BpeEncode(left: Expression, right: Expression, table: BpeMergeTable)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeKernels.checkTypes("bpeEncode", Seq(left.dataType, right.dataType),
-      Seq(StringType, StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(lang: Any, word: Any): Any =
-    KernelOps.bpeEncode(lang.asInstanceOf[UTF8String], word.asInstanceOf[UTF8String], table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the table is a REFERENCE, so the generated method is a fixed-size
-    // static call no matter how many merges were trained — the property
-    // the replace-chain lacked (NativeKernelsSpec stresses 2k merges
-    // under CODEGEN_ONLY to pin it)
-    val tableRef = ctx.addReferenceObj("bpeTable", table, classOf[BpeMergeTable].getName)
-    defineCodeGen(ctx, ev, (l, w) => s"graft.expressions.KernelOps.bpeEncode($l, $w, $tableRef)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }

@@ -514,9 +514,20 @@ object MediaQueries {
       c.update(b, chunkOff + 4, 4 + len)
       putBe(b, chunkOff + 8 + len, c.getValue.toInt)
     }
+    // offset of the first `typ` chunk; a stream without one, or a chunk
+    // whose length runs past the end, fails naming `typ` before any read
+    // past the end
     def chunkOff(b: Array[Byte], typ: String): Int = {
+      def missing(why: String): Nothing =
+        throw new IllegalArgumentException(s"no $typ chunk: $why — input is not a PNG fixture of this tier")
       var off = 8
-      while (new String(b, off + 4, 4, "US-ASCII") != typ) off += 12 + beInt(b, off)
+      while ({
+        if (off + 12 > b.length) missing(s"none before byte ${b.length}")
+        val len = beInt(b, off)
+        if (len < 0 || off + 12L + len > b.length)
+          missing(s"the chunk at byte $off declares length $len, past the end at byte ${b.length}")
+        new String(b, off + 4, 4, "US-ASCII") != typ
+      }) off += 12 + beInt(b, off)
       off
     }
     kind match {

@@ -501,7 +501,11 @@ private[sources] class FwbPartitionReader(file: String, fieldNames: Array[String
         case 0 => i64(0)
         case 1 => i64(8)
         case 2 => i64(16)
-        case _ => dict(buf(24) & 0xff)
+        case _ =>
+          val code = buf(24) & 0xff
+          if (code >= dict.length) throw new java.io.IOException(
+            s"$file: corrupt GFWB record ${read - 1}: priority code $code, dictionary size ${dict.length}")
+          dict(code)
       }
       i += 1
     }

@@ -172,20 +172,45 @@ object FwbFormat {
 
   /** Per-file footer as planning metadata. Counted by [[footerReads]] —
     * manifest-backed planning must never get here.
+    *
+    * The footer is checked against the file before any record is read, in
+    * O(1): `footerLen` lies within the file, `n × RecordBytes + footerLen
+    * + 8` equals the file length, every dictionary entry lies within the
+    * footer, and the bloom is [[FwbBloom.Bytes]] long. A violation throws
+    * an IOException naming the path and the field — a wrong count would
+    * otherwise decode footer bytes as records, or drop records, silently.
     */
   def readFooter(path: String): FwbStats = {
     footerReads.incrementAndGet()
     val f = new RandomAccessFile(path, "r")
     try {
-      f.seek(f.length - 8)
+      val len = f.length
+      def corrupt(field: String, got: Long, want: String): Nothing =
+        throw new java.io.IOException(s"$path: corrupt GFWB footer: $field is $got, want $want")
+      f.seek(len - 8)
       val footerLen = f.readInt()
       require(f.readInt() == Magic, s"$path: bad GFWB magic")
-      f.seek(f.length - 8 - footerLen)
+      val footerStart = len - 8 - footerLen
+      val minFooter = 8 + 8 + 8 + 4 + 4 // count, keys, dictN, bloomLen
+      if (footerLen < minFooter || footerStart < 0)
+        corrupt("footerLen", footerLen, s"$minFooter to ${len - 8} (file length $len)")
+      f.seek(footerStart)
       val n = f.readLong(); val minKey = f.readLong(); val maxKey = f.readLong()
-      val dict = Array.fill(f.readInt()) {
-        val b = new Array[Byte](f.readInt()); f.readFully(b); new String(b, "UTF-8")
+      if (footerStart % RecordBytes != 0 || n != footerStart / RecordBytes)
+        corrupt("record count", n, s"${footerStart / RecordBytes} (file length $len, footerLen $footerLen)")
+      def remaining: Long = len - 8 - f.getFilePointer
+      val dictN = f.readInt()
+      if (dictN < 0 || dictN > 256) corrupt("dictionary size", dictN, "0 to 256")
+      val dict = Array.tabulate(dictN) { i =>
+        val w = f.readInt()
+        if (w < 0 || w > remaining) corrupt(s"dictionary entry $i length", w, s"0 to $remaining")
+        val b = new Array[Byte](w); f.readFully(b); new String(b, "UTF-8")
       }
-      val bloom = new Array[Byte](f.readInt()); f.readFully(bloom)
+      val bloomLen = f.readInt()
+      if (bloomLen != FwbBloom.Bytes) corrupt("bloom length", bloomLen, FwbBloom.Bytes.toString)
+      if (remaining != bloomLen)
+        corrupt("footerLen", footerLen, s"${footerLen - remaining + bloomLen} (the footer's own fields)")
+      val bloom = new Array[Byte](bloomLen); f.readFully(bloom)
       FwbStats(n, minKey, maxKey, dict, bloom)
     } finally f.close()
   }

@@ -73,7 +73,7 @@ object DedupQueries {
       s"WHEN n <= ${1000L << (2 * (r - 4))} THEN ${NumHashes / r}")
       .mkString(" ") + s" ELSE ${NumHashes / 8} END"
 
-  /** doc_id + sorted distinct word-k-shingle set. WordShingles is the
+  /** doc_id + sorted distinct word-k-shingle set. `wordShingles` is the
     * native kernel; TextFunctions.shingles (the `transform(sequence…)`
     * composition) is its executable specification — NativeKernelsSpec
     * asserts they agree; the kernel is ~100× faster (interpreted lambdas
@@ -287,7 +287,7 @@ object DedupQueries {
     val probes = g.filter(probePredicate($"doc_id"))
       .select($"doc_id".as("probe_id"), $"grams".as("p_grams"))
     val scored = g.join(broadcast(probes), $"doc_id" =!= $"probe_id")
-      .select($"probe_id", $"doc_id", jaccardSortedLong($"p_grams", $"grams").as("j"))
+      .select($"probe_id", $"doc_id", jaccardSorted($"p_grams", $"grams").as("j"))
     // per-probe top-1 as max(struct(j, -doc_id)): field-by-field struct
     // ordering = (j DESC, doc_id ASC) ties — same result as a row_number
     // window, but the aggregate partial-combines map-side, so the shuffle

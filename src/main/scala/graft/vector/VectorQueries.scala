@@ -31,7 +31,7 @@ import graft.operators.{MmrSelect, TopKByScore}
   */
 object VectorQueries {
 
-  // dotF is the native DotProductFloat kernel: VectorFunctions.dot (the
+  // dotF is the native dot-product kernel: VectorFunctions.dot (the
   // zip_with+aggregate formulation) is semantically identical but evaluates
   // its lambdas interpreted — ~128 expression-tree walks per pair. The
   // kernel is one tight loop; NativeKernelsSpec asserts their equivalence.

@@ -13,12 +13,12 @@ class AccelerateVectorOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  test("declarative dot over float arrays is rewritten to DotProductFloat") {
+  test("declarative dot over float arrays is rewritten to the dotF kernel") {
     import spark.implicits._
     val df = Tables.embeddings(spark, sf)
       .select(VectorFunctions.dot($"embedding", $"embedding").as("d"))
     val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("dotproductfloat"), optimized.take(800))
+    assert(optimized.contains("KernelOps.dotF"), optimized.take(800))
     assert(!optimized.contains("aggregate(zip_with"))
   }
 
@@ -45,12 +45,12 @@ class AccelerateVectorOpsSpec extends AnyFunSuite {
       // into the LocalRelation and there is no plan left to inspect
       .repartition(1)
     val viaRule = df.select(VectorFunctions.dot($"a", $"b").as("d"))
-    assert(viaRule.queryExecution.optimizedPlan.toString.contains("dotproductfloat"))
+    assert(viaRule.queryExecution.optimizedPlan.toString.contains("KernelOps.dotF"))
     // unrewritten executable spec: same composition with the fold flipped
     // (v + acc) — semantically identical, shape-different → rule skips it
     val spec = df.select(expr(
       "aggregate(zip_with(a, b, (x, y) -> double(x) * double(y)), CAST(0.0 AS DOUBLE), (acc, v) -> v + acc)").as("d"))
-    assert(!spec.queryExecution.optimizedPlan.toString.contains("dotproductfloat"))
+    assert(!spec.queryExecution.optimizedPlan.toString.contains("KernelOps.dotF"))
     def vals(rows: Array[org.apache.spark.sql.Row]): Seq[Any] =
       rows.map(r => if (r.isNullAt(0)) null else r.getDouble(0)).toSeq
     val rv = vals(viaRule.collect())
@@ -63,7 +63,7 @@ class AccelerateVectorOpsSpec extends AnyFunSuite {
     val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
     // double arrays: VectorFunctions.dot still works, just unrewritten
     val plain = df.select(VectorFunctions.dot($"a", $"b").as("d"))
-    assert(!plain.queryExecution.optimizedPlan.toString.contains("dotproductfloat"))
+    assert(!plain.queryExecution.optimizedPlan.toString.contains("KernelOps.dotF"))
     assert(plain.collect()(0).getDouble(0) == 11.0)
   }
 }

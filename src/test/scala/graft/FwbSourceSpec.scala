@@ -263,6 +263,54 @@ class FwbSourceSpec extends AnyFunSuite {
       "replayed stage must be cleaned up")
   }
 
+  test("a lying footer or record fails with an IOException naming the path and the field") {
+    // a 3-record file with a 2-entry dictionary, corrupted four ways;
+    // each copy sits alone in a directory without a manifest, so planning
+    // reads its footer
+    val root = Scratch.path(s"fwb_corrupt_${System.nanoTime()}")
+    new java.io.File(root).mkdirs()
+    val good = s"$root/good.gfwb"
+    sources.FwbFormat.writeFile(good,
+      Iterator(1L, 2L, 3L).map(k => org.apache.spark.sql.Row(k, k, k * 10L, if (k == 2L) "Q" else "P")),
+      Array("P", "Q"), Map("P" -> 0, "Q" -> 1)).get
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(good))
+    val footerStart = 3 * sources.FwbFormat.RecordBytes
+    val bloomLenAt = footerStart + 24 + 4 + 2 * (4 + 1)
+    def corrupted(name: String)(edit: java.nio.ByteBuffer => Unit): String = {
+      val dir = s"$root/$name"
+      new java.io.File(dir).mkdirs()
+      val b = java.nio.ByteBuffer.wrap(bytes.clone())
+      edit(b)
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part-0.gfwb"), b.array())
+      s"$dir/part-0.gfwb"
+    }
+    def ioCause(t: Throwable): Option[java.io.IOException] = t match {
+      case null => None
+      case io: java.io.IOException => Some(io)
+      case other => ioCause(other.getCause)
+    }
+    val footerLies = Seq(
+      corrupted("count4")(_.putLong(footerStart, 4L)) -> "record count is 4",
+      corrupted("count2")(_.putLong(footerStart, 2L)) -> "record count is 2",
+      corrupted("bloom")(_.putInt(bloomLenAt, Int.MaxValue - 8)) -> s"bloom length is ${Int.MaxValue - 8}")
+    for ((file, field) <- footerLies) {
+      val e = intercept[java.io.IOException](sources.FwbFormat.readFooter(file))
+      assert(e.getMessage.contains(file) && e.getMessage.contains(field), e.getMessage)
+      val viaScan = intercept[Exception](
+        spark.read.format("graft-fwb").load(new java.io.File(file).getParent).collect())
+      assert(ioCause(viaScan).exists(_.getMessage.contains(field)), viaScan.toString)
+    }
+    // a record's priority code 7 against the 2-entry dictionary
+    val badCode = corrupted("code7")(_.put(sources.FwbFormat.RecordBytes + 24, 7.toByte))
+    val e = intercept[Exception](
+      spark.read.format("graft-fwb").load(new java.io.File(badCode).getParent).collect())
+    val io = ioCause(e)
+    assert(io.exists(m => m.getMessage.contains(badCode) && m.getMessage.contains("priority code 7")), e.toString)
+    // the uncorrupted file still reads all three rows
+    val ok = corrupted("ok")(_ => ())
+    assert(spark.read.format("graft-fwb").load(new java.io.File(ok).getParent).count() == 3)
+  }
+
   test("epoch replay never overwrites committed manifest stats; a missing entry still self-heals") {
     // ADVICE r13: a replay whose staged bytes differ from the committed
     // file (partition routing can change across a restart) must NOT

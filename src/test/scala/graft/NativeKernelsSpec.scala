@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.NativeKernels._
@@ -217,7 +218,7 @@ class NativeKernelsSpec extends AnyFunSuite {
     val pairs = g.as("a").join(g.as("b"), $"a.doc_id" % 13 === $"b.doc_id" % 13 && $"a.doc_id" < $"b.doc_id")
       .select(
         jaccardSorted($"a.grams", $"b.grams").as("s"),
-        jaccardSortedLong($"a.hashes", $"b.hashes").as("h"))
+        jaccardSorted($"a.hashes", $"b.hashes").as("h"))
     assert(pairs.filter($"s" =!= $"h").count() == 0)
     assert(pairs.count() > 0)
   }
@@ -319,8 +320,8 @@ class NativeKernelsSpec extends AnyFunSuite {
     val pairs = g.as("a").join(g.as("b"),
         $"a.doc_id" % 19 === $"b.doc_id" % 19 && $"a.doc_id" < $"b.doc_id")
       .select(
-        jaccardSortedLong($"a.h", $"b.h").as("fast_l"),
-        jaccardSortedLong(transform($"a.h", x => x), transform($"b.h", x => x)).as("safe_l"),
+        jaccardSorted($"a.h", $"b.h").as("fast_l"),
+        jaccardSorted(transform($"a.h", x => x), transform($"b.h", x => x)).as("safe_l"),
         jaccardSorted($"a.g", $"b.g").as("fast_s"),
         jaccardSorted(transform($"a.g", x => x), transform($"b.g", x => x)).as("safe_s"))
     assert(pairs.filter($"fast_l" =!= $"safe_l" || $"fast_s" =!= $"safe_s").count() == 0)
@@ -625,6 +626,119 @@ class NativeKernelsSpec extends AnyFunSuite {
     }
     // and the fixture really exercised merges, not just codepoints
     assert(got.exists(_._2.exists(_ >= base)))
+  }
+
+  test("every kernel gives the same values under CODEGEN_ONLY and NO_CODEGEN") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.expressions.{BpeMergeTable, KernelOps}
+    // fixed inputs: plain and multibyte text, a double space, an empty
+    // string, null elements, empty arrays, and an all-null row
+    val bloom = new Array[Byte](KernelOps.BloomBytes)
+    Seq(3L, 11L).foreach(KernelOps.bloomInsert(bloom, _))
+    val f = (xs: Seq[java.lang.Float]) => xs
+    def cent(cell: java.lang.Long, emb: Seq[java.lang.Float], n2: java.lang.Double) = Row(cell, emb, n2)
+    val sep = graft.text.PipelineQueries.BpeSep
+    val rows = Seq(
+      Row(1L, "the quick brown fox jumps", f(Seq(1f, 2f, 3f)), f(Seq(4f, 5f, 6f)),
+        Seq("a", "b c", "d"), Seq(1L, 4L, 9L), bloom, 3L, 14.0,
+        Seq(cent(0L, Seq(1f, 2f, 3f), 14.0), cent(1L, Seq(0f, 0f, 1f), 1.0)),
+        s"${sep}a$sep${sep}b$sep${sep}ab$sep"),
+      Row(2L, "Ärger café 日本語 𝄞 naïve", f(Seq(1f, null, 3f)), f(Seq(1f, 1f, 1f)),
+        Seq("é", null, "日本"), Seq(2L, 5L), bloom, 4L, 2.0,
+        Seq(cent(null, Seq(1f, 1f, 1f), 3.0), cent(7L, Seq(1f, null, 1f), 2.0)),
+        s"${sep}日$sep${sep}本$sep"),
+      Row(3L, "", f(Seq()), f(Seq()), Seq(), Seq(), bloom, 11L, 0.0, Seq(), s"${sep}x$sep"),
+      Row(4L, "a  b", f(Seq(1f, 2f)), f(Seq(3f)), Seq("a  b"), Seq(7L), null, null, null,
+        Seq(cent(2L, Seq(1f, 2f), null)), ""),
+      Row(5L, null, null, null, null, null, null, null, null, null, null))
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("text", StringType),
+      StructField("fa", ArrayType(FloatType)), StructField("fb", ArrayType(FloatType)),
+      StructField("sa", ArrayType(StringType)), StructField("la", ArrayType(LongType)),
+      StructField("bloom", BinaryType), StructField("key", LongType),
+      StructField("n2", DoubleType),
+      StructField("cents", ArrayType(StructType(Seq(StructField("cell", LongType),
+        StructField("c_emb", ArrayType(FloatType)), StructField("c_n2", DoubleType))))),
+      StructField("seq", StringType)))
+    // the shuffle keeps the optimizer from folding the projection into a
+    // local relation, so the kernels run in the mode under test
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema).repartition(1)
+    val table = BpeMergeTable(Seq(("xx", 1L, "a", "b", "ab"), ("xx", 2L, "日", "本", "日本")), 1000L)
+    import spark.implicits._
+    val kernels = Seq(
+      "dotF" -> dotF($"fa", $"fb"),
+      "bloomMightContain" -> bloomMightContain($"bloom", $"key"),
+      "wordShingles" -> wordShingles($"text", 2),
+      "wordGrams" -> wordGrams($"text", 2),
+      "charNgrams" -> charNgrams($"text", 3),
+      "jaccardSorted" -> jaccardSorted($"sa", wordShingles($"text", 1)),
+      "charNgramHashes" -> charNgramHashes($"text", 3),
+      "jaccardSortedLong" -> jaccardSorted($"la", charNgramHashes($"text", 1)),
+      "minhashSignature" -> minhashSignature($"sa", 4),
+      "simhash60" -> simhash60($"sa"),
+      "rollingFingerprints" -> rollingFingerprints($"text", 3, 2),
+      "featureHashVector" -> featureHashVector($"sa", 8),
+      "minhashPortable" -> minhashPortable($"sa", 4),
+      "randomProject" -> randomProject($"fa", 3),
+      "foldText" -> foldText($"text"),
+      "bpeEncode" -> bpeEncode(lit("xx"), $"text", table),
+      "bpePairs" -> bpePairs($"seq", sep.charAt(0)),
+      "sortedPairs" -> sortedPairs($"la"),
+      "nearestCell" -> nearestCell($"fa", $"n2", $"cents"),
+      "byteAlias" -> byteAlias($"text"),
+      "byteUnalias" -> byteUnalias(byteAlias($"text")),
+      "byteUnalias(raw)" -> byteUnalias($"text"))
+    val projected = df.select($"id" +: kernels.map { case (n, k) => k.as(n) }: _*)
+    def run(conf: (String, String)*): Seq[Seq[Any]] = Session.withConf(spark, conf: _*) {
+      projected.orderBy($"id").collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      })
+    }
+    val codegen = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    assert(codegen.length == rows.length)
+    kernels.map(_._1).zipWithIndex.foreach { case (name, i) =>
+      val (cg, in) = (codegen.map(_(i + 1)), interpreted.map(_(i + 1)))
+      assert(cg == in, s"$name: codegen $cg, interpreted $in")
+      assert(cg.exists(_ != null), s"$name returned only nulls")
+      // null in, null out (nearestCell: null only for null centroids)
+      assert(cg.last == null, s"$name on the all-null row: ${cg.last}")
+    }
+  }
+
+  test("src/main declares kernel expression classes and KernelOps codegen strings only in JaccardSorted and NearestCell") {
+    // every other kernel is one StaticInvoke built in its NativeKernels
+    // function; comments are dropped first, so scaladoc may still quote
+    // the idioms. Generated Java names a kernel fully qualified, so any
+    // `graft.expressions.KernelOps.` left in code is a codegen string.
+    val kept = Set("JaccardSorted", "NearestCell")
+    def owners(source: String): Set[String] = {
+      val code = source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+      val decls = """(?m)^(?:final\s+|private\s+)*(?:case\s+)?(?:class|object|trait)\s+(\w+)""".r
+        .findAllMatchIn(code).map(m => m.start -> m.group(1)).toSeq
+      def ownerAt(pos: Int): String = decls.takeWhile(_._1 <= pos).lastOption.fold("<top>")(_._2)
+      val classes = """\bextends\s+(?:[\w.]*\.)?(?:Unary|Binary|Ternary)Expression\b""".r
+      val calls = """graft\.expressions\.KernelOps\.""".r
+      (classes.findAllMatchIn(code) ++ calls.findAllMatchIn(code)).map(m => ownerAt(m.start)).toSet
+    }
+    val legacy = "case class Fold(child: Expression) extends UnaryExpression {\n" +
+      "  def gen = defineCodeGen(ctx, ev, c => s\"graft.expressions.KernelOps.foldText($c)\")\n}"
+    assert(owners(legacy) == Set("Fold"))
+    assert(owners("object Helper {\n  val call = \"graft.expressions.KernelOps.dotF(a, b)\"\n}") == Set("Helper"))
+    assert(owners("case class Dot(l: Expression, r: Expression)\n    extends " +
+      "org.apache.spark.sql.catalyst.expressions.BinaryExpression") == Set("Dot"))
+    val commented = legacy.split("\n").map("// " + _).mkString("\n")
+    assert(owners(s"/** $legacy */\n$commented\nobject NativeKernels") == Set.empty)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
+    val files = java.nio.file.Files.walk(root)
+    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    val found = sources.flatMap(f => owners(java.nio.file.Files.readString(f)).map(f.getFileName.toString -> _))
+    assert(found.toSet == kept.map("NativeKernels.scala" -> _))
   }
 
   test("q78 chunk rows equal an independent per-doc recomputation (count, lengths, md5)") {

@@ -359,12 +359,12 @@ class ScaleSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(exact.nonEmpty && bloomed == exact,
       s"bloom plan diverged from exact: ${bloomed.diff(exact).take(3)}")
-    // plan pin: the bloommightcontain probe runs BELOW the verify join
+    // plan pin: the bloomMightContain probe runs BELOW the verify join
     // (map-side pre-filter), and the broadcast membership side is the
     // 1-row bloom aggregate, not a gram relation
     val plan = text.PipelineQueries.q228BloomDecontamination(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("bloommightcontain"),
+    assert(plan.contains("KernelOps.bloomMightContain"),
       s"bloom probe missing from the physical plan:\n${plan.take(800)}")
   }
 
