@@ -25,16 +25,17 @@ object Tables {
     * `.schema(...)` keeps the canon() drift adaptation fully intact (the
     * schema still comes from the actual file, not an assumption) and turns
     * the per-execution job into a per-process one — the same lifetime
-    * argument as [[rowCount]]'s memo, documented there. Keyed on the
-    * nanosAsLong flag too: the inferred dtype of TIMESTAMP(NANOS) columns
-    * depends on it, and a second session in one JVM may differ.
+    * argument as [[rowCount]]'s memo, documented there, and the same
+    * file-identity key. Keyed on the nanosAsLong flag too: the inferred
+    * dtype of TIMESTAMP(NANOS) columns depends on it, and a second
+    * session in one JVM may differ.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private def p(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val flag = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse("false")
-    val schema = schemaCache.computeIfAbsent(s"$flag|$path",
+    val schema = schemaCache.computeIfAbsent(s"$flag|${fileKey(path)}",
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
@@ -100,10 +101,11 @@ object Tables {
     * re-created (and so re-inferred) on every execution — the lake
     * fixtures whose data FILES change per commit while their schema
     * cannot (round 20). `key` names the memo entry: callers pass the
-    * lake ROOT, not the file list, precisely because part-file names
-    * churn per write. Same per-process lifetime argument as [[rowCount]];
-    * a genuine schema change within one process would be a bug this memo
-    * turns from silent into loud (column resolution fails downstream).
+    * lake ROOT, not a file identity, precisely because part files churn
+    * per write — a fingerprint key would re-infer after every commit,
+    * the job this memo exists to save. A genuine schema change within
+    * one process would be a bug this memo turns from silent into loud
+    * (column resolution fails downstream).
     */
   def parquetStable(s: SparkSession, key: String, paths: Seq[String]): DataFrame = {
     val schema = schemaCache.computeIfAbsent(s"stable|$key",
@@ -118,14 +120,16 @@ object Tables {
     * still a full Spark job (~10 cs at local[32]) — measured as the
     * r17 q67/q175 mover (+26/+10 cs: two counts vs one). A production
     * engine reads this from catalog statistics; the per-process memo
-    * is the local stand-in. Safe because a corpus regen at the same
-    * path is already out of scope for a LIVE process (the artifact
-    * fingerprints that guard regens are computed per-process too).
+    * is the local stand-in. Keyed on the file's identity
+    * ([[Scratch.fingerprint]]: names, lengths, mtimes — one `stat` for
+    * the single-file driver tables), so a table rewritten at the same
+    * path while the process lives is counted again, not served stale.
     */
   private val countCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  def rowCount(s: SparkSession, d: String, table: String): Long =
-    countCache.computeIfAbsent(s"$d/$table",
-      _ => s.read.parquet(s"$d/$table.parquet").count()).longValue()
+  def rowCount(s: SparkSession, d: String, table: String): Long = countCache.computeIfAbsent(
+    fileKey(s"$d/$table.parquet"), _ => s.read.parquet(s"$d/$table.parquet").count()).longValue()
+
+  private def fileKey(path: String): String = s"$path|${Scratch.fingerprint(path)}"
 
   /** Scale-adaptive partition count for an EXPLICIT repartition of a
     * table-derived relation (round 20, guide §2 "make partitioning
@@ -152,7 +156,8 @@ object Tables {
     * (ADVICE r17: the old any-path name invited reuse on mutable paths —
     * e.g. the hive-appended codes/cells dirs — where a stale count would
     * silently mis-size nprobe). `markerPath` is the completion-marker
-    * FILE of the publishOnce root that owns `path`.
+    * FILE of the publishOnce root that owns `path`. Keyed on the path
+    * alone: a published root never changes.
     */
   def publishedArtifactCount(s: SparkSession, path: String, markerPath: String): Long =
     countCache.computeIfAbsent(path, _ => {

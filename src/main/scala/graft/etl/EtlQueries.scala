@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Registered queries exercising the sink surface (SURVEY §2.1 S3/S4):
   * the partitioned-parquet write → re-read round trip, verified through the
@@ -433,7 +433,7 @@ object EtlQueries {
     * in the merged result are replaced, so at 100 TB the cost is
     * proportional to the partitions the batch touches, never the table.
     * Untouched partition files are not even opened (UpsertSpec pins
-    * byte-identity). localCheckpoint materializes the merge because Spark
+    * byte-identity). The merge is materialized because Spark
     * (correctly) refuses to overwrite a path still referenced by the plan
     * reading it.
     */
@@ -448,7 +448,7 @@ object EtlQueries {
       .unionByName(cdc.withColumn("version", lit(1L)))
       .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
       .drop("rn", "version")
-    merged.localCheckpoint()
+    Materialize(merged, "upsert merge")
       .repartition($"o_year", $"o_month")
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("o_year", "o_month").parquet(out)
@@ -508,7 +508,7 @@ object EtlQueries {
       touched: org.apache.spark.sql.Column, pred: org.apache.spark.sql.Column): Unit = {
     import s.implicits._
     val scoped = Tables.parquetStable(s, out, Seq(out)).filter(touched)
-    val kept = scoped.filter(!pred).localCheckpoint()
+    val kept = Materialize(scoped.filter(!pred), "delete survivors")
     // ONE metadata-sized pass decides the emptiness check (round 20 —
     // the before/after sets were two separate jobs, each re-deriving the
     // scoped scan): kept ⊆ scoped, so before-set == after-set exactly
@@ -886,7 +886,7 @@ object EtlQueries {
     val view = s"gfwb_cbo_${graft.Scratch.tag(dir)}"
     s.read.format("graft-fwb").load(path).createOrReplaceTempView(view)
     graft.Session.withConf(s, graft.relational.AdvancedQueries.CboFlags.map(_ -> "true"): _*) {
-      s.sql(connectorCboSql(view, pre)).localCheckpoint()
+      Materialize(s.sql(connectorCboSql(view, pre)), "q217 result")
     }
   }
 

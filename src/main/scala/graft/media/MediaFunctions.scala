@@ -28,6 +28,7 @@ import org.apache.spark.sql.Dataset
   * built-ins nor a scalar Expression express.
   */
 object MediaFunctions {
+  import Bytes._
 
   /** A multimodal record: opaque payload + source-side metadata. */
   case class MediaRecord(id: Long, payload: Array[Byte], format: String)
@@ -69,8 +70,6 @@ object MediaFunctions {
     try decodeWav0(payload) catch { case _: RuntimeException => None }
 
   private def decodeWav0(b: Array[Byte]): Option[DecodedAudio] = {
-    def u16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long = (leInt(b, off) & 0xffffffffL)
     if (b.length < 12 || b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
       b(8) != 'W' || b(9) != 'A' || b(10) != 'V' || b(11) != 'E') return None
     var off = 12
@@ -81,16 +80,16 @@ object MediaFunctions {
     var dataOff = -1
     var dataLen = 0
     while (off + 8 <= b.length && (dataOff < 0 || !fmtSeen)) {
-      val id = new String(b, off, 4, "US-ASCII")
-      val size = u32(off + 4)
+      val id = tag(b, off)
+      val size = le32(b, off + 4) & 0xffffffffL
       if (size > Int.MaxValue || off + 8 + size > b.length) return None
       id match {
         case "fmt " =>
           if (size < 16) return None
-          val audioFormat = u16(off + 8)
-          channels = u16(off + 10)
-          rate = leInt(b, off + 12)
-          bits = u16(off + 22)
+          val audioFormat = le16(b, off + 8)
+          channels = le16(b, off + 10)
+          rate = le32(b, off + 12)
+          bits = le16(b, off + 22)
           if (audioFormat != 1 || channels < 1 || rate < 1 || (bits != 8 && bits != 16))
             return None
           fmtSeen = true
@@ -108,7 +107,7 @@ object MediaFunctions {
     var i = 0
     while (i < n) {
       samples(i) =
-        if (bits == 16) (u16(dataOff + 2 * i) << 16) >> 16 // sign-extend s16le
+        if (bits == 16) (le16(b, dataOff + 2 * i) << 16) >> 16 // sign-extend s16le
         else (b(dataOff + i) & 0xff) - 128                 // u8 recentred
       i += 1
     }
@@ -137,9 +136,7 @@ object MediaFunctions {
     try decodeAvi0(payload) catch { case _: RuntimeException => None }
 
   private def decodeAvi0(b: Array[Byte]): Option[DecodedVideo] = {
-    def tag(off: Int): String =
-      if (off + 4 <= b.length) new String(b, off, 4, "US-ASCII") else ""
-    if (b.length < 12 || tag(0) != "RIFF" || tag(8) != "AVI ") return None
+    if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "AVI ") return None
     var width = 0
     var height = 0
     var usec = 0
@@ -149,12 +146,12 @@ object MediaFunctions {
     def walk(from: Int, until: Int, inMovi: Boolean): Unit = {
       var off = from
       while (off + 8 <= until) {
-        val id = tag(off)
-        val size = leInt(b, off + 4).toLong & 0xffffffffL
+        val id = tag(b, off)
+        val size = le32(b, off + 4) & 0xffffffffL
         if (size > Int.MaxValue || off + 8 + size > until) return
         val body = off + 8
         if (id == "LIST") {
-          val listType = tag(body)
+          val listType = tag(b, body)
           if (listType == "hdrl" || listType == "movi" || listType == "strl")
             walk(body + 4, body + size.toInt, inMovi || listType == "movi")
           else if (inMovi && listType == "rec ")
@@ -167,9 +164,9 @@ object MediaFunctions {
             // an unknown LIST inside movi could hide frames: loud, not lossy
             throw new RuntimeException(s"unknown LIST '$listType' inside movi")
         } else if (id == "avih" && size >= 40) {
-          usec = leInt(b, body)
-          width = leInt(b, body + 32)
-          height = leInt(b, body + 36)
+          usec = le32(b, body)
+          width = le32(b, body + 32)
+          height = le32(b, body + 36)
           avihSeen = true
         } else if (inMovi && id.length == 4 && id.endsWith("db")) {
           frames += b.slice(body, body + size.toInt)
@@ -227,36 +224,30 @@ object MediaFunctions {
     val movi = 4 + frames.size * (8 + frameBytes)
     val riff = 4 + (8 + hdrl) + (8 + movi)
     val out = new Array[Byte](8 + riff)
-    var off = 0
-    def putTag(s: String): Unit = { s.getBytes("US-ASCII").foreach { c => out(off) = c; off += 1 } }
-    def putLe(v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-      out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte; off += 4
-    }
-    putTag("RIFF"); putLe(riff); putTag("AVI ")
-    putTag("LIST"); putLe(hdrl); putTag("hdrl")
-    putTag("avih"); putLe(56)
-    putLe(usecPerFrame); putLe(0); putLe(0); putLe(0)
-    putLe(frames.size); putLe(0); putLe(1); putLe(frameBytes)
-    putLe(width); putLe(height); putLe(0); putLe(0); putLe(0); putLe(0)
-    putTag("LIST"); putLe(strl); putTag("strl")
-    putTag("strh"); putLe(56)
-    putTag("vids"); putTag("DIB ")
-    putLe(0); putLe(0); putLe(0)
-    putLe(1); putLe(1000000 / math.max(usecPerFrame, 1)) // scale, rate
-    putLe(0); putLe(frames.size); putLe(frameBytes); putLe(-1); putLe(0)
-    putLe(0); putLe(0) // rcFrame
-    putTag("strf"); putLe(40)
-    putLe(40); putLe(width); putLe(height)
-    out(off) = 1; off += 2          // planes
-    out(off) = 24; off += 2         // bpp
-    putLe(0); putLe(frameBytes); putLe(0); putLe(0); putLe(0); putLe(0)
-    putTag("LIST"); putLe(movi); putTag("movi")
+    val w = new Bytes.LeWriter(out)
+    w.tag("RIFF"); w.le32(riff); w.tag("AVI ")
+    w.tag("LIST"); w.le32(hdrl); w.tag("hdrl")
+    w.tag("avih"); w.le32(56)
+    w.le32(usecPerFrame, 0, 0, 0)
+    w.le32(frames.size, 0, 1, frameBytes)
+    w.le32(width, height, 0, 0, 0, 0)
+    w.tag("LIST"); w.le32(strl); w.tag("strl")
+    w.tag("strh"); w.le32(56)
+    w.tag("vids"); w.tag("DIB ")
+    w.le32(0, 0, 0)
+    w.le32(1, 1000000 / math.max(usecPerFrame, 1)) // scale, rate
+    w.le32(0, frames.size, frameBytes, -1, 0)
+    w.le32(0, 0) // rcFrame
+    w.tag("strf"); w.le32(40)
+    w.le32(40, width, height)
+    w.le16(1, 24) // planes, bpp
+    w.le32(0, frameBytes, 0, 0, 0, 0)
+    w.tag("LIST"); w.le32(movi); w.tag("movi")
     frames.foreach { rgb =>
-      putTag("00db"); putLe(frameBytes)
+      w.tag("00db"); w.le32(frameBytes)
       var y = 0
       while (y < height) {
-        val base = off + (height - 1 - y) * rowSize
+        val base = w.off + (height - 1 - y) * rowSize
         var x = 0
         while (x < width) {
           val s = 3 * (y * width + x)
@@ -267,9 +258,9 @@ object MediaFunctions {
         }
         y += 1
       }
-      off += frameBytes
+      w.off += frameBytes
     }
-    require(off == out.length, s"encodeAvi layout bug: $off != ${out.length}")
+    require(w.off == out.length, s"encodeAvi layout bug: ${w.off} != ${out.length}")
     out
   }
 
@@ -279,25 +270,16 @@ object MediaFunctions {
     require(samples.forall(s => s >= Short.MinValue && s <= Short.MaxValue))
     val dataLen = samples.length * 2
     val out = new Array[Byte](44 + dataLen)
-    def putLe(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-      out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-    }
-    def putTag(off: Int, s: String): Unit =
-      s.getBytes("US-ASCII").zipWithIndex.foreach { case (c, i) => out(off + i) = c }
-    putTag(0, "RIFF"); putLe(4, 36 + dataLen); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe(16, 16)
+    putTag(out, 0, "RIFF"); putLe32(out, 4, 36 + dataLen); putTag(out, 8, "WAVE")
+    putTag(out, 12, "fmt "); putLe32(out, 16, 16)
     out(20) = 1 // PCM
     out(22) = channels.toByte
-    putLe(24, sampleRate)
-    putLe(28, sampleRate * channels * 2) // byte rate
-    out(32) = (channels * 2).toByte      // block align
-    out(34) = 16                          // bits per sample
-    putTag(36, "data"); putLe(40, dataLen)
-    samples.indices.foreach { i =>
-      out(44 + 2 * i) = samples(i).toByte
-      out(44 + 2 * i + 1) = (samples(i) >> 8).toByte
-    }
+    putLe32(out, 24, sampleRate)
+    putLe32(out, 28, sampleRate * channels * 2) // byte rate
+    out(32) = (channels * 2).toByte              // block align
+    out(34) = 16                                 // bits per sample
+    putTag(out, 36, "data"); putLe32(out, 40, dataLen)
+    samples.indices.foreach(i => putLe16(out, 44 + 2 * i, samples(i)))
     out
   }
 
@@ -356,22 +338,18 @@ object MediaFunctions {
     Some(DecodedImage(w, h, rgb))
   }
 
-  private def leInt(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   /** BMP: BITMAPFILEHEADER (14) + BITMAPINFOHEADER (≥40), bpp=24,
     * BI_RGB only. Pixel rows are BGR, padded to 4 bytes, bottom-up when
     * height > 0 (the common case) — the decoder flips to top-down.
     */
   private def decodeBmp(b: Array[Byte]): Option[DecodedImage] = {
     if (b.length < 54) return None
-    val dataOff = leInt(b, 10)
-    val hdrSize = leInt(b, 14)
-    val w = leInt(b, 18)
-    val hRaw = leInt(b, 22)
-    val bpp = (b(28) & 0xff) | ((b(29) & 0xff) << 8)
-    val compression = leInt(b, 30)
+    val dataOff = le32(b, 10)
+    val hdrSize = le32(b, 14)
+    val w = le32(b, 18)
+    val hRaw = le32(b, 22)
+    val bpp = le16(b, 28)
+    val compression = le32(b, 30)
     if (hdrSize < 40 || w < 1 || w > (1 << 24) || hRaw == 0 || bpp != 24 || compression != 0)
       return None
     val h = math.abs(hRaw)
@@ -415,19 +393,15 @@ object MediaFunctions {
     val rowSize = ((width * 3 + 3) / 4) * 4
     val dataSize = rowSize * height
     val out = new Array[Byte](54 + dataSize)
-    def putLe(off: Int, v: Int): Unit = {
-      out(off) = v.toByte; out(off + 1) = (v >> 8).toByte
-      out(off + 2) = (v >> 16).toByte; out(off + 3) = (v >> 24).toByte
-    }
     out(0) = 'B'; out(1) = 'M'
-    putLe(2, 54 + dataSize) // file size
-    putLe(10, 54)           // pixel data offset
-    putLe(14, 40)           // BITMAPINFOHEADER size
-    putLe(18, width)
-    putLe(22, height)       // positive = bottom-up
-    out(26) = 1             // planes
-    out(28) = 24            // bpp
-    putLe(34, dataSize)
+    putLe32(out, 2, 54 + dataSize) // file size
+    putLe32(out, 10, 54)           // pixel data offset
+    putLe32(out, 14, 40)           // BITMAPINFOHEADER size
+    putLe32(out, 18, width)
+    putLe32(out, 22, height)       // positive = bottom-up
+    out(26) = 1                    // planes
+    out(28) = 24                   // bpp
+    putLe32(out, 34, dataSize)
     var y = 0
     while (y < height) {
       val base = 54 + (height - 1 - y) * rowSize // bottom-up
@@ -505,19 +479,18 @@ object MediaFunctions {
     defl.end()
     val out = new java.io.ByteArrayOutputStream(z.size() + 64)
     out.write(PngSignature, 0, 8)
-    def beInt(v: Int): Array[Byte] =
-      Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def chunk(typ: String, data: Array[Byte]): Unit = {
-      out.write(beInt(data.length), 0, 4)
-      val t = typ.getBytes("US-ASCII")
+      val c = new Array[Byte](12 + data.length) // length, type, data, CRC
+      putBe32(c, 0, data.length); putTag(c, 4, typ)
+      System.arraycopy(data, 0, c, 8, data.length)
       val crc = new java.util.zip.CRC32()
-      crc.update(t); crc.update(data)
-      out.write(t, 0, 4); out.write(data, 0, data.length)
-      out.write(beInt(crc.getValue.toInt), 0, 4)
+      crc.update(c, 4, 4 + data.length)
+      putBe32(c, 8 + data.length, crc.getValue.toInt)
+      out.write(c, 0, c.length)
     }
     val ihdr = new Array[Byte](13)
-    System.arraycopy(beInt(width), 0, ihdr, 0, 4)
-    System.arraycopy(beInt(height), 0, ihdr, 4, 4)
+    putBe32(ihdr, 0, width)
+    putBe32(ihdr, 4, height)
     ihdr(8) = 8  // bit depth
     ihdr(9) = 2  // color type: truecolor
     // compression 0, filter method 0, interlace 0 — already zeroed
@@ -547,9 +520,6 @@ object MediaFunctions {
     if (b.length < 8 + 25 + 12) return None // sig + IHDR + IEND minimum
     var i = 0
     while (i < 8) { if (b(i) != PngSignature(i)) return None; i += 1 }
-    def beInt(off: Int): Int =
-      ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-        ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
     var off = 8
     var w = 0; var h = 0
     var seenIhdr = false; var seenIend = false
@@ -557,17 +527,17 @@ object MediaFunctions {
     val idat = new java.io.ByteArrayOutputStream()
     while (!seenIend) {
       if (off + 12 > b.length) return None
-      val len = beInt(off)
+      val len = be32(b, off)
       if (len < 0 || off.toLong + 12 + len > b.length) return None
-      val typ = new String(b, off + 4, 4, "US-ASCII")
+      val typ = tag(b, off + 4)
       val crc = new java.util.zip.CRC32()
       crc.update(b, off + 4, 4 + len)
-      if (crc.getValue.toInt != beInt(off + 8 + len)) return None
+      if (crc.getValue.toInt != be32(b, off + 8 + len)) return None
       typ match {
         case "IHDR" =>
           if (seenIhdr || len != 13 || off != 8) return None // must be first
           seenIhdr = true
-          w = beInt(off + 8); h = beInt(off + 12)
+          w = be32(b, off + 8); h = be32(b, off + 12)
           val depth = b(off + 16) & 0xff
           val color = b(off + 17) & 0xff
           val compression = b(off + 18) & 0xff
@@ -1131,7 +1101,6 @@ object MediaFunctions {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
     var off = 2
     def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
     // parsed state
     val quant = new Array[Array[Int]](4)
     // huffman: (class 0/1)(id 0..3) → (maxcode, valptr, mincode, vals)
@@ -1184,7 +1153,7 @@ object MediaFunctions {
       if (off + 4 > b.length || u8(off) != 0xff) return None
       val m = u8(off + 1)
       if (m == 0xd9 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) return None // EOI/TEM/RSTn before SOS
-      val len = u16(off + 2)
+      val len = be16(b, off + 2)
       if (len < 2 || off + 2 + len > b.length) return None
       val pEnd = off + 2 + len
       m match {
@@ -1192,7 +1161,7 @@ object MediaFunctions {
           progressive = m == 0xc2
           if (w != 0 || len < 8) return None
           if (u8(off + 4) != 8) return None // precision
-          h = u16(off + 5); w = u16(off + 7)
+          h = be16(b, off + 5); w = be16(b, off + 7)
           val nf = u8(off + 9)
           if (w < 1 || h < 1 || nf != 3) return None // tier: 3-comp JFIF
           if (3L * w * h > (1L << 26)) return None
@@ -1218,7 +1187,7 @@ object MediaFunctions {
           if (!s444 && !(s420 && !progressive)) return None
         case 0xdd => // DRI — restart interval in MCUs
           if (len != 4) return None
-          restartInt = u16(off + 4)
+          restartInt = be16(b, off + 4)
         case 0xc4 => // DHT (possibly several tables)
           if (!parseDht(off + 4, pEnd)) return None
         case 0xdb => // DQT (possibly several tables)
@@ -1402,7 +1371,7 @@ object MediaFunctions {
         // SOS header of this scan
         if (scanOff + 4 > b.length || u8(scanOff) != 0xff || u8(scanOff + 1) != 0xda)
           return None
-        val sLen = u16(scanOff + 2)
+        val sLen = be16(b, scanOff + 2)
         if (sLen < 2 || scanOff + 2 + sLen > b.length) return None
         val ns = u8(scanOff + 4)
         if (ns < 1 || ns > nc || sLen != 6 + 2 * ns) return None
@@ -1591,7 +1560,7 @@ object MediaFunctions {
             scanOff = pos; walking = false
           } else if (mm == 0xc4 || mm == 0xfe || (mm >= 0xe0 && mm <= 0xef)) {
             if (pos + 4 > b.length) return None
-            val l2 = u16(pos + 2)
+            val l2 = be16(b, pos + 2)
             if (l2 < 2 || pos + 2 + l2 > b.length) return None
             if (mm == 0xc4 && !parseDht(pos + 4, pos + 2 + l2)) return None
             pos += 2 + l2

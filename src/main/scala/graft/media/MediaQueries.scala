@@ -397,16 +397,14 @@ object MediaQueries {
     */
   private[graft] def floatWavBytes(id: Long): Array[Byte] = {
     val data = Array.tabulate(8)(i => ((id + 7 * i) % 256).toByte)
-    val out = new java.io.ByteArrayOutputStream()
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >>> 24) & 0xff) }
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    tag("RIFF"); le32(4 + 24 + 8 + data.length); tag("WAVE")
-    tag("fmt "); le32(16)
-    le16(3); le16(1); le32(8000); le32(32000); le16(4); le16(32) // format 3 = float
-    tag("data"); le32(data.length); out.write(data)
-    out.toByteArray
+    val out = new Array[Byte](44 + data.length)
+    val w = new Bytes.LeWriter(out)
+    w.tag("RIFF"); w.le32(4 + 24 + 8 + data.length); w.tag("WAVE")
+    w.tag("fmt "); w.le32(16)
+    w.le16(3, 1); w.le32(8000, 32000); w.le16(4, 32) // format 3 = float
+    w.tag("data"); w.le32(data.length)
+    System.arraycopy(data, 0, out, w.off, data.length)
+    out
   }
 
   /** A valid encodeAvi container with its first frame tag patched
@@ -501,18 +499,12 @@ object MediaQueries {
     * isolates ONE rejection branch.
     */
   private[graft] def pngPoison(kind: String, png: Array[Byte]): Array[Byte] = {
-    def beInt(b: Array[Byte], off: Int): Int =
-      ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-        ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-    def putBe(b: Array[Byte], off: Int, v: Int): Unit = {
-      b(off) = (v >> 24).toByte; b(off + 1) = (v >> 16).toByte
-      b(off + 2) = (v >> 8).toByte; b(off + 3) = v.toByte
-    }
+    import Bytes.{be32, putBe32, tag}
     def fixCrc(b: Array[Byte], chunkOff: Int): Unit = {
-      val len = beInt(b, chunkOff)
+      val len = be32(b, chunkOff)
       val c = new java.util.zip.CRC32()
       c.update(b, chunkOff + 4, 4 + len)
-      putBe(b, chunkOff + 8 + len, c.getValue.toInt)
+      putBe32(b, chunkOff + 8 + len, c.getValue.toInt)
     }
     // offset of the first `typ` chunk; a stream without one, or a chunk
     // whose length runs past the end, fails naming `typ` before any read
@@ -523,11 +515,11 @@ object MediaQueries {
       var off = 8
       while ({
         if (off + 12 > b.length) missing(s"none before byte ${b.length}")
-        val len = beInt(b, off)
+        val len = be32(b, off)
         if (len < 0 || off + 12L + len > b.length)
           missing(s"the chunk at byte $off declares length $len, past the end at byte ${b.length}")
-        new String(b, off + 4, 4, "US-ASCII") != typ
-      }) off += 12 + beInt(b, off)
+        tag(b, off + 4) != typ
+      }) off += 12 + be32(b, off)
       off
     }
     kind match {
@@ -542,16 +534,16 @@ object MediaQueries {
         o
       case _ => // truncated
         val c = chunkOff(png, "IDAT")
-        val len = beInt(png, c)
+        val len = be32(png, c)
         require(len > 4, s"IDAT too short to truncate: $len")
         val newLen = len - 4
         val out = new Array[Byte](png.length - 4)
         System.arraycopy(png, 0, out, 0, c)
-        putBe(out, c, newLen)
+        putBe32(out, c, newLen)
         System.arraycopy(png, c + 4, out, c + 4, 4 + newLen)
         val crc = new java.util.zip.CRC32()
         crc.update(out, c + 4, 4 + newLen)
-        putBe(out, c + 8 + newLen, crc.getValue.toInt)
+        putBe32(out, c + 8 + newLen, crc.getValue.toInt)
         System.arraycopy(png, c + 12 + len, out, c + 12 + newLen,
           png.length - (c + 12 + len))
         out
@@ -678,7 +670,7 @@ object MediaQueries {
 
   /** End of the marker segment at `off`: marker, length field, payload. */
   private def jpegSegEnd(jpg: Array[Byte], off: Int): Int =
-    off + 2 + (((jpg(off + 2) & 0xff) << 8) | (jpg(off + 3) & 0xff))
+    off + 2 + Bytes.be16(jpg, off + 2)
 
   /** Offset of the first FF `m` marker after SOI, stepping over whole
     * segments. A stream without it fails with a named

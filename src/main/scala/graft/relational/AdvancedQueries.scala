@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Analytics beyond the reference's literal surface (SURVEY §2.5/§2.8
   * "absent in the reference, free in Spark" tier): multi-level aggregation
@@ -1275,7 +1275,7 @@ object AdvancedQueries {
     * filtered dimension outward, which at 100 TB is the difference
     * between shuffling the fact against the full customer table and
     * probing it with a region-bounded broadcast. The plan is FORCED
-    * while the CBO flags are set (localCheckpoint materializes the
+    * while the CBO flags are set ([[graft.Materialize]] materializes the
     * result), then every flag is restored — session hygiene — and the
     * oracle gates the ANSWER, which must be identical under any join
     * order. CboSpec pins the reorder itself (leaf order with stats+CBO
@@ -1287,7 +1287,7 @@ object AdvancedQueries {
     // materialize UNDER the CBO flags: a lazy return would re-optimize at
     // action time (possibly after restore) and silently lose the reorder
     graft.Session.withConf(s, CboFlags.map(_ -> "true"): _*) {
-      s.sql(cboJoinSql(pre)).localCheckpoint()
+      Materialize(s.sql(cboJoinSql(pre)), "q206 result")
     }
   }
 

@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Join shapes that only matter once the fact table is big: the multi-way
   * star join (the plan a 1000-executor cluster runs all day), the
@@ -379,7 +379,7 @@ object ScaleQueries {
     basketPairs(cappedBasketArrays(s, dir))
 
   /** Sorted distinct parts per order, capped at 64 items, materialized
-    * ONCE (localCheckpoint) — the shared candidate base of q165 (pair
+    * ONCE ([[graft.Materialize]]) — the shared candidate base of q165 (pair
     * mining) and q170 (rule scoring).
     *
     * Round-20 optimization (guide §2.4 "remove shuffles outright"; VERDICT
@@ -399,7 +399,7 @@ object ScaleQueries {
   private def cappedBasketArrays(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val MaxBasket = 64L
-    Tables.lineitem(s, dir)
+    Materialize(Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_partkey")
       .groupBy($"l_orderkey")
       .agg(
@@ -410,8 +410,7 @@ object ScaleQueries {
         // the declared policy exact even off-contract)
         max(when($"l_partkey".isNull, 1L).otherwise(0L)).as("has_null"))
       .where(size($"parts") + $"has_null" <= MaxBasket)
-      .select($"l_orderkey", $"parts")
-      .localCheckpoint()
+      .select($"l_orderkey", $"parts"), "capped baskets")
   }
 
   /** Top-25 co-purchased pairs from the capped basket arrays: the pair

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.expressions.NativeKernels._
 
 /** Near-duplicate detection over `documents` — the training-data-pipeline
@@ -274,16 +274,15 @@ object DedupQueries {
     // whole gram pass in ONE scan task (1.6 s of q28's 2.4 s at sf0.1).
     // Shuffling the raw text FIRST costs the same bytes (text ≈ its gram
     // hashes here; both corpus-linear) and the kernel then runs on every
-    // core; the localCheckpoint pins the per-document evaluation exactly
+    // core; the materialization pins the per-document evaluation exactly
     // as the old post-kernel exchange did.
     // explicit count: AQE would coalesce the ~MB-scale text shuffle to
     // one task and serialize the kernel again (it sizes by bytes, blind
     // to per-row compute); computeParallelism scales with the corpus
-    val g = Tables.documents(s, dir)
+    val g = Materialize(Tables.documents(s, dir)
       .select($"doc_id", lower($"text").as("text"))
       .repartition(Tables.computeParallelism(s, dir, "documents"), $"doc_id")
-      .select($"doc_id", charNgramHashes($"text", 3).as("grams"))
-      .localCheckpoint()
+      .select($"doc_id", charNgramHashes($"text", 3).as("grams")), "q28 document grams")
     val probes = g.filter(probePredicate($"doc_id"))
       .select($"doc_id".as("probe_id"), $"grams".as("p_grams"))
     val scored = g.join(broadcast(probes), $"doc_id" =!= $"probe_id")
@@ -317,19 +316,18 @@ object DedupQueries {
   def q40CorpusClean(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.functions.TextFunctions.{langId, tokens}
-    val survivors = Tables.documents(s, dir)
+    val survivors = Materialize(Tables.documents(s, dir)
       .filter(size(tokens($"text")) >= 20)
-      .filter(langId($"text") === $"lang")
+      .filter(langId($"text") === $"lang"), "q40 gate survivors")
       // materialize survivors ONCE: the set feeds both the dedup branch
       // and the final anti-join side, and a plain repartition does NOT
       // dedupe them — per-branch column pruning produces differently-
       // projected exchanges that never canonically match, so the
       // regexp-heavy langId gate ran twice (review r3, verified in the
-      // executed plan). localCheckpoint is the intermediate-table pattern
+      // executed plan). Materializing is the intermediate-table pattern
       // the reference pipeline itself uses between stages (etl.py writes
       // each dimension before reuse); cost is one linear write of the
       // surviving ~37%.
-      .localCheckpoint()
     val sh = survivors.select($"doc_id", wordShingles($"text", ShingleK).as("sh"))
     val (mr, mb) = docMinhashPlan(s, dir)
     val dropIds = verifiedPairs(s, sh, mr, mb)
@@ -495,8 +493,8 @@ object DedupQueries {
     *
     * Scale shape: per round one equi-join (edges ⋈ labels) + one partial-
     * aggregated min — rounds = component diameter (near-dup clusters are
-    * shallow; the 20-round guard is far above any real corpus).
-    * `localCheckpoint` truncates lineage so the plan does not grow per
+    * shallow; the 50-round guard is far above any real corpus).
+    * [[graft.Materialize]] truncates lineage so the plan does not grow per
     * round — the standard iterative-algorithm pattern (GraphX Pregel
     * does the same). The driver holds only a per-round convergence count,
     * never rows.
@@ -519,12 +517,12 @@ object DedupQueries {
   private[graft] def componentLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (mr, mb) = docMinhashPlan(s, dir)
-    val pairs = verifiedPairs(s, shingleSets(s, dir), mr, mb)
-      .select($"id_a", $"id_b").localCheckpoint()
+    val pairs = Materialize(verifiedPairs(s, shingleSets(s, dir), mr, mb)
+      .select($"id_a", $"id_b"), "q69 verified pairs")
     val edges = pairs.union(pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")))
       .toDF("src", "dst")
-    var labels = edges.select($"src".as("id")).distinct()
-      .withColumn("comp", $"id").localCheckpoint()
+    var labels = Materialize(edges.select($"src".as("id")).distinct()
+      .withColumn("comp", $"id"), "q69 initial labels")
     var converged = false
     var rounds = 0
     // min-label propagation moves the minimum one hop per round, so the
@@ -541,10 +539,9 @@ object DedupQueries {
       // contributes exactly one labels row, so max(old) IS that label)
       // folds the test into the same checkpointed pass; `changed` is then
       // a plain scan of the checkpoint, no join, no recompute.
-      val updated = labels.select($"id", $"comp", $"comp".as("old"))
+      val updated = Materialize(labels.select($"id", $"comp", $"comp".as("old"))
         .union(viaNeighbors)
-        .groupBy($"id").agg(min($"comp").as("comp"), max($"old").as("old"))
-        .localCheckpoint()
+        .groupBy($"id").agg(min($"comp").as("comp"), max($"old").as("old")), "q69 label round")
       val changed = updated.filter($"comp" =!= $"old").count()
       labels = updated.select($"id", $"comp")
       converged = changed == 0
@@ -622,13 +619,13 @@ object DedupQueries {
     val K = 32
     val sigMin = udaf(graft.operators.SignatureMin)
     // round-20 (VERDICT r19 next #9): the ≤|sources|-row sketch table is
-    // localCheckpointed so both pair sides read ONE materialization — the
-    // corpus minhash pass ran once per join branch before (two full
-    // md5×32 scans; exchange reuse was AQE luck, not plan structure)
-    val sk = Tables.documents(s, dir)
+    // materialized so both pair sides read ONE copy — the corpus minhash
+    // pass ran once per join branch before (two full md5×32 scans;
+    // exchange reuse was AQE luck). Bounded: sources are a categorical
+    // domain (20 in the test corpora), and the pair sweep broadcasts it.
+    val sk = Materialize(Tables.documents(s, dir)
       .select($"source", minhashPortable(wordShingles($"text", ShingleK), K).as("sig"))
-      .groupBy($"source").agg(sigMin($"sig").as("ssig"))
-      .localCheckpoint()
+      .groupBy($"source").agg(sigMin($"sig").as("ssig")), "q102 source sketches", Some(1024L))
     val a = sk.select($"source".as("src_a"), $"ssig".as("sa"))
     val b = sk.select($"source".as("src_b"), $"ssig".as("sb"))
     a.join(b, $"src_a" < $"src_b")

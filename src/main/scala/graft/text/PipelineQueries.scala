@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.expressions.NativeKernels.wordShingles
 import graft.functions.TextFunctions.tokens
 
@@ -572,7 +572,7 @@ object PipelineQueries {
     * orders of magnitude smaller than the corpus — the reason production
     * BPE trainers operate on word counts). Each round is one map-side
     * pair explode + a (lang, pair) partial-agg shuffle + a ≤4-row
-    * broadcast join back, with `localCheckpoint` truncating lineage per
+    * broadcast join back, with [[graft.Materialize]] truncating lineage per
     * round (the Lloyd-loop idiom). Nothing in the loop grows with corpus
     * size, only with vocabulary size.
     */
@@ -604,7 +604,7 @@ object PipelineQueries {
     val s = words.sparkSession
     import s.implicits._
     val sep = BpeSep
-    var st = words
+    var st = Materialize(words
       .select($"lang", $"freq",
         // fail-loud no-sentinel invariant (ADVICE r19): a raw word
         // carrying the U+0001 sentinel would make the sentinel-count
@@ -620,8 +620,7 @@ object PipelineQueries {
             .otherwise(raise_error(concat(
               lit("bpe train: word contains the U+0001 symbol sentinel: "),
               $"word"))),
-          "(.)", s"$sep$$1$sep").as("seq"))
-      .localCheckpoint()
+          "(.)", s"$sep$$1$sep").as("seq")), "bpe initial state")
     val merges = Seq.newBuilder[DataFrame]
     for (i <- 1 to BpeMerges) {
       // round-19 optimization: the pair fan-out ran as an interpreted HOF
@@ -641,7 +640,7 @@ object PipelineQueries {
         .select($"lang", $"l".as("m_l"), $"r".as("m_r"), $"n")
       // ONE eager job per round, not two (round-19 optimization, guide
       // §1.2 "the distributed algorithm"): the argmax and the merge apply
-      // were separate localCheckpoints — 2·BpeMerges blocking jobs per
+      // were separate materializations — 2·BpeMerges blocking jobs per
       // training. Folding the (≤ langs-row) best subplan into the state
       // update's broadcast join checkpoints them together; the per-round
       // best columns ride the checkpointed state (m_l/m_r/n, constant per
@@ -649,17 +648,16 @@ object PipelineQueries {
       // per group, so min() IS the value, and a lang whose pair relation
       // was empty stays absent (null m_l filtered), exactly as the old
       // checkpointed best had no row for it.
-      st = st
+      // one eager barrier per round (measured round 20: a cadence-2
+      // checkpoint was 60% SLOWER at sf0.1 — the uncheckpointed round's
+      // lineage re-executes its nested broadcast subplan as extra
+      // build jobs, costing more than the barrier it saves)
+      st = Materialize(st
         .join(broadcast(best), Seq("lang"), "left")
         .withColumn("seq", when($"m_l".isNull, $"seq").otherwise(expr(
           s"""replace(seq, concat('$sep', m_l, '$sep$sep', m_r, '$sep'),
              |  concat('$sep', m_l, m_r, '$sep'))""".stripMargin)))
-        .select($"lang", $"freq", $"seq", $"m_l", $"m_r", $"n")
-        // one eager barrier per round (measured round 20: a cadence-2
-        // checkpoint was 60% SLOWER at sf0.1 — the uncheckpointed round's
-        // lineage re-executes its nested broadcast subplan as extra
-        // build jobs, costing more than the barrier it saves)
-        .localCheckpoint()
+        .select($"lang", $"freq", $"seq", $"m_l", $"m_r", $"n"), "bpe merge round")
       // n_syms via sentinel arithmetic instead of regex split + array
       // materialization (round-19 optimization): a k-symbol state holds
       // exactly k−1 interior double-sentinels, so replacing each `··`
@@ -672,10 +670,11 @@ object PipelineQueries {
       // distinct(), not min()-aggregates: the best columns are constant
       // per lang, and a min(string) aggregate's non-mutable buffer plans
       // as SortAggregate (a sort per round) — grouping by the constant
-      // tuple is a plain HashAggregate yielding the same one row per lang
+      // tuple is a plain HashAggregate yielding the same one row per lang;
+      // unhinted: the state's measured size lets the planner choose.
       val bestRows = st.filter($"m_l".isNotNull)
         .select($"lang", $"m_l", $"m_r", $"n").distinct()
-      merges += broadcast(bestRows).join(tot, Seq("lang"))
+      merges += bestRows.join(tot, Seq("lang"))
         .select($"lang", lit(i.toLong).as("rank"),
           $"m_l".as("left_sym"), $"m_r".as("right_sym"),
           concat($"m_l", $"m_r").as("merged"),
@@ -1263,10 +1262,10 @@ object PipelineQueries {
     // ONE corpus scan: the gate rollup keeps the survivors' row (gate 0),
     // so the funnel's total is an aggregate of the 5-row relation — the
     // corpus is never re-scanned for a count
-    val gates = Tables.documents(s, dir)
+    // ≤ 5 rows (gates 0–4); feeds both the join and the total
+    val gates = Materialize(Tables.documents(s, dir)
       .select(firstFail.as("gate"))
-      .groupBy($"gate").agg(count(lit(1)).as("n_dropped"))
-      .localCheckpoint() // tiny (≤5 rows); feeds both the join and the total
+      .groupBy($"gate").agg(count(lit(1)).as("n_dropped")), "q178 gate counts", Some(5L))
     val drops = gates.filter($"gate" =!= 0L)
     val total = gates.agg(sum($"n_dropped").as("n_total"))
     val stages = Seq(
@@ -1299,9 +1298,8 @@ object PipelineQueries {
     // counts feeds BOTH the rate table and the min-target — checkpoint the
     // (≤ n_langs)-row aggregate so the corpus is scanned once for it, not
     // once per consumer (Explain audit: 3 scans → 2)
-    val counts = Tables.documents(s, dir)
-      .groupBy($"lang").agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint()
+    val counts = Materialize(Tables.documents(s, dir)
+      .groupBy($"lang").agg(count(lit(1)).as("n_docs")), "q179 language counts")
     val target = counts.agg(min($"n_docs").as("target_n"))
     val rates = counts.crossJoin(broadcast(target))
       .withColumn("rate_ppm",
@@ -1340,8 +1338,8 @@ object PipelineQueries {
     // its rollups. The checkpoint pins the vocab-sized relation so its
     // four consumers don't each re-run the token explode (Explain audit:
     // 4 corpus scans → 1).
-    val perSrc = toks.groupBy($"source", $"tok").agg(count(lit(1)).as("c_st"))
-      .localCheckpoint()
+    val perSrc = Materialize(toks.groupBy($"source", $"tok").agg(count(lit(1)).as("c_st")),
+      "q182 source token counts")
     val corpus = perSrc.groupBy($"tok").agg(sum($"c_st").as("c_t"))
     val vocabN = corpus.agg(count(lit(1)).as("v"), sum($"c_t").as("n"))
     val srcTotals = perSrc.groupBy($"source").agg(sum($"c_st").as("n_s"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.expressions.NativeKernels.dotF
 import graft.functions.VectorFunctions.cosinePrenormed
 import graft.operators.{MmrSelect, TopKByScore}
@@ -566,7 +566,7 @@ object VectorQueries {
     */
   /** The band-seeded entry set: (probe_id, vec_id) pairs to score before
     * round 1. Extracted from [[beamServe]] so its PHYSICAL plan is
-    * assertable in the suite — the eager `localCheckpoint` in the serve
+    * assertable in the suite — the eager materialization in the serve
     * loop executes this subplan at construction time, which hides it
     * from the final plan (and therefore from PlanDigestSpec's golden).
     * Shape that must hold at scale: the full-corpus band relation joins
@@ -600,24 +600,23 @@ object VectorQueries {
     // discipline): ≤ MaxProbes rows by the id-cap predicate; the retired
     // form re-ran the probe corpus scan inside every round's broadcast
     // build (rounds + 1 scans per serve).
-    val probes = e.filter(probePredicate($"vec_id"))
-      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"nrm".as("p_nrm"))
-      .localCheckpoint()
+    val probes = Materialize(e.filter(probePredicate($"vec_id"))
+      .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"), $"nrm".as("p_nrm")),
+      "beam probes", Some(MaxProbes.toLong))
     def score(cand: DataFrame): DataFrame =
       cand.join(e, "vec_id")
         .join(broadcast(probes), "probe_id")
         .select($"probe_id", $"vec_id",
           cosine($"p_emb", $"embedding", $"p_nrm", $"nrm").as("sim"))
-    // `seen` stays HASH-PARTITIONED BY probe_id across rounds (round 20,
-    // guide §2.4 "two operations keyed the same way share one exchange"):
-    // localCheckpoint preserves the physical partitioning, probe_id is a
-    // subset of every per-round clustering key, so the top-B window, the
-    // visited anti-join's seen side, AND the candidate distinct all run
-    // WITHOUT their own exchanges — the retired form paid three
-    // (probe_id, vec_id)/probe_id exchanges per round, this one pays two
-    // repartitions (candidates, union) and reuses them everywhere.
-    var seen = score(beamSeeds(s, dir))
-      .repartition($"probe_id").localCheckpoint()
+    // `seen` is repartitioned by probe_id before each materialization
+    // (round 20, meant to let the top-B window, the visited anti-join's
+    // seen side and the candidate distinct share one exchange). Under
+    // adaptive execution the materialized leaf reports no partitioning
+    // (see [[graft.Materialize]]), so each keyed operator over `seen`
+    // plans its own exchange again — the `shuffle=2` in the q213, q224
+    // and q232 digests is the final window's.
+    var seen = Materialize(score(beamSeeds(s, dir)).repartition($"probe_id"),
+      "beam seen set")
     val wBeam = Window.partitionBy($"probe_id").orderBy($"sim".desc, $"vec_id")
     for (i <- 1 to rounds) {
       val frontier = seen
@@ -628,12 +627,11 @@ object VectorQueries {
         .repartition($"probe_id").distinct()
         .join(seen.select($"probe_id", $"vec_id"), Seq("probe_id", "vec_id"), "left_anti")
       val unioned = seen.unionByName(score(fresh))
-      // checkpoint EVERY round, repartitioned (round 20 — re-measured
-      // after the codegen cache fix removed the per-round Janino tax the
-      // r19 cadence-2 choice was reacting to): a lazy round's plan
-      // re-executes ~3x inside the next round's job, and the repartition
-      // is what carries the shared probe_id partitioning forward.
-      seen = unioned.repartition($"probe_id").localCheckpoint()
+      // materialize EVERY round (round 20 — re-measured after the
+      // codegen cache fix removed the per-round Janino tax the r19
+      // cadence-2 choice was reacting to): a lazy round's plan
+      // re-executes ~3x inside the next round's job.
+      seen = Materialize(unioned.repartition($"probe_id"), "beam seen set")
     }
     seen.filter($"vec_id" =!= $"probe_id")
       .withColumn("rank", row_number().over(wBeam)).filter($"rank" <= 5)
@@ -695,7 +693,8 @@ object VectorQueries {
       val non = gen.as("x").join(gen.as("y"),
           $"x.dst" === $"y.src" && $"x.src" =!= $"y.dst")
         .select($"x.src".as("src"), $"y.dst".as("dst")).distinct()
-      knn = bestKPerSrc(s, dir, knn.union(non).distinct(), d).localCheckpoint()
+      knn = Materialize(bestKPerSrc(s, dir, knn.union(non).distinct(), d),
+        "nn-descent round")
     }
     bestKPerSrc(s, dir, symmetrized(knn), 2 * d)
   }
@@ -1087,7 +1086,7 @@ object VectorQueries {
     * estimate q149's runtime-filter choice reads.
     */
   private[graft] def lloyd(e: DataFrame, iters: Int, k: Int): DataFrame =
-    lloydMulti(subspacesAll(e, 1, EmbeddingDim), iters, k).drop("m")
+    lloydMulti(subspacesAll(e, 1, EmbeddingDim), 1, iters, k).drop("m")
 
   /** ALL subspaces of a (vec_id, embedding) relation in ONE corpus scan:
     * (m, vec_id, embedding[subDim], n2). Round-19 optimization (guide
@@ -1118,12 +1117,13 @@ object VectorQueries {
     * against the per-m centroid arrays (broadcast, ≤ spaces rows) plus a
     * (m, cell, dim) partial aggregation of 2⁻²⁰-quantized integer sums, so
     * the DuckDB oracle replays the identical training; empty cells keep
-    * their previous centroid (left join + coalesce). One eager checkpoint
-    * per ITERATION truncates lineage (the q69 iterate pattern), and no row
+    * their previous centroid (left join + coalesce). One [[graft.Materialize]]
+    * per ITERATION truncates lineage (the q69 iterate pattern) and holds
+    * the table to its spaces·k rows, and no row
     * of one m ever meets another m's centroids (VectorLawsSpec pins
     * per-subspace training ≡ the keyed run).
     */
-  private[graft] def lloydMulti(eM: DataFrame, iters: Int, k: Int): DataFrame = {
+  private[graft] def lloydMulti(eM: DataFrame, spaces: Int, iters: Int, k: Int): DataFrame = {
     import eM.sparkSession.implicits._
     val wSeed = Window.partitionBy($"m").orderBy($"vec_id")
     var cents = eM
@@ -1145,9 +1145,9 @@ object VectorQueries {
         .groupBy($"m", $"cell")
         .agg(array_sort(collect_list(struct($"pos", $"mv"))).as("pm"))
         .select($"m", $"cell", transform($"pm", x => x.getField("mv")).as("new_emb"))
-      cents = cents.join(means, Seq("m", "cell"), "left")
-        .select($"m", $"cell", coalesce($"new_emb", $"c_emb").as("c_emb"))
-        .localCheckpoint()
+      cents = Materialize(cents.join(means, Seq("m", "cell"), "left")
+        .select($"m", $"cell", coalesce($"new_emb", $"c_emb").as("c_emb")),
+        "lloyd centroids", Some(spaces.toLong * k))
         .withColumn("c_n2", dotF($"c_emb", $"c_emb"))
     }
     cents
@@ -1294,9 +1294,8 @@ object VectorQueries {
     // Materializing the (id, vector, norm, cell) relation once is the q69
     // iterate pattern; a production deployment persists it to the lake
     // instead (q148's marker idiom) and shares it with the IVF index.
-    val idx = assignCells(e, trainedCentroids(s, dir))
-      .select($"vec_id", $"embedding", sqrt($"n2").as("nrm"), $"cell")
-      .localCheckpoint()
+    val idx = Materialize(assignCells(e, trainedCentroids(s, dir))
+      .select($"vec_id", $"embedding", sqrt($"n2").as("nrm"), $"cell"), "q189 assigned corpus")
     val a = idx.select($"cell", $"vec_id".as("a_id"),
       $"embedding".as("a_emb"), $"nrm".as("a_nrm"))
     val b = idx.select($"cell", $"vec_id".as("b_id"),
@@ -1575,7 +1574,8 @@ object VectorQueries {
       ("base", subspacesAll(raw.filter(!isIncrement($"vec_id")), PqSubspaces, PqSubDim),
         baseSliceCount(s, dir)))
     variants.map { case (tag, trainM, n) =>
-      assignMulti(eMFull, lloydMulti(trainSlice(trainM, n, PqCodes), PqIters, PqCodes))
+      assignMulti(eMFull,
+        lloydMulti(trainSlice(trainM, n, PqCodes), PqSubspaces, PqIters, PqCodes))
         .select(lit(tag).as("train"), $"m".cast("long").as("m"), $"vec_id", $"cell")
     }.reduce(_ unionByName _)
       .groupBy($"train", $"m")
@@ -1731,7 +1731,7 @@ object VectorQueries {
     import s.implicits._
     val nCorpus = Tables.rowCount(s, dir, "embeddings")
     val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
-    val cbs = lloydMulti(trainSlice(eM, nCorpus, PqCodes), PqIters, PqCodes)
+    val cbs = lloydMulti(trainSlice(eM, nCorpus, PqCodes), PqSubspaces, PqIters, PqCodes)
     val vecCodes = assignMulti(eM, cbs).select($"vec_id", $"m", $"cell".as("code"))
     val lut = adcLut(eM.filter(probePredicate($"vec_id")), cbs)
     rankedTopK(adcScore(vecCodes.join(broadcast(lut), Seq("m", "code"))
@@ -1765,7 +1765,7 @@ object VectorQueries {
     val centroids = trainedCentroids(s, dir)
     val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
     val cbs = lloydMulti(trainSlice(eM, Tables.rowCount(s, dir, "embeddings"), PqCodes),
-      PqIters, PqCodes)
+      PqSubspaces, PqIters, PqCodes)
     ivfPqServe(
       probes = asProbes(e.filter(probePredicate($"vec_id"))), cents = centroids, nprobe = nprobe,
       cells = assignCells(e, centroids).select($"vec_id", $"cell"),
@@ -1887,7 +1887,7 @@ object VectorQueries {
     // [[lloydMulti]] loop each; the layout stays one (cell, c_emb, c_n2)
     // parquet per m, read back keyed by [[readCodebooks]]
     val cb = lloydMulti(trainSlice(
-      subspacesAll(raw, PqSubspaces, PqSubDim), n, PqCodes), PqIters, PqCodes)
+      subspacesAll(raw, PqSubspaces, PqSubDim), n, PqCodes), PqSubspaces, PqIters, PqCodes)
     (0 until PqSubspaces).foreach { m =>
       cb.filter(col("m") === m).select(col("cell"), col("c_emb"), col("c_n2"))
         .write.mode("overwrite").parquet(s"$root/codebook_$m")
@@ -1897,7 +1897,7 @@ object VectorQueries {
     // modulus derives from Pq8Codes, so the cap engages 32× later)
     val cb8 = lloydMulti(trainSlice(
       subspacesAll(normalizedEmb(raw), Pq8Subspaces, Pq8SubDim), n, Pq8Codes),
-      PqIters, Pq8Codes)
+      Pq8Subspaces, PqIters, Pq8Codes)
     (0 until Pq8Subspaces).foreach { m =>
       cb8.filter(col("m") === m).select(col("cell"), col("c_emb"), col("c_n2"))
         .write.mode("overwrite").parquet(s"$root/codebook8_$m")
@@ -2043,8 +2043,8 @@ object VectorQueries {
     */
   private[graft] def adcTopKFromArtifacts(s: SparkSession, dir: String, root: String,
       k: Int): DataFrame = {
-    val pRaw = Tables.embeddings(s, dir)
-      .filter(probePredicate(col("vec_id"))).localCheckpoint()
+    val pRaw = Materialize(Tables.embeddings(s, dir).filter(probePredicate(col("vec_id"))),
+      "pq probes", Some(MaxProbes.toLong))
     servePublished(s, root, asProbes(withN2(pRaw)),
       subspacesAll(pRaw, PqSubspaces, PqSubDim), "", PqSubspaces, k)
   }
@@ -2060,8 +2060,8 @@ object VectorQueries {
     */
   private[graft] def adcTopK8FromArtifacts(s: SparkSession, dir: String, root: String,
       k: Int): DataFrame = {
-    val nprobes = normalizedEmb(Tables.embeddings(s, dir))
-      .filter(probePredicate(col("vec_id"))).localCheckpoint()
+    val nprobes = Materialize(normalizedEmb(Tables.embeddings(s, dir))
+      .filter(probePredicate(col("vec_id"))), "pq8 probes", Some(MaxProbes.toLong))
     servePublished(s, root,
       asProbes(withN2(Tables.embeddings(s, dir)).filter(probePredicate(col("vec_id")))),
       subspacesAll(nprobes, Pq8Subspaces, Pq8SubDim), "8", Pq8Subspaces, k)

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives every SQL function GraftExtensions registers through spark.sql
   * on the shared test session, and pins how that session is built: with
-  * Session's fixed settings, by the one builder call under src/.
+  * Session's fixed settings, by the one builder call under src/. Also
+  * pins the other one-path rules over src/main: schema-less parquet
+  * reads and checkpoints each live in one place.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -85,6 +87,24 @@ class GraftExtensionsSpec extends AnyFunSuite {
       finally files.close()
     val offenders = sources.filter(f => schemaLess(Files.readString(f))).map(_.toString).sorted
     assert(offenders == Seq("src/main/scala/graft/ScaleUp.scala", "src/main/scala/graft/Tables.scala"))
+  }
+
+  test("Materialize.scala holds the only checkpoint call under src/main") {
+    // one materialization path: measured statistics and declared bounds
+    // ride every eager intermediate. Comments are dropped first.
+    def checkpoints(source: String): Boolean =
+      """(?:\blocalCheckpoint|\.checkpoint)\s*\(""".r.findFirstIn(
+        source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")).isDefined
+    assert(checkpoints("val s = df.select($\"a\").localCheckpoint()"))
+    assert(checkpoints("df\n  .checkpoint(eager = true)"))
+    assert(!checkpoints("Materialize(df, \"site\") /** df.localCheckpoint() */ // .checkpoint("))
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
+    val files = Files.walk(root)
+    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    val offenders = sources.filter(f => checkpoints(Files.readString(f))).map(_.toString).sorted
+    assert(offenders == Seq("src/main/scala/graft/Materialize.scala"))
   }
 
   test("kernels are callable from SQL") {

@@ -368,69 +368,84 @@ class ScaleSpec extends AnyFunSuite {
       s"bloom probe missing from the physical plan:\n${plan.take(800)}")
   }
 
+  // Structural bounded-ness evidence for a relation the plan broadcasts:
+  //   - an Aggregate (every hinted aggregate in-repo groups on a bounded
+  //     domain: returnflag/lang/source/event_type/year/bin — a global or
+  //     small-domain rollup, never per-user/per-doc);
+  //   - a Limit;
+  //   - the audited id-cap filter shape `x % m = r AND x < cap` (the
+  //     saturation-tested probe predicates — input-size independent);
+  //   - or only bounded leaves: Range/LocalRelation/OneRowRelation,
+  //     dimension-class scans, a Materialize leaf that declares its row
+  //     bound (enforced when it runs), never a fact table or a
+  //     corpus-sized artifact (cells / codes / bands / shingles / fps).
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit,
+    LocalLimit, LocalRelation, LogicalPlan, OneRowRelation, Range => RangeRelation, ResolvedHint}
+  private val factNames = Set("lineitem", "orders", "events", "documents", "embeddings")
+  private val factArtifacts = Seq("/cells", "/codes", "/bands", "/shingles", "/fps")
+  private val modPat = """% \d+\)? ?= \d+""".r
+  private val capPat = """< \d+""".r
+  private def leavesBounded(p: LogicalPlan): Boolean = p.collectLeaves().forall {
+    case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation match {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        val path = h.location.rootPaths.mkString(",")
+        !factNames.exists(t => path.contains(s"/$t.parquet")) &&
+          !factArtifacts.exists(a => path.contains(a))
+      case _ => true
+    }
+    case _: RangeRelation | _: LocalRelation | _: OneRowRelation => true
+    case l: org.apache.spark.sql.execution.LogicalRDD => Materialize.declaredBound(l).isDefined
+    case _ => false
+  }
+  private def boundedEvidence(p: LogicalPlan): Boolean =
+    leavesBounded(p) ||
+      p.exists { case _: Aggregate => true; case _ => false } ||
+      p.exists { case _: GlobalLimit | _: LocalLimit => true; case _ => false } ||
+      {
+        // the id-cap shape may sit directly in a Filter condition or be
+        // aliased in a Project that a Filter then references (q63's
+        // __eval flag) — match it anywhere in the subtree, but require
+        // an actual Filter node so an unapplied predicate can't pass;
+        // literals render cast-wrapped ("% cast(50 as bigint)"), strip
+        // the wrappers first
+        val s = p.toString.replaceAll("(?i)CAST\\((\\d+) AS \\w+\\)", "$1")
+        p.exists { case _: Filter => true; case _ => false } &&
+          modPat.findFirstIn(s).isDefined && capPat.findFirstIn(s).isDefined
+      }
+
   test("registry-wide plan hygiene: no cartesian product anywhere; BNLJ only on the audited bounded-anchor list") {
     // The r9 manual sweep of all 174 plans found 0 CartesianProduct and 16
     // BroadcastNestedLoopJoins, every one a broadcast of a bounded anchor
     // (1-row aggregates, ≤k-row centroid/LUT relations, id-bounded probe
     // sets). Pin both facts so a refactor that degrades a join to a true
     // cartesian — or sneaks a fact-sized BNLJ into a new query — fails
-    // here instead of at 100 TB.
-    val auditedBnlj = Set(
-      "q102_source_similarity", "q112_split_contamination",
-      "q138_pq_adc_search", "q140_ivf_pq_search", "q148_ann_index_roundtrip",
-      "q149_filtered_ann", "q150_drift_psi", "q159_decayed_score",
-      "q169_feature_bins", "q170_association_rules", "q176_pq_code_checksum",
-      "q18_knn_topk", "q27_cosine_top_pairs", "q28_ngram_jaccard_probe",
-      "q35_ivf_assign", "q38_tfidf", "q54_ivf_search",
-      // q189 reuses q35's assignment verbatim — same 8-row trained-centroid
-      // broadcast cross; its prune join is a plain cell equi-join
-      "q189_semantic_dedup",
-      // q193 is q18's bounded-probe-broadcast sweep over code vectors
-      // (plus the 1-row trained-bounds broadcast cross); q195 composes it
-      // with q54's centroid/probe-cell broadcasts
-      "q193_sq8_search", "q195_ivf_sq_search",
-      // q181's exact side is q18's machinery: a =!= join against the
-      // id-capped probe broadcast (≤ MaxProbes rows by construction)
-      "q181_ann_recall",
-      // q178 crossJoins the 1-row corpus-total aggregate onto its 4-row
-      // stage dimension, q179 the 1-row min-count target onto the per-lang
-      // counts, q182 the bounded-domain per-source totals onto the vocab
-      // relation (q150's smoothing-grid shape)
-      "q178_quality_funnel", "q179_mixture_resample", "q182_source_kl",
-      // q198 crossJoins the 1-row corpus token total onto the ≤64-row
-      // exact recount of sketch-nominated candidates (q178's shape)
-      "q198_approx_top_k",
-      // q220's two retrievers and q221's cross-language miner are q18's
-      // machinery verbatim: a =!= sweep against the id-capped probe
-      // broadcast (≤ MaxProbes rows by construction; q221's carries the
-      // probe's lang for the inequality filter)
-      "q220_rrf_fusion", "q221_hard_negatives",
-      // q199's pool sweep is the same =!= join against the id-capped probe
-      // broadcast, now feeding the MmrSelect aggregation directly
-      "q199_mmr_diversified",
-      // q229's recall stage is the PQ8 artifact serve (bounded persisted
-      // centroid/codebook broadcast crosses, a <= MaxProbes-row
-      // checkpointed probe relation); the rerank joins are plain
-      // equi-joins against the probe-bounded candidate relation. q235 is
-      // that serve registered directly; q236 adds the 1-row tuned-nprobe
-      // broadcast cross (a global aggregate) to q54's audited shape
-      "q229_reranked_ann", "q235_pq8_search", "q236_tuned_ivf_search",
-      // q85 (round-16 rewrite): the three per-column distinct counts are
-      // GLOBAL aggregates — each build side is exactly ONE row by the
-      // aggregate's output type, broadcast-crossed into the 1-row base
-      // stats before the stack melt
-      "q85_profile")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
-      withClue(name) {
-        assert(!plan.contains("CartesianProduct"),
-          s"$name plans a cartesian product")
-        if (plan.contains("BroadcastNestedLoopJoin"))
-          assert(auditedBnlj.contains(name),
-            s"$name grew an unaudited BroadcastNestedLoopJoin — " +
-              "verify its build side is a bounded anchor, then add it here")
+    // here instead of at 100 TB. Each build side is judged from its
+    // logical plan, by the broadcast-hint rule below.
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    // q27 is the declared quadratic: its brute-force top-pairs baseline
+    // broadcasts the whole corpus on purpose (ScaleUp skips it). The
+    // exception must stay needed — the set is compared, not subtracted.
+    val declaredQuadratic = Set("q27_cosine_top_pairs")
+    var bnljs = 0
+    val unbounded = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      val plan = fn(spark, sf).queryExecution.executedPlan
+      assert(!plan.toString.contains("CartesianProduct"), s"$name plans a cartesian product")
+      PlanWalk.allNodes(plan).collect { case j: BroadcastNestedLoopJoinExec => j }.flatMap { j =>
+        bnljs += 1
+        val build = j.buildSide match {
+          case BuildLeft => j.left
+          case BuildRight => j.right
+        }
+        val logical = PlanWalk.allNodes(build).iterator.flatMap(_.logicalLink).nextOption()
+          .getOrElse(fail(s"$name: BNLJ build side has no logical link:\n$build"))
+        if (boundedEvidence(logical)) None else Some(name -> logical)
       }
     }
+    assert(unbounded.map(_._1).toSet == declaredQuadratic,
+      "BroadcastNestedLoopJoin build sides without bounded-ness evidence:\n" +
+        unbounded.map { case (n, l) => s"$n:\n$l" }.mkString("\n"))
+    assert(bnljs >= 20, s"expected the registry's ~30 nested-loop joins, saw $bnljs")
   }
 
   test("registry-wide plan hygiene: every explicit broadcast() hint builds from a bounded relation") {
@@ -439,80 +454,9 @@ class ScaleSpec extends AnyFunSuite {
     // but an explicit broadcast() hint is UNCONDITIONAL — a fact-derived
     // hint OOMs executors at 100 TB. Walk every registry query's analyzed
     // plan, collect the hinted build subtrees, and require structural
-    // bounded-ness evidence on each:
-    //   - an Aggregate (every hinted aggregate in-repo groups on a bounded
-    //     domain: returnflag/lang/source/event_type/year/bin — a global or
-    //     small-domain rollup, never per-user/per-doc);
-    //   - a Limit;
-    //   - the audited id-cap filter shape `x % m = r AND x < cap` (the
-    //     saturation-tested probe predicates — input-size independent);
-    //   - or only bounded leaves: Range/LocalRelation/OneRowRelation,
-    //     dimension-class scans, k-row trained artifacts (centroids /
-    //     codebook_<m>), never a fact table or a corpus-sized artifact
-    //     (cells / codes / bands / shingles / fps).
-    // A future broadcast() of a fact-derived frame has none of these and
-    // fails here, like cartesians do above.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val factNames = Set("lineitem", "orders", "events", "documents", "embeddings")
-    val factArtifacts = Seq("/cells", "/codes", "/bands", "/shingles", "/fps")
-    // Lloyd-trained centroid/codebook relations materialize via
-    // localCheckpoint as opaque LogicalRDDs. They are k ≤ 64 rows by
-    // construction (the k-means state — corpus-independent), but the plan
-    // can't show that, so the queries that broadcast them are enumerated;
-    // any OTHER query growing an RDD-backed broadcast build fails until
-    // audited here.
-    val auditedRddBroadcasts = Set(
-      "q35_ivf_assign", "q54_ivf_search", "q138_pq_adc_search",
-      "q140_ivf_pq_search", "q149_filtered_ann", "q176_pq_code_checksum",
-      "q189_semantic_dedup", "q195_ivf_sq_search",
-      // q204/q225 broadcast each BPE round's best-pair rows — ≤ one row
-      // per language by construction (a per-lang argmax; since round 19
-      // extracted from the checkpointed state by distinct() over columns
-      // that are constant per lang)
-      "q204_bpe_train", "q225_bpe_byte_level",
-      // the PQ8 serve (q235, and q229's recall stage) hands the IVF-PQ
-      // serve core (ivfPqServe) a checkpointed normalized probe relation —
-      // <= MaxProbes rows by the id-cap predicate, materialized once so
-      // 16 subspace LUTs don't re-scan the corpus; q236 broadcasts the
-      // Lloyd centroids as q54 does
-      "q229_reranked_ann", "q235_pq8_search", "q236_tuned_ivf_search",
-      // the 3-bit artifact serve (q148, and q151's incremental replay)
-      // hands ivfPqServe the same kind of probe checkpoint — the
-      // localCheckpoint hides the `vec_id % m = r AND vec_id < cap`
-      // id-cap evidence, but the relation is <= MaxProbes rows before
-      // the checkpoint (matching the q235 entry above)
-      "q148_ann_index_roundtrip", "q151_incremental_ann")
-    val modPat = """% \d+\)? ?= \d+""".r
-    val capPat = """< \d+""".r
-    def leavesBounded(name: String, p: LogicalPlan): Boolean = p.collectLeaves().forall {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation =>
-          val path = h.location.rootPaths.mkString(",")
-          !factNames.exists(t => path.contains(s"/$t.parquet")) &&
-            !factArtifacts.exists(a => path.contains(a))
-        case _ => true
-      }
-      case _: Range | _: LocalRelation | _: OneRowRelation => true
-      case _: org.apache.spark.sql.execution.LogicalRDD =>
-        auditedRddBroadcasts.contains(name)
-      case _ => false
-    }
-    def boundedEvidence(name: String, p: LogicalPlan): Boolean =
-      leavesBounded(name, p) ||
-        p.exists { case _: Aggregate => true; case _ => false } ||
-        p.exists { case _: GlobalLimit | _: LocalLimit => true; case _ => false } ||
-        {
-          // the id-cap shape may sit directly in a Filter condition or be
-          // aliased in a Project that a Filter then references (q63's
-          // __eval flag) — match it anywhere in the subtree, but require
-          // an actual Filter node so an unapplied predicate can't pass;
-          // literals render cast-wrapped ("% cast(50 as bigint)"), strip
-          // the wrappers first
-          val s = p.toString.replaceAll("(?i)CAST\\((\\d+) AS \\w+\\)", "$1")
-          p.exists { case _: Filter => true; case _ => false } &&
-            modPat.findFirstIn(s).isDefined && capPat.findFirstIn(s).isDefined
-        }
+    // bounded-ness evidence on each (boundedEvidence above). A future
+    // broadcast() of a fact-derived frame has none of it and fails here,
+    // like cartesians do above.
     var hinted = 0
     SparkEntry.queries.foreach { case (name, fn) =>
       val hints = fn(spark, sf).queryExecution.analyzed.collect {
@@ -520,7 +464,7 @@ class ScaleSpec extends AnyFunSuite {
       }
       hinted += hints.size
       hints.foreach { h =>
-        assert(boundedEvidence(name, h.child),
+        assert(boundedEvidence(h.child),
           s"$name hints a broadcast whose build side shows no bounded-ness " +
             s"evidence (no bounded-domain aggregate, limit, id-cap filter, " +
             s"or bounded-leaf-only subtree):\n${h.child}")
