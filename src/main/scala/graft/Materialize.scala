@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** The one in-job materialization: every intermediate table a query
   * builds eagerly (loop state, a relation read by several consumers, a
@@ -13,11 +11,11 @@ import org.apache.spark.sql.types._
   * engine's stand-in for the reference pipeline writing each dimension
   * before reusing it.
   *
-  * One call runs the single job `localCheckpoint()` runs, with a
-  * `count` and a byte sum observed on the way through (a
-  * `CollectMetrics` accumulator, final when the job returns — no second
-  * action), and returns a `LogicalRDD` leaf whose statistics are those
-  * measured rows and bytes. Without them the leaf would carry the
+  * One call builds the checkpoint lazily and forces it with one action
+  * over the checkpointed RDD (the job an eager `localCheckpoint()` runs),
+  * an aggregate that counts the rows and sums their `UnsafeRow` bytes on
+  * the way through. It returns a `LogicalRDD` leaf whose statistics are that
+  * measured count and size. Without them the leaf would carry the
   * optimizer's estimate of the INPUT plan, which for loop state
   * compounds per round into numbers with hundreds of digits and steers
   * join and runtime-filter choices.
@@ -38,53 +36,23 @@ import org.apache.spark.sql.types._
   * lost after the call takes its blocks with it.
   */
 object Materialize {
-  private val ids = new AtomicLong()
   private val BoundTag = """ maxRows=(\d+)$""".r.unanchored
 
   def apply(df: DataFrame, site: String, maxRows: Option[Long] = None): DataFrame = {
-    val metric = s"materialize_${ids.incrementAndGet()}"
-    val observed = df.observe(metric, count(lit(1)), sum(rowBytes(df.schema)))
-    val leaf = observed.localCheckpoint().queryExecution.logical.asInstanceOf[LogicalRDD]
-    val m = observed.queryExecution.observedMetrics(metric)
-    val rows = m.getLong(0)
+    val leaf = df.localCheckpoint(eager = false).queryExecution.logical.asInstanceOf[LogicalRDD]
+    val (rows, bytes) = leaf.rdd.aggregate((0L, 0L))(
+      (a, r) => (a._1 + 1, a._2 + r.asInstanceOf[UnsafeRow].getSizeInBytes),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
     for (b <- maxRows if rows > b)
       throw new IllegalStateException(
         s"Materialize[$site]: $rows rows exceed the declared bound of $b rows")
     leaf.rdd.setName(site + maxRows.fold("")(b => s" maxRows=$b"))
-    val stats = Statistics(sizeInBytes = if (m.isNullAt(1)) 0 else m.getLong(1),
-      rowCount = Some(BigInt(rows)))
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val stats = Statistics(sizeInBytes = bytes, rowCount = Some(BigInt(rows)))
     GraftSqlShim.ofRows(session, leaf.copy()(session, Some(stats), Some(leaf.constraints)))
   }
 
   /** The row bound a [[Materialize]] leaf was declared with, if any. */
   def declaredBound(leaf: LogicalRDD): Option[Long] =
     Option(leaf.rdd.name).collect { case BoundTag(b) => b.toLong }
-
-  // Bytes of one row in Spark's UnsafeRow layout: a null-bitmap word per
-  // 64 fields, an 8-byte slot per field, plus each variable-length
-  // value's payload (arrays of fixed-width elements by their width).
-  private def rowBytes(t: StructType): Column =
-    structBytes(t.fields.toSeq.map(f => col(s"`${f.name}`") -> f.dataType))
-
-  private def structBytes(fields: Seq[(Column, DataType)]): Column =
-    fields.collect { case (c, t) if !isFixed(t) => payload(c, t) }
-      .foldLeft(lit(8L * ((fields.size + 63) / 64) + 8L * fields.size))(_ + _)
-
-  private def payload(c: Column, t: DataType): Column = {
-    val bytes = t match {
-      case ArrayType(e, _) if isFixed(e) => size(c) * e.defaultSize + 8
-      case ArrayType(e, _) => aggregate(c, lit(8L), (acc, x) => acc + 8 + payload(x, e))
-      case MapType(k, v, n) =>
-        payload(map_keys(c), ArrayType(k)) + payload(map_values(c), ArrayType(v, n))
-      case StructType(fs) => structBytes(fs.toSeq.map(f => c.getField(f.name) -> f.dataType))
-      case _ => octet_length(c)
-    }
-    when(c.isNull, 0L).otherwise(bytes)
-  }
-
-  private def isFixed(t: DataType): Boolean = t match {
-    case _: StringType | BinaryType | _: ArrayType | _: MapType | _: StructType => false
-    case _ => true
-  }
 }

@@ -1086,7 +1086,7 @@ object VectorQueries {
     * estimate q149's runtime-filter choice reads.
     */
   private[graft] def lloyd(e: DataFrame, iters: Int, k: Int): DataFrame =
-    lloydMulti(subspacesAll(e, 1, EmbeddingDim), 1, iters, k).drop("m")
+    lloydMulti(subspacesAll(e, 1, EmbeddingDim), iters, k).drop("m")
 
   /** ALL subspaces of a (vec_id, embedding) relation in ONE corpus scan:
     * (m, vec_id, embedding[subDim], n2). Round-19 optimization (guide
@@ -1117,20 +1117,21 @@ object VectorQueries {
     * against the per-m centroid arrays (broadcast, ≤ spaces rows) plus a
     * (m, cell, dim) partial aggregation of 2⁻²⁰-quantized integer sums, so
     * the DuckDB oracle replays the identical training; empty cells keep
-    * their previous centroid (left join + coalesce). One [[graft.Materialize]]
-    * per ITERATION truncates lineage (the q69 iterate pattern) and holds
-    * the table to its spaces·k rows, and no row
+    * their previous centroid (left join + coalesce). The seeds and each
+    * ITERATION go through [[graft.Materialize]] (the q69 iterate pattern),
+    * every round bounded by the seeds' measured rows, and no row
     * of one m ever meets another m's centroids (VectorLawsSpec pins
     * per-subspace training ≡ the keyed run).
     */
-  private[graft] def lloydMulti(eM: DataFrame, spaces: Int, iters: Int, k: Int): DataFrame = {
+  private[graft] def lloydMulti(eM: DataFrame, iters: Int, k: Int): DataFrame = {
     import eM.sparkSession.implicits._
     val wSeed = Window.partitionBy($"m").orderBy($"vec_id")
-    var cents = eM
+    val seeds = Materialize(eM
       .select($"m", $"vec_id", $"embedding")
       .withColumn("rn", row_number().over(wSeed)).filter($"rn" <= k)
-      .select($"m", $"vec_id".cast("long").as("cell"), $"embedding".as("c_emb"))
-      .withColumn("c_n2", dotF($"c_emb", $"c_emb"))
+      .select($"m", $"vec_id".cast("long").as("cell"), $"embedding".as("c_emb")), "lloyd seeds")
+    val cells = seeds.queryExecution.logical.stats.rowCount.map(_.toLong)
+    var cents = seeds.withColumn("c_n2", dotF($"c_emb", $"c_emb"))
     for (_ <- 1 to iters) {
       val centsArr = cents.groupBy($"m")
         .agg(collect_list(struct($"cell", $"c_emb", $"c_n2")).as("cs"))
@@ -1147,7 +1148,7 @@ object VectorQueries {
         .select($"m", $"cell", transform($"pm", x => x.getField("mv")).as("new_emb"))
       cents = Materialize(cents.join(means, Seq("m", "cell"), "left")
         .select($"m", $"cell", coalesce($"new_emb", $"c_emb").as("c_emb")),
-        "lloyd centroids", Some(spaces.toLong * k))
+        "lloyd centroids", cells)
         .withColumn("c_n2", dotF($"c_emb", $"c_emb"))
     }
     cents
@@ -1574,8 +1575,7 @@ object VectorQueries {
       ("base", subspacesAll(raw.filter(!isIncrement($"vec_id")), PqSubspaces, PqSubDim),
         baseSliceCount(s, dir)))
     variants.map { case (tag, trainM, n) =>
-      assignMulti(eMFull,
-        lloydMulti(trainSlice(trainM, n, PqCodes), PqSubspaces, PqIters, PqCodes))
+      assignMulti(eMFull, lloydMulti(trainSlice(trainM, n, PqCodes), PqIters, PqCodes))
         .select(lit(tag).as("train"), $"m".cast("long").as("m"), $"vec_id", $"cell")
     }.reduce(_ unionByName _)
       .groupBy($"train", $"m")
@@ -1731,7 +1731,7 @@ object VectorQueries {
     import s.implicits._
     val nCorpus = Tables.rowCount(s, dir, "embeddings")
     val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
-    val cbs = lloydMulti(trainSlice(eM, nCorpus, PqCodes), PqSubspaces, PqIters, PqCodes)
+    val cbs = lloydMulti(trainSlice(eM, nCorpus, PqCodes), PqIters, PqCodes)
     val vecCodes = assignMulti(eM, cbs).select($"vec_id", $"m", $"cell".as("code"))
     val lut = adcLut(eM.filter(probePredicate($"vec_id")), cbs)
     rankedTopK(adcScore(vecCodes.join(broadcast(lut), Seq("m", "code"))
@@ -1765,7 +1765,7 @@ object VectorQueries {
     val centroids = trainedCentroids(s, dir)
     val eM = subspacesAll(Tables.embeddings(s, dir), PqSubspaces, PqSubDim)
     val cbs = lloydMulti(trainSlice(eM, Tables.rowCount(s, dir, "embeddings"), PqCodes),
-      PqSubspaces, PqIters, PqCodes)
+      PqIters, PqCodes)
     ivfPqServe(
       probes = asProbes(e.filter(probePredicate($"vec_id"))), cents = centroids, nprobe = nprobe,
       cells = assignCells(e, centroids).select($"vec_id", $"cell"),
@@ -1887,7 +1887,7 @@ object VectorQueries {
     // [[lloydMulti]] loop each; the layout stays one (cell, c_emb, c_n2)
     // parquet per m, read back keyed by [[readCodebooks]]
     val cb = lloydMulti(trainSlice(
-      subspacesAll(raw, PqSubspaces, PqSubDim), n, PqCodes), PqSubspaces, PqIters, PqCodes)
+      subspacesAll(raw, PqSubspaces, PqSubDim), n, PqCodes), PqIters, PqCodes)
     (0 until PqSubspaces).foreach { m =>
       cb.filter(col("m") === m).select(col("cell"), col("c_emb"), col("c_n2"))
         .write.mode("overwrite").parquet(s"$root/codebook_$m")
@@ -1897,7 +1897,7 @@ object VectorQueries {
     // modulus derives from Pq8Codes, so the cap engages 32× later)
     val cb8 = lloydMulti(trainSlice(
       subspacesAll(normalizedEmb(raw), Pq8Subspaces, Pq8SubDim), n, Pq8Codes),
-      Pq8Subspaces, PqIters, Pq8Codes)
+      PqIters, Pq8Codes)
     (0 until Pq8Subspaces).foreach { m =>
       cb8.filter(col("m") === m).select(col("cell"), col("c_emb"), col("c_n2"))
         .write.mode("overwrite").parquet(s"$root/codebook8_$m")

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +9,33 @@ object SparkTestSession {
   /** Pinned to 4 cores whatever `SPARK_GRAFT_CPUS` says: plan digests and
     * partition-count assertions depend on the shuffle width. */
   lazy val spark: SparkSession = Session.build(cpus = 4)
+
+  /** Spark jobs started while `body` runs on this thread. Listener events
+    * arrive asynchronously but in order, so a sentinel job under its own
+    * group, run after `body`, marks the end of `body`'s jobs.
+    */
+  def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
+        .takeWhile(g => { assert(g != null, "sentinel job never seen"); g != s"$group-end" })
+        .count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 class CoreQueriesSpec extends AnyFunSuite {

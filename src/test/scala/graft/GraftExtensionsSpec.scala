@@ -28,21 +28,27 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(spark.sql("SELECT char_ngrams('abcd', 3) AS g").head().getSeq[String](0) == Seq("abc", "bcd"))
   }
 
+  /** Source with comments dropped, so scaladoc may still show an idiom. */
+  private def code(source: String): String =
+    source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+
+  /** The .scala files under `roots` whose source `bad` flags, sorted. */
+  private def offenders(roots: Seq[String], bad: String => Boolean): Seq[String] =
+    roots.map(Paths.get(_)).flatMap { r =>
+      assert(Files.isDirectory(r), s"$r not found from ${sys.props("user.dir")}")
+      val files = Files.walk(r)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally files.close()
+    }.filter(f => bad(Files.readString(f))).map(_.toString).sorted
+
   test("Session.scala holds the only session-builder call under src/") {
     // comments are dropped first, so scaladoc may still show the idiom
     def builderCalls(source: String): Boolean =
-      """SparkSession\s*\.\s*builder\b""".r.findFirstIn(
-        source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")).isDefined
+      """SparkSession\s*\.\s*builder\b""".r.findFirstIn(code(source)).isDefined
     val call = "SparkSession" + ".builder()"
     assert(builderCalls(s"val s = $call.getOrCreate()"))
     assert(!builderCalls(s"/** use $call */ val x = 1 // or $call"))
-    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
-    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from ${sys.props("user.dir")}"))
-    val offenders = roots.flatMap { r =>
-      val files = Files.walk(r)
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally files.close()
-    }.filter(f => builderCalls(Files.readString(f))).map(_.toString)
-    assert(offenders == Seq("src/main/scala/graft/Session.scala"))
+    assert(offenders(Seq("src/main/scala", "src/test/scala"), builderCalls) ==
+      Seq("src/main/scala/graft/Session.scala"))
   }
 
   test("Session.withConf restores a prior value and leaves an unset key unset, also when the body throws") {
@@ -75,36 +81,27 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // DataFrame is built; query paths read through Tables or declare the
     // writer's schema. Comments are dropped first.
     def schemaLess(source: String): Boolean =
-      """\bread\s*\.\s*parquet\s*\(""".r.findFirstIn(
-        source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")).isDefined
+      """\bread\s*\.\s*parquet\s*\(""".r.findFirstIn(code(source)).isDefined
     assert(schemaLess("val e = s.read.parquet(s\"$root/edges\")"))
     assert(schemaLess("spark.read\n  .parquet(path)"))
     assert(!schemaLess("s.read.schema(\"c BIGINT\").parquet(p) /** s.read.parquet(p) */ // read.parquet("))
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
-    val files = Files.walk(root)
-    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    val offenders = sources.filter(f => schemaLess(Files.readString(f))).map(_.toString).sorted
-    assert(offenders == Seq("src/main/scala/graft/ScaleUp.scala", "src/main/scala/graft/Tables.scala"))
+    assert(offenders(Seq("src/main/scala"), schemaLess) ==
+      Seq("src/main/scala/graft/ScaleUp.scala", "src/main/scala/graft/Tables.scala"))
   }
 
   test("Materialize.scala holds the only checkpoint call under src/main") {
     // one materialization path: measured statistics and declared bounds
     // ride every eager intermediate. Comments are dropped first.
     def checkpoints(source: String): Boolean =
-      """(?:\blocalCheckpoint|\.checkpoint)\s*\(""".r.findFirstIn(
-        source.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")).isDefined
+      """\blocalCheckpoint\b|\.checkpoint\b""".r.findFirstIn(code(source)).isDefined
     assert(checkpoints("val s = df.select($\"a\").localCheckpoint()"))
     assert(checkpoints("df\n  .checkpoint(eager = true)"))
+    // Scala 2.13 still auto-applies a paren-less call
+    assert(checkpoints("val s = df.localCheckpoint\n"))
+    assert(checkpoints("df\n  .checkpoint"))
+    assert(!checkpoints("conf.set(\"spark.sql.streaming.checkpointLocation\", dir)"))
     assert(!checkpoints("Materialize(df, \"site\") /** df.localCheckpoint() */ // .checkpoint("))
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"$root not found from ${sys.props("user.dir")}")
-    val files = Files.walk(root)
-    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    val offenders = sources.filter(f => checkpoints(Files.readString(f))).map(_.toString).sorted
-    assert(offenders == Seq("src/main/scala/graft/Materialize.scala"))
+    assert(offenders(Seq("src/main/scala"), checkpoints) == Seq("src/main/scala/graft/Materialize.scala"))
   }
 
   test("kernels are callable from SQL") {

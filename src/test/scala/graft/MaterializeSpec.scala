@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -13,32 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
-
-  /** Spark jobs started while `body` runs; a sentinel job in its own
-    * group marks the end, since listener events arrive asynchronously.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-end", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
-        .takeWhile(g => { assert(g != null, "sentinel job never seen"); g != s"$group-end" })
-        .count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def leafOf(df: DataFrame): LogicalRDD =
     df.queryExecution.analyzed.collectLeaves().collect { case l: LogicalRDD => l } match {
@@ -68,8 +40,8 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("Materialize starts as many jobs as a bare localCheckpoint on a fresh plan") {
     fresh().localCheckpoint(); Materialize(fresh(), "warm-up")
-    val bare = jobsStartedBy(fresh().localCheckpoint())
-    val viaMaterialize = jobsStartedBy(Materialize(fresh(), "jobs"))
+    val bare = SparkTestSession.jobsStartedBy(fresh().localCheckpoint())
+    val viaMaterialize = SparkTestSession.jobsStartedBy(Materialize(fresh(), "jobs"))
     assert(bare > 0 && viaMaterialize == bare, s"bare=$bare materialize=$viaMaterialize")
   }
 

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -132,33 +130,6 @@ class SparkifyEtlSpec extends AnyFunSuite {
   private def globbed(lake: String): DataFrame =
     spark.read.schema(graft.etl.SparkifySchemas.songSchema).json(s"$lake/song_data/*/*/*/*.json")
 
-  /** Spark jobs started while `body` runs on this thread. Listener events
-    * arrive asynchronously but in order, so a sentinel job under its own
-    * group, run after `body`, marks the end of `body`'s jobs.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-end", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      Iterator.continually(groups.poll(60, TimeUnit.SECONDS))
-        .takeWhile(g => { assert(g != null, "sentinel job never seen"); g != s"$group-end" })
-        .count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("readSongData lists exactly the files of the reference's 4-level glob") {
     Seq(fixture, wideLake.toString).foreach { lake =>
       assert(SparkifyEtl.readSongData(spark, lake).inputFiles.sorted.toSeq ==
@@ -170,8 +141,8 @@ class SparkifyEtlSpec extends AnyFunSuite {
   test("building the song relation starts no Spark job, where the glob's listing starts one") {
     val lake = wideLake.toString
     // self-check: the counter sees the glob's 40-path parallel listing job
-    assert(jobsStartedBy(globbed(lake)) == 1)
-    assert(jobsStartedBy(SparkifyEtl.readSongData(spark, lake)) == 0)
+    assert(SparkTestSession.jobsStartedBy(globbed(lake)) == 1)
+    assert(SparkTestSession.jobsStartedBy(SparkifyEtl.readSongData(spark, lake)) == 0)
   }
 
   test("song files are read at any depth under song_data, *.json only") {

@@ -369,7 +369,7 @@ class VectorLawsSpec extends AnyFunSuite {
     val raw = Tables.embeddings(spark, sf)
     val n = Tables.rowCount(spark, sf, "embeddings")
     def train(eM: org.apache.spark.sql.DataFrame): Map[(Int, Long), List[Float]] =
-      lloydMulti(trainSlice(eM, n, PqCodes), PqSubspaces, PqIters, PqCodes)
+      lloydMulti(trainSlice(eM, n, PqCodes), PqIters, PqCodes)
         .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getSeq[Float](2).toList)).toMap
     val all = subspacesAll(raw, PqSubspaces, PqSubDim)
     val multi = train(all)
