@@ -64,7 +64,7 @@ object Scratch {
     tag(desc)
   }
 
-  private def deleteRecursively(dir: java.io.File): Unit = if (dir.exists()) {
+  private[graft] def deleteRecursively(dir: java.io.File): Unit = if (dir.exists()) {
     import scala.jdk.CollectionConverters._
     val stream = java.nio.file.Files.walk(dir.toPath)
     try stream.iterator().asScala.toSeq.reverseIterator
@@ -138,45 +138,34 @@ object Scratch {
 
   // --- numbered versions: the one commit protocol ------------------------
   //
-  // A versioned table (q135's lake, every graft-fwb directory) advances by
-  // one integer per commit. Two writers committing concurrently must not
-  // lose either's update — the protocol Delta/Iceberg package, built here
-  // from the same primitive they use: an atomic publish of version N that
-  // FAILS if N already exists.
-  //
-  //  1. read the current version v (the snapshot the writer bases on)
-  //  2. prepare the new snapshot's FULL content (data files are immutable
-  //     and already written — only the version file is contended)
-  //  3. CAS-publish as v+1: write the body to a temp file, then hard-link
-  //     it to the version's name — link(2) atomically fails with EEXIST if
-  //     another writer won, and readers only ever observe complete
-  //     versions (the body is fully written before publish; rename-based
-  //     moves are NOT a CAS on POSIX, rename replaces)
-  //  4. on conflict: re-read the NEW current version, re-prepare against
-  //     it (rebase — the merge logic re-runs over the winner's snapshot),
-  //     retry; bounded attempts keep livelock finite and loud
+  // Version N of a table is the file `<table>/_log/<N>.json`, holding the
+  // table's FULL file set; [[graft.lake.Log]] writes and reads it for every
+  // table (the orders lakes, every graft-fwb directory). A commit reads the
+  // current version v, writes its new data files (immutable, named by no
+  // version yet, so invisible), then publishes v+1 put-if-absent: the body
+  // goes to a temp file that is hard-linked to the version's name — link(2)
+  // fails with EEXIST if another writer won (a rename would replace it).
+  // Readers only see complete versions. A loser re-reads the winner's
+  // version and re-prepares against it (rebase), so no update is lost;
+  // bounded attempts keep livelock finite and loud.
 
-  /** A directory of numbered versions, version N stored as the file
-    * `dir/<prefix>N<suffix>`.
-    */
-  final case class VersionLog(dir: String, prefix: String = "", suffix: String = "") {
-    def file(v: Int): java.io.File = new java.io.File(dir, s"$prefix$v$suffix")
+  /** A directory of numbered versions, version N stored as `dir/<N>.json`. */
+  final case class VersionLog(dir: String) {
+    def file(v: Int): java.io.File = new java.io.File(dir, s"$v.json")
   }
 
   /** A version CAS lost the race to a concurrent writer. */
   final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
-  /** Committed versions, ascending. Only names whose middle part is all
-    * ASCII digits count, so a commit's temp file is never taken for one.
+  /** Committed versions, ascending. Only `<digits>.json` names count, so
+    * a commit's temp file is never taken for one.
     */
   def versions(log: VersionLog): Seq[Int] =
     Option(new java.io.File(log.dir).list()).getOrElse(Array.empty[String]).toSeq
       .flatMap { n =>
-        val (p, s) = (log.prefix.length, log.suffix.length)
-        val mid = if (n.length > p + s && n.startsWith(log.prefix) && n.endsWith(log.suffix))
-          n.substring(p, n.length - s) else ""
-        if (mid.nonEmpty && mid.length <= 9 && mid.forall(c => c >= '0' && c <= '9'))
-          Some(mid.toInt)
+        val mid = n.stripSuffix(".json")
+        if (mid.length < n.length && mid.nonEmpty && mid.length <= 9 &&
+            mid.forall(c => c >= '0' && c <= '9')) Some(mid.toInt)
         else None
       }.sorted
 

@@ -315,20 +315,16 @@ object NativeKernels {
   */
 object KernelOps {
 
-  /** Broadcastable bloom filter over 64-bit keys — the "ship a filter,
-    * not the set" device for decontamination-class joins (q228): the
-    * membership side travels as a FIXED 64 KiB byte array no matter how
-    * many keys it holds, and the corpus side is pre-filtered map-side so
-    * only might-contain survivors reach the exact-verify join. Same
-    * double-hash probing scheme as the GFWB footer bloom
-    * (FwbFormat.FwbBloom) but its own constants — that one's size is
-    * baked into committed file footers and must not drift with this one.
-    * Sizing: 2¹⁹ bits / 4 probes ≈ 1.2% false positives at 64k keys
-    * (m/n = 8); false positives only cost verify work, never answers.
+  /** The engine's one bloom filter over 64-bit keys: 4 double-hashed
+    * probes of a splitmix64 finalizer into a power-of-two bit array, the
+    * mask taken from the array's length. [[BloomBytes]] (64 KiB, ≈ 1.2%
+    * false positives at 64k keys) ships q228's membership side as one
+    * fixed array, pre-filtering the corpus before the exact-verify join;
+    * `FwbFormat.BloomBytes` (32 KiB) sits in every graft-fwb footer, so
+    * the hashing must not drift (NativeKernelsSpec pins both sizes' bytes).
     */
   val BloomBytes = 65536
   private val BloomHashes = 4
-  private val BloomBitMask = BloomBytes * 8 - 1
 
   private def bloomMix(x0: Long): Long = {
     var z = x0 + 0x9e3779b97f4a7c15L
@@ -337,25 +333,33 @@ object KernelOps {
     z ^ (z >>> 31)
   }
 
+  private def bloomMask(bits: Array[Byte]): Int = {
+    require(bits.length > 0 && Integer.bitCount(bits.length) == 1,
+      s"bloom size must be a power of two, got ${bits.length} bytes")
+    bits.length * 8 - 1
+  }
+
   def bloomInsert(bits: Array[Byte], key: Long): Unit = {
+    val mask = bloomMask(bits)
     val h = bloomMix(key)
     val h1 = (h >>> 32).toInt
     val h2 = h.toInt | 1 // odd stride: all probes distinct mod 2^k
     var i = 0
     while (i < BloomHashes) {
-      val bit = (h1 + i * h2) & BloomBitMask
+      val bit = (h1 + i * h2) & mask
       bits(bit >>> 3) = (bits(bit >>> 3) | (1 << (bit & 7))).toByte
       i += 1
     }
   }
 
   def bloomMightContain(bits: Array[Byte], key: Long): Boolean = {
+    val mask = bloomMask(bits)
     val h = bloomMix(key)
     val h1 = (h >>> 32).toInt
     val h2 = h.toInt | 1
     var i = 0
     while (i < BloomHashes) {
-      val bit = (h1 + i * h2) & BloomBitMask
+      val bit = (h1 + i * h2) & mask
       if ((bits(bit >>> 3) & (1 << (bit & 7))) == 0) return false
       i += 1
     }

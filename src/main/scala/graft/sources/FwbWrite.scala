@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
+import graft.expressions.KernelOps
+
 /** DataSource V2 WRITE path for GFWB — the sink half of the connector,
   * with the two-phase commit protocol a distributed sink needs to be
   * exactly-once at the job level:
@@ -67,11 +69,7 @@ private[graft] class FwbWrite(path: String, schema: StructType, truncate: Boolea
       require(f.renameTo(fin), s"commit rename failed: $f -> $fin")
       fin.getName -> st
     }
-    // Directory stats manifest, from data the tasks already computed —
-    // zero footer re-reads (VERDICT r11 next #3). Truncate starts a fresh
-    // generation; append merges over the previous manifest, and entries
-    // for since-deleted files are dropped lazily (planning keys off the
-    // listing, so stale extras are dead weight, not wrong answers).
+    // the log version and stats manifest, from the tasks' own stats
     FwbFormat.writeManifest(path, promoted.toMap, truncate)
   }
 
@@ -185,7 +183,7 @@ private[sources] class FwbWriterFactory(path: String, writeId: String)
 private[sources] class FwbDataWriter(staged: String) extends DataWriter[InternalRow] {
   private var out: DataOutputStream = _
   private val dict = mutable.LinkedHashMap.empty[String, Int]
-  private val bloom = FwbBloom.empty()
+  private val bloom = new Array[Byte](FwbFormat.BloomBytes)
   private var n = 0L
   private var minKey = Long.MaxValue
   private var maxKey = Long.MinValue
@@ -201,7 +199,7 @@ private[sources] class FwbDataWriter(staged: String) extends DataWriter[Internal
       dict.size
     })
     out.writeByte(code)
-    FwbBloom.add(bloom, row.getLong(1))
+    KernelOps.bloomInsert(bloom, row.getLong(1))
     n += 1; if (k < minKey) minKey = k; if (k > maxKey) maxKey = k
   }
 

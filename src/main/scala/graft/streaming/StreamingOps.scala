@@ -50,10 +50,11 @@ object StreamingOps {
     * merge-overwrite transaction). Per micro-batch: list the batch's
     * touched (o_year, o_month) partitions — a driver-side, metadata-sized
     * collect of the PARTITION LIST, never rows — and apply the identical
-    * latest-wins partition-scoped upsert the batch path uses. Replay-safe
-    * under foreachBatch's at-least-once contract: re-applying a batch
-    * converges to the same state (the merge is idempotent), which is what
-    * makes this sink correct without a transaction log. UpsertSpec asserts
+    * latest-wins partition-scoped upsert the batch path uses, one table-log
+    * version per micro-batch. Replay-safe under foreachBatch's
+    * at-least-once contract: re-applying a batch converges to the same
+    * state (the merge is idempotent), so the sink needs no record of which
+    * batches it applied. UpsertSpec asserts
     * the streamed result equals the one-shot batch merge, and that a batch
     * over `maxPartitionsPerBatch` fails the query rather than materializing
     * an unbounded driver list.
@@ -76,6 +77,7 @@ object StreamingOps {
         val touched = parts.map(r =>
           $"o_year" === r.getInt(0) && $"o_month" === r.getInt(1)).reduce(_ || _)
         graft.etl.EtlQueries.applyUpsert(s, lakePath, batch.toDF(), touched)
+        ()
       }
     }
 

@@ -400,6 +400,21 @@ class BreadthSpec extends AnyFunSuite {
     assert(got.map(_.getAs[Long]("n_orders")).sum <= target)
   }
 
+  test("q196 fails loudly when a price is past its 2^26-cent bisection bracket") {
+    import spark.implicits._
+    // a scratch copy of the orders with one price at 2^26 cents
+    val dir = Scratch.path(s"q196_bracket_${System.nanoTime()}")
+    val orders = Tables.orders(spark, sf)
+    val first = orders.agg(min($"o_orderkey")).collect()(0).getLong(0)
+    orders.withColumn("o_totalprice",
+        when($"o_orderkey" === first, lit((1L << 26) / 100.0)).otherwise($"o_totalprice"))
+      .write.parquet(s"$dir/orders.parquet")
+    val e = intercept[Exception](relational.AdvancedQueries.q196SqlScripting(spark, dir).collect())
+    val messages = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("exceeds the 2^26 bisection bracket"), messages)
+  }
+
   test("q197 HLL union: every verdict true; the union row is sub-additive and dominated") {
     import spark.implicits._
     val got = relational.AdvancedQueries.q197HllSketchUnion(spark, sf).collect()

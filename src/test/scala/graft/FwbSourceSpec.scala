@@ -263,6 +263,31 @@ class FwbSourceSpec extends AnyFunSuite {
       "replayed stage must be cleaned up")
   }
 
+  test("a corrupt manifest entry fails with an IOException naming the manifest and the field") {
+    val dir = Scratch.path(s"fwb_badmanifest_${System.nanoTime()}")
+    new java.io.File(dir).mkdirs()
+    sources.FwbFormat.writeFile(s"$dir/part-0.gfwb",
+      Iterator(org.apache.spark.sql.Row(1L, 1L, 10L, "P")), Array("P"), Map("P" -> 0)).get
+    val manifest = new java.io.File(dir, sources.FwbFormat.ManifestName)
+    def entry(name: String, n: Long = 1L, min: Long = 1L, bloom: String = "") =
+      s"""{"$name":{"n":$n,"min":$min,"max":1,"dict":["P"],"bloom":"$bloom"}}"""
+    val lies = Seq(
+      entry("part-0.gfwb", n = -1L) -> "n is -1",
+      entry("../x.gfwb") -> "file name is ../x.gfwb",
+      entry("part-0.gfwb", min = 2L) -> "min is 2 > max 1",
+      entry("part-0.gfwb", bloom = "AAAA") -> "bloom length is 3")
+    for ((json, field) <- lies) {
+      java.nio.file.Files.writeString(manifest.toPath, json)
+      val e = intercept[java.io.IOException](sources.FwbFormat.readManifest(dir))
+      assert(e.getMessage.contains(manifest.getPath) && e.getMessage.contains(field), e.getMessage)
+    }
+    // the scan plans from the manifest, so it fails the same way
+    val viaScan = intercept[Exception](spark.read.format("graft-fwb").load(dir).collect())
+    assert(Iterator.iterate(viaScan: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[java.io.IOException] && t.getMessage.contains("bloom length")),
+      viaScan.toString)
+  }
+
   test("a lying footer or record fails with an IOException naming the path and the field") {
     // a 3-record file with a 2-entry dictionary, corrupted four ways;
     // each copy sits alone in a directory without a manifest, so planning
@@ -400,7 +425,7 @@ class FwbSourceSpec extends AnyFunSuite {
     val gen2 = src.filter($"o_orderkey" % 3 === 1)
     gen1.write.format("graft-fwb").mode("overwrite").save(out) // v1
     gen2.write.format("graft-fwb").mode("append").save(out) // v2
-    assert(Scratch.versions(sources.FwbFormat.versionLog(out)) == Seq(1, 2))
+    assert(lake.Log.versions(out) == Seq(1, 2))
     def at(v: Int) = spark.read.format("graft-fwb")
       .option("versionAsOf", v.toString).load(out)
     // v1 is EXACTLY generation 1 — the later append is invisible
@@ -451,7 +476,7 @@ class FwbSourceSpec extends AnyFunSuite {
       }
       Await.result(Future.sequence(futures), 60.seconds)
     } finally pool.shutdown()
-    assert(Scratch.versions(sources.FwbFormat.versionLog(out)) == (1 to 9))
+    assert(lake.Log.versions(out) == (1 to 9))
     val listed = new java.io.File(out).listFiles().count(_.getName.endsWith(".gfwb"))
     val v9 = spark.read.format("graft-fwb").option("versionAsOf", "9").load(out)
     val desc = v9.queryExecution.executedPlan

@@ -104,6 +104,25 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(offenders(Seq("src/main/scala"), checkpoints) == Seq("src/main/scala/graft/Materialize.scala"))
   }
 
+  test("lake state has one record: no in-place partition overwrite, version commits only in Scratch and the log") {
+    // every lake table commits through graft.lake.Log; dynamic partition
+    // overwrite and completion markers were the second and third records.
+    // Comments are dropped first.
+    def inPlace(source: String): Boolean =
+      """partitionOverwriteMode|_base_complete""".r.findFirstIn(code(source)).isDefined
+    def commits(source: String): Boolean =
+      """\b(casCommit|commitWithRetry)\s*\(""".r.findFirstIn(code(source)).isDefined
+    assert(inPlace(""".option("partitionOverwriteMode", "dynamic")"""))
+    assert(inPlace("""new java.io.File(s"$out/_base_complete")"""))
+    assert(commits("Scratch.casCommit(log, 0, body)"))
+    assert(commits("graft.Scratch.commitWithRetry(versionLog(dir)) { base =>"))
+    assert(!inPlace("/** partitionOverwriteMode */ val x = 1 // _base_complete"))
+    assert(!commits("/** Scratch.casCommit(log, 0, b) */ Log.commit(out)(f) // commitWithRetry("))
+    assert(offenders(Seq("src/main/scala"), inPlace).isEmpty)
+    assert(offenders(Seq("src/main/scala"), commits) ==
+      Seq("src/main/scala/graft/Scratch.scala", "src/main/scala/graft/lake/Log.scala"))
+  }
+
   test("kernels are callable from SQL") {
     val spark2 = spark
     val row = spark2.sql(

@@ -17,6 +17,25 @@ class NativeKernelsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
+  test("bloom: one filter at both sizes, its bytes pinned; a size that is not a power of two is refused") {
+    import graft.expressions.KernelOps
+    // committed graft-fwb footers hold these bytes, so the hashing must
+    // never drift; the md5s were taken from the two filters this one
+    // replaced (the 32 KiB footer bloom and q228's 64 KiB bloom)
+    var x = 42L
+    val keys = Array.fill(20000) { x = x * 6364136223846793005L + 1442695040888963407L; x }
+    def md5(b: Array[Byte]) =
+      java.security.MessageDigest.getInstance("MD5").digest(b).map(v => f"$v%02x").mkString
+    val footer = new Array[Byte](sources.FwbFormat.BloomBytes)
+    val q228 = new Array[Byte](KernelOps.BloomBytes)
+    keys.foreach { k => KernelOps.bloomInsert(footer, k); KernelOps.bloomInsert(q228, k) }
+    assert((footer.length, md5(footer)) == ((32768, "3c9c9107eaae190cfb47cc6ec4a9718b")))
+    assert((q228.length, md5(q228)) == ((65536, "3e427730099f7a5a2a6224528e557322")))
+    assert(keys.forall(k => KernelOps.bloomMightContain(footer, k)))
+    intercept[IllegalArgumentException](KernelOps.bloomInsert(new Array[Byte](3000), 1L))
+    intercept[IllegalArgumentException](KernelOps.bloomMightContain(Array.emptyByteArray, 1L))
+  }
+
   test("bloom kernel: zero false negatives, bounded false positives, merge = union, codegen path") {
     import graft.expressions.KernelOps
     // deterministic key streams (an LCG — no Random, reproducible)

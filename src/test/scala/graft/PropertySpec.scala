@@ -196,7 +196,7 @@ class PropertySpec extends AnyFunSuite {
       assert(st.minKey == rows.map(_._1).min && st.maxKey == rows.map(_._1).max)
       assert(st.dict.toSeq == dict.toSeq)
       // bloom completeness: no written custkey may ever test negative
-      assert(rows.forall(r => sources.FwbBloom.mightContain(st.custBloom, r._2)))
+      assert(rows.forall(r => expressions.KernelOps.bloomMightContain(st.custBloom, r._2)))
       // skip soundness: any key predicate via the source == scala-side filter
       import spark.implicits._
       val cut = rows.map(_._1).min + 1

@@ -116,13 +116,14 @@ class ScratchSpec extends AnyFunSuite {
   }
 
   test("version commit: a stale base conflicts without touching the winner; the retry rebases") {
-    val log = Scratch.VersionLog(tmpDir("vlog").getPath, "_manifest.v", ".json")
+    val log = Scratch.VersionLog(tmpDir("vlog").getPath)
     def bytesOf(v: Int) = java.nio.file.Files.readString(log.file(v).toPath)
     java.nio.file.Files.writeString(log.file(1).toPath, "first")
     java.nio.file.Files.writeString(log.file(2).toPath, "winner")
     // a killed writer's temp file and a foreign name are not versions
     java.nio.file.Files.writeString(new java.io.File(log.dir, ".commit3-x.tmp").toPath, "")
-    java.nio.file.Files.writeString(new java.io.File(log.dir, "_manifest.v.json").toPath, "")
+    java.nio.file.Files.writeString(new java.io.File(log.dir, ".json").toPath, "")
+    java.nio.file.Files.writeString(new java.io.File(log.dir, "3").toPath, "")
     assert(Scratch.versions(log) == Seq(1, 2))
     // the caller still believes version 1 is current
     intercept[Scratch.CommitConflictException] { Scratch.casCommit(log, 1, "stale") }

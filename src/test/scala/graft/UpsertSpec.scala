@@ -2,63 +2,58 @@ package graft
 
 import org.apache.spark.sql.functions.{lit, month, round, year}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.etl.EtlQueries
+import graft.lake.Log
 
 /** One CDC row in the orders-lake schema (for the MemoryStream source). */
 case class CdcRow(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
     o_totalprice: Double, o_orderdate: java.time.LocalDateTime,
     o_orderpriority: String, o_year: Int, o_month: Int)
 
-/** The partition-scoping claim of q132's MERGE path is physical: a CDC
-  * batch touching (1997, 1–2) must leave every other partition's files
-  * byte-for-byte untouched — not just value-equal. The oracle pins the
-  * merged values; this spec pins the IO scope.
+/** The lake tables commit through [[graft.lake.Log]]. The oracle pins the
+  * merged values; this spec pins what the log promises: an upsert or
+  * delete writes only the partitions it touches, the next version
+  * references every other file unchanged, older versions stay readable
+  * until vacuumed, a writer that dies before its commit changes nothing a
+  * reader sees, and concurrent writers lose no update.
   */
 class UpsertSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def md5(f: java.io.File): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Files.readAllBytes(f.toPath))
-      .map(b => f"$b%02x").mkString
-
-  /** relative-path → content-md5 of every data file under the lake root */
-  private def snapshot(root: java.io.File): Map[String, String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else Seq(f)
-    walk(root)
-      .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-      .map(f => root.toPath.relativize(f.toPath).toString -> md5(f))
-      .toMap
+  /** A fresh table path: nothing left from an earlier run. */
+  private def fresh(path: String): String = {
+    Scratch.deleteRecursively(new java.io.File(path))
+    path
   }
+
+  private def inWindow(e: Log.FileEntry): Boolean =
+    e.partition("o_year") == "1997" && e.partition("o_month").toInt <= 2
 
   test("q132 upsert rewrites only the touched partitions; untouched files are byte-identical") {
     import spark.implicits._
-    val out = EtlQueries.upsertLakePath(sf)
-    EtlQueries.writeUpsertBase(spark, sf, out)
-    val root = new java.io.File(out)
-    val before = snapshot(root)
-    assert(before.nonEmpty)
-
-    EtlQueries.applyUpsert(spark, out, EtlQueries.upsertCdc(spark, sf),
-      $"o_year" === 1997 && $"o_month" <= 2)
-    val after = snapshot(root)
-
-    def touched(p: String) =
-      p.startsWith("o_year=1997/o_month=1/") || p.startsWith("o_year=1997/o_month=2/")
-    // untouched partitions: same file set, same bytes
-    assert(before.filterNot(kv => touched(kv._1)) == after.filterNot(kv => touched(kv._1)),
-      "untouched partition files must be byte-identical across the upsert")
-    // touched partitions really were rewritten (new file names under overwrite)
-    assert(before.keys.exists(touched) && after.keys.exists(touched))
-    assert(before.view.filterKeys(touched).toMap != after.view.filterKeys(touched).toMap,
-      "touched partitions must change")
+    val out = fresh(EtlQueries.upsertLakePath(sf) + "_spec")
+    val v1 = EtlQueries.writeUpsertBase(spark, sf, out)
+    val v2 = EtlQueries.applyUpsert(spark, out, EtlQueries.upsertCdc(spark, sf),
+      EtlQueries.upsertWindow)
+    assert((v1, v2) == ((1, 2)))
+    val (before, after) = (Log.snapshot(out, v1), Log.snapshot(out, v2))
+    // the next version references every untouched file unchanged: same
+    // path, length and mtime, so the same bytes
+    assert(before.files.filterNot(inWindow).toSet == after.files.filterNot(inWindow).toSet,
+      "untouched partition files must be referenced unchanged by the next version")
+    // the touched partitions are new files, and the old ones still exist
+    // for v1's readers
+    val (oldT, newT) = (before.files.filter(inWindow), after.files.filter(inWindow))
+    assert(oldT.nonEmpty && newT.nonEmpty)
+    assert(oldT.map(_.path).toSet.intersect(newT.map(_.path).toSet).isEmpty,
+      "touched partitions must be written as new files")
+    assert(oldT.forall(e => new java.io.File(out, e.path).exists()))
 
     // merged content: every update key flipped to U, inserts present,
     // row count = base + inserts (updates replace, never duplicate)
-    val cur = spark.read.parquet(out).cache()
+    val cur = Log.read(spark, out, after).cache()
     try {
       val window = Tables.orders(spark, sf)
         .filter(year($"o_orderdate") === 1997 && month($"o_orderdate") <= 2)
@@ -70,52 +65,63 @@ class UpsertSpec extends AnyFunSuite {
       assert(cur.filter($"o_orderstatus" === "I").count() == expI)
       assert(cur.count() == baseN + expI)
     } finally cur.unpersist()
+    // snapshot isolation: v1 is still the base
+    assert(Log.read(spark, out, before).filter($"o_orderstatus".isin("U", "I")).count() == 0)
   }
 
   test("q154 delete rewrites only the 1996 partitions; untouched files byte-identical; rows gone") {
     import spark.implicits._
-    val out = EtlQueries.deleteLakePath(sf)
-    // fresh base so the byte-identity baseline is the pre-delete lake
-    // (a prior q154 run leaves the marker + an already-deleted lake)
-    EtlQueries.writeUpsertBase(spark, sf, out)
-    new java.io.File(s"$out/_base_complete").createNewFile()
-    val root = new java.io.File(out)
-    val before = snapshot(root)
-    val baseN = spark.read.parquet(out).count()
+    val out = fresh(EtlQueries.deleteLakePath(sf) + "_spec")
+    val v1 = EtlQueries.writeUpsertBase(spark, sf, out)
+    val before = Log.snapshot(out, v1)
+    val baseN = Log.read(spark, out, before).count()
     val expDeleted = Tables.orders(spark, sf)
       .filter(year($"o_orderdate") === 1996 && $"o_custkey" % 10 === 3).count()
     assert(expDeleted > 0, "fixture must delete something")
 
-    EtlQueries.applyDelete(spark, out, $"o_year" === 1996, $"o_custkey" % 10 === 3)
-    val after = snapshot(root)
-    def touched(p: String) = p.startsWith("o_year=1996/")
-    assert(before.filterNot(kv => touched(kv._1)) == after.filterNot(kv => touched(kv._1)),
-      "untouched partition files must be byte-identical across the delete")
-    assert(before.keys.exists(touched) && after.keys.exists(touched))
-    assert(before.view.filterKeys(touched).toMap != after.view.filterKeys(touched).toMap)
+    val after = Log.snapshot(out,
+      EtlQueries.applyDelete(spark, out, $"o_year" === 1996, $"o_custkey" % 10 === 3))
+    def touched(e: Log.FileEntry) = e.partition("o_year") == "1996"
+    assert(before.files.filterNot(touched).toSet == after.files.filterNot(touched).toSet,
+      "untouched partition files must be referenced unchanged by the next version")
+    assert(before.files.exists(touched) && after.files.exists(touched))
+    assert(before.files.filter(touched).toSet.intersect(after.files.filter(touched).toSet).isEmpty)
 
-    val cur = spark.read.parquet(out)
+    val cur = Log.read(spark, out, after)
     assert(cur.filter($"o_year" === 1996 && $"o_custkey" % 10 === 3).count() == 0)
     assert(cur.count() == baseN - expDeleted)
-    // a delete that would fully empty a touched partition fails loudly
-    intercept[IllegalArgumentException] {
-      EtlQueries.applyDelete(spark, out, $"o_year" === 1996, lit(true))
-    }
+  }
+
+  test("delete of a whole partition: it is absent from the next version and still read at the previous one") {
+    import spark.implicits._
+    val out = fresh(EtlQueries.deleteLakePath(sf) + "_whole")
+    val v = EtlQueries.writeUpsertBase(spark, sf, out)
+    val march = $"o_year" === 1996 && $"o_month" === 3
+    val n = Log.read(spark, out, Log.snapshot(out, v)).filter(march).count()
+    assert(n > 0)
+    val next = Log.snapshot(out, EtlQueries.applyDelete(spark, out, march, lit(true)))
+    assert(next.version == v + 1)
+    assert(!next.files.exists(e => e.partition("o_year") == "1996" && e.partition("o_month") == "3"),
+      "an emptied partition must have no files in the new version")
+    assert(Log.read(spark, out, next).filter(march).count() == 0)
+    assert(Log.read(spark, out, next).count() ==
+      Log.read(spark, out, Log.snapshot(out, v)).count() - n)
+    assert(Log.read(spark, out, Log.snapshot(out, v)).filter(march).count() == n)
   }
 
   test("q135 versioned lake: copy-on-write reuse, and v1 stays intact after the v2 commit") {
     import spark.implicits._
     val out = EtlQueries.versionedLakePath(sf)
     EtlQueries.commitVersions(spark, sf, out)
-    val m1 = EtlQueries.readManifest(s"$out/manifests/1").toSet
-    val m2 = EtlQueries.readManifest(s"$out/manifests/2").toSet
+    assert(Log.versions(out) == Seq(1, 2))
+    val m1 = Log.snapshot(out, 1).files.toSet
+    val m2 = Log.snapshot(out, 2).files.toSet
     // copy-on-write: untouched data files are shared BY REFERENCE between
     // versions; each version additionally owns its touched slice
     val shared = m1.intersect(m2)
-    assert(shared.nonEmpty && shared.forall(_.contains("/data/v1u/")))
-    assert((m1 -- m2).forall(_.contains("/data/v1t/")))
-    assert((m2 -- m1).forall(_.contains("/data/v2t/")))
-    assert((m1 -- m2).nonEmpty && (m2 -- m1).nonEmpty)
+    assert(shared.nonEmpty && shared.forall(!inWindow(_)))
+    assert((m1 -- m2).nonEmpty && (m1 -- m2).forall(inWindow))
+    assert((m2 -- m1).nonEmpty && (m2 -- m1).forall(inWindow))
     // snapshot isolation: reading v1 AFTER the v2 commit still yields the
     // base state — no U/I images, full original row count
     val v1 = EtlQueries.readVersion(spark, out, 1)
@@ -131,17 +137,72 @@ class UpsertSpec extends AnyFunSuite {
       window.filter($"o_orderkey" % 100 === 0).count())
   }
 
+  test("a writer that throws between its data write and its commit changes no version, and its files are never read") {
+    import spark.implicits._
+    val out = fresh(EtlQueries.upsertLakePath(sf) + "_killed")
+    val v = EtlQueries.writeUpsertBase(spark, sf, out)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select($"o_orderkey", $"o_orderstatus", $"o_totalprice").collect().map(_.toString).sorted.toSeq
+    val before = rows(Log.read(spark, out, Log.snapshot(out)))
+    var orphans = Seq.empty[Log.FileEntry]
+    val e = intercept[IllegalStateException] {
+      Log.commit(out) { cur =>
+        orphans = Log.write(EtlQueries.upsertCdc(spark, sf), out, EtlQueries.LakePartitions)
+        throw new IllegalStateException("writer killed before its commit")
+      }
+    }
+    assert(e.getMessage.contains("killed"))
+    assert(orphans.nonEmpty && orphans.forall(o => new java.io.File(out, o.path).exists()),
+      "the killed writer's data files are on disk")
+    assert(Log.current(out) == v, "no version was committed")
+    val cur = Log.read(spark, out, Log.snapshot(out))
+    val orphanPaths = orphans.map(o => new java.io.File(out, o.path).toURI.getPath).toSet
+    assert(!cur.inputFiles.exists(f => orphanPaths(new java.net.URI(f).getPath)),
+      "a reader must never see uncommitted files")
+    assert(rows(cur) == before)
+  }
+
+  test("building a version's DataFrame over the 80-file upsert lake starts no Spark job") {
+    import spark.implicits._
+    val out = fresh(EtlQueries.upsertLakePath(sf) + "_jobs")
+    EtlQueries.writeUpsertBase(spark, sf, out)
+    val snap = Log.snapshot(out)
+    // more than Spark's 32-path threshold, past which listing runs a job
+    assert(snap.files.size > 32, s"${snap.files.size} files")
+    val jobs = SparkTestSession.jobsStartedBy {
+      Log.read(spark, out, Log.snapshot(out)).filter($"o_year" === 1997)
+      Log.filesWhere(spark, snap, EtlQueries.upsertWindow)
+    }
+    assert(jobs == 0, s"$jobs jobs")
+    assert(Log.filesWhere(spark, snap, EtlQueries.upsertWindow).map(_.partition).toSet ==
+      Set(Map("o_year" -> "1997", "o_month" -> "1"), Map("o_year" -> "1997", "o_month" -> "2")))
+  }
+
+  test("20 q132 executions leave as many data and log files as 2 do") {
+    val out = fresh(EtlQueries.upsertLakePath(sf))
+    def files(sub: String): Int = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out, sub))
+      try walk.iterator().asScala.count(java.nio.file.Files.isRegularFile(_)) finally walk.close()
+    }
+    val first = (1 to 2).map(_ => EtlQueries.q132PartitionUpsert(spark, sf).collect().toSeq).last
+    val after2 = (files("data"), files("_log"))
+    val last = (3 to 20).map(_ => EtlQueries.q132PartitionUpsert(spark, sf).collect().toSeq).last
+    assert(Log.current(out) == 21 && Log.versions(out) == Seq(21))
+    assert((files("data"), files("_log")) == after2, s"after 2: $after2")
+    assert(after2._2 == 1)
+    assert(last == first, "re-applying the batch must converge to the same state")
+  }
+
   test("streaming CDC sink: two micro-batches of foreachBatch upserts == one batch merge") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     // reference: the one-shot batch merge
-    val ref = EtlQueries.upsertLakePath(sf) + "_ref"
+    val ref = fresh(EtlQueries.upsertLakePath(sf) + "_ref")
     EtlQueries.writeUpsertBase(spark, sf, ref)
-    EtlQueries.applyUpsert(spark, ref, EtlQueries.upsertCdc(spark, sf),
-      $"o_year" === 1997 && $"o_month" <= 2)
+    EtlQueries.applyUpsert(spark, ref, EtlQueries.upsertCdc(spark, sf), EtlQueries.upsertWindow)
     // streamed: the same CDC rows split across two micro-batches with
     // OVERLAPPING partitions (batch 2 must preserve batch 1's changes)
-    val streamed = EtlQueries.upsertLakePath(sf) + "_stream"
+    val streamed = fresh(EtlQueries.upsertLakePath(sf) + "_stream")
     EtlQueries.writeUpsertBase(spark, sf, streamed)
     val cdc = EtlQueries.upsertCdc(spark, sf).as[CdcRow].collect().toSeq
     val (b1, b2) = cdc.partition(_.o_orderkey % 20 == 0)
@@ -155,7 +216,7 @@ class UpsertSpec extends AnyFunSuite {
       source.addData(b2); q.processAllAvailable()
     } finally q.stop()
     def state(p: String): Seq[String] =
-      spark.read.parquet(p)
+      Log.read(spark, p, Log.snapshot(p))
         .select($"o_orderkey", $"o_orderstatus", round($"o_totalprice", 2))
         .collect().map(_.toString).sorted.toSeq
     assert(state(streamed) == state(ref), "streamed merge must equal the batch merge")
@@ -169,7 +230,7 @@ class UpsertSpec extends AnyFunSuite {
     // The sink's correctness claim (StreamingOps.cdcUpsertSink scaladoc)
     // is that re-applying converges — latest-wins makes the merge
     // idempotent, so the replayed run must reproduce the state exactly.
-    val path = EtlQueries.upsertLakePath(sf) + "_replay"
+    val path = fresh(EtlQueries.upsertLakePath(sf) + "_replay")
     EtlQueries.writeUpsertBase(spark, sf, path)
     val cdc = EtlQueries.upsertCdc(spark, sf).as[CdcRow].collect().toSeq
     def deliver(): Unit = {
@@ -179,7 +240,7 @@ class UpsertSpec extends AnyFunSuite {
       try { source.addData(cdc); q.processAllAvailable() } finally q.stop()
     }
     def state(): Seq[String] =
-      spark.read.parquet(path)
+      Log.read(spark, path, Log.snapshot(path))
         .select($"o_orderkey", $"o_orderstatus", round($"o_totalprice", 2))
         .collect().map(_.toString).sorted.toSeq
     deliver()
@@ -232,100 +293,59 @@ class UpsertSpec extends AnyFunSuite {
 
   test("optimistic concurrency: a losing writer detects the conflict, rebases, and no update is lost") {
     import spark.implicits._
-    def clean(root: String): Unit = {
-      val d = new java.io.File(root)
-      if (d.exists()) {
-        java.nio.file.Files.walk(d.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => p.toFile.delete())
-      }
-    }
-    // manifests 3/4 from a previous run of THIS test would survive in
-    // scratch and shift currentVersion — start from a clean lake
     val out = EtlQueries.versionedLakePath(sf) + "_occ"
-    clean(out)
     EtlQueries.commitVersions(spark, sf, out) // v1 (base) + v2 (merged) exist
-    assert(Scratch.currentVersion(EtlQueries.manifestLog(out)) == 2)
+    assert(Log.current(out) == 2)
     // two writers' APPENDS: immutable data files written up front — only
-    // the manifest publish is contended
-    Seq((900000001L, "A")).toDF("o_orderkey", "o_orderstatus")
-      .write.mode("overwrite").parquet(s"$out/data/occA")
-    Seq((900000002L, "B"), (900000003L, "B")).toDF("o_orderkey", "o_orderstatus")
-      .write.mode("overwrite").parquet(s"$out/data/occB")
-    val filesA = EtlQueries.dataFiles(s"$out/data/occA")
-    val filesB = EtlQueries.dataFiles(s"$out/data/occB")
+    // the version publish is contended
+    val filesA = Log.write(Seq((900000001L, "A", 1999, 1))
+      .toDF("o_orderkey", "o_orderstatus", "o_year", "o_month"), out, EtlQueries.LakePartitions)
+    val filesB = Log.write(Seq((900000002L, "B", 1999, 1), (900000003L, "B", 1999, 1))
+      .toDF("o_orderkey", "o_orderstatus", "o_year", "o_month"), out, EtlQueries.LakePartitions)
     assert(filesA.nonEmpty && filesB.nonEmpty)
-
-    // a stale CAS from an old snapshot must fail, not clobber: writer A
-    // already advanced 2 → 3, so B's publish of 3 conflicts
-    val v3 = Scratch.casCommit(EtlQueries.manifestLog(out), 2,
-      (EtlQueries.readManifest(s"$out/manifests/2") ++ filesA).mkString("\n"))
-    assert(v3 == 3)
-    intercept[Scratch.CommitConflictException] {
-      Scratch.casCommit(EtlQueries.manifestLog(out), 2,
-        (EtlQueries.readManifest(s"$out/manifests/2") ++ filesB).mkString("\n"))
-    }
-    // manifest 3 is exactly A's commit — B's failed CAS left no trace
-    assert(EtlQueries.readManifest(s"$out/manifests/3").toSet ==
-      (EtlQueries.readManifest(s"$out/manifests/2") ++ filesA).toSet)
-
-    // the retry loop: B prepares from v2, loses the race to a writer that
-    // commits mid-flight, rebases onto the winner's snapshot, commits v+1
-    val occOut = EtlQueries.versionedLakePath(sf) + "_occ2"
-    clean(occOut)
-    EtlQueries.commitVersions(spark, sf, occOut)
+    // B prepares from v2 and loses the race to A, which commits between
+    // B's prepare and its publish; B rebases onto A's version
     var interleaved = false
     val prepared = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val vB = Scratch.commitWithRetry(EtlQueries.manifestLog(occOut)) { base =>
-      prepared += base
-      val mine = EtlQueries.readManifest(s"$occOut/manifests/$base") ++ filesB
-      if (!interleaved) { // writer A sneaks in between B's prepare and CAS
+    val vB = Log.commit(out) { cur =>
+      prepared += cur.version
+      if (!interleaved) {
         interleaved = true
-        Scratch.casCommit(EtlQueries.manifestLog(occOut), base,
-          (EtlQueries.readManifest(s"$occOut/manifests/$base") ++ filesA).mkString("\n"))
+        assert(Log.commit(out)(a => a.copy(files = a.files ++ filesA)) == 3)
       }
-      mine.mkString("\n")
+      cur.copy(files = cur.files ++ filesB)
     }
     assert(prepared.toSeq == Seq(2, 3), s"expected a rebase, prepared from $prepared")
     assert(vB == 4)
-    val m4 = EtlQueries.readManifest(s"$occOut/manifests/4").toSet
-    assert(filesA.toSet.subsetOf(m4) && filesB.toSet.subsetOf(m4),
-      "the final snapshot must contain BOTH writers' updates")
-    // and the committed snapshot is readable with both appends present
-    val v4 = EtlQueries.readVersion(spark, occOut, 4)
-    assert(v4.filter($"o_orderkey" >= 900000001L).count() == 3)
+    // version 3 is exactly A's commit — B's lost attempt left no trace
+    assert(Log.snapshot(out, 3).files == Log.snapshot(out, 2).files ++ filesA)
+    val v4 = Log.snapshot(out, 4).files.toSet
+    assert(filesA.toSet.subsetOf(v4) && filesB.toSet.subsetOf(v4),
+      "the final version must contain BOTH writers' updates")
+    // and the committed version is readable with both appends present
+    assert(EtlQueries.readVersion(spark, out, 4).filter($"o_orderkey" >= 900000001L).count() == 3)
   }
 
   test("optimistic concurrency under real contention: 8 threads all commit, none lost") {
     import scala.concurrent._
     import scala.concurrent.duration._
-    val out = EtlQueries.versionedLakePath(sf) + "_occ_mt"
-    val d = new java.io.File(out)
-    if (d.exists()) {
-      java.nio.file.Files.walk(d.toPath)
-        .sorted(java.util.Comparator.reverseOrder()).forEach(p => p.toFile.delete())
-    }
+    val out = fresh(EtlQueries.versionedLakePath(sf) + "_occ_mt")
     // 8 writers race from an empty table; each append is one fake file
-    // path (the CAS contends on the manifest, not the data). Every writer
-    // must eventually land on its own version with every predecessor's
-    // delta carried forward.
+    // entry (the CAS contends on the version file, not the data). Every
+    // writer must eventually land on its own version with every
+    // predecessor's entry carried forward.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val futures = (1 to 8).map { i =>
         Future {
-          Scratch.commitWithRetry(EtlQueries.manifestLog(out), maxAttempts = 100) { base =>
-            val prev = if (base == 0) Seq.empty
-              else EtlQueries.readManifest(s"$out/manifests/$base")
-            (prev :+ s"/delta/file_$i").mkString("\n")
-          }
+          Log.commit(out)(cur => cur.copy(files = cur.files :+ Log.FileEntry(s"delta/file_$i", i, 0L)))
         }
       }
       val versions = Await.result(Future.sequence(futures), 60.seconds)
       assert(versions.sorted == (1 to 8), s"got versions $versions")
-      val last = EtlQueries.readManifest(s"$out/manifests/8")
-      assert((1 to 8).forall(i => last.contains(s"/delta/file_$i")),
-        s"lost an update: $last")
+      val last = Log.snapshot(out, 8).files.map(_.path)
+      assert((1 to 8).forall(i => last.contains(s"delta/file_$i")), s"lost an update: $last")
       assert(last.size == 8)
     } finally pool.shutdown()
   }
@@ -336,13 +356,15 @@ class UpsertSpec extends AnyFunSuite {
     // a writer killed inside a version commit leaves its temp file behind;
     // vacuum must not take it for a version
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$out/manifests/.commit3-killed.tmp"), "")
+      java.nio.file.Paths.get(s"$out/_log/.commit3-killed.tmp"), "")
+    val v1Only = Log.snapshot(out, 1).files.toSet -- Log.snapshot(out, 2).files
     val v2Before = EtlQueries.readVersion(spark, out, 2).count()
-    val dead = EtlQueries.vacuum(out, keepFrom = 2)
+    val dead = Log.vacuum(out, keepFrom = 2)
     // exactly v1's exclusive files die: the touched slice superseded by v2
-    assert(dead.nonEmpty && dead.forall(_.contains("/data/v1t/")), dead.take(3).toString)
+    assert(dead.nonEmpty && dead.toSet == v1Only.map(e => new java.io.File(out, e.path).getAbsolutePath))
     assert(dead.forall(f => !new java.io.File(f).exists()))
     // v2 untouched and still readable; v1 is gone past the horizon
+    assert(Log.versions(out) == Seq(2))
     assert(EtlQueries.readVersion(spark, out, 2).count() == v2Before)
     intercept[Exception] {
       EtlQueries.readVersion(spark, out, 1).count()
